@@ -96,11 +96,13 @@ def sort_once(df, *cols):
       - "orderby": plain orderBy — no storage at all, at the cost of
         re-executing the decode under the range sampler (the very
         double execution this helper exists to remove).
-    Blocks from either storing mode are dropped when the DataFrame
-    is garbage-collected (ContextCleaner), the same lifecycle every
-    bench rep and the long-session REPL rely on; callers that hold
-    many sorted frames alive simultaneously should prefer "persist"
-    and unpersist explicitly.
+    The two storing modes release their blocks differently.
+    "checkpoint" blocks belong to the checkpointed RDD, which the
+    ContextCleaner unpersists once the JVM garbage-collects it.
+    "persist" registers the plan with the session's CacheManager,
+    which holds it until an explicit ``unpersist()`` (or
+    ``spark.catalog.clearCache()``); garbage collection never drops
+    it, so a caller in that mode must unpersist the returned frame.
 
     The eager=False fusion relies on RangePartitioner's sampling job
     materializing the lazily-checkpointed partitions as a side

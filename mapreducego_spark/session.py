@@ -19,6 +19,10 @@ from pyspark.sql import SparkSession
 # runtime anyway (shuffle.partitions is only the pre-AQE ceiling).
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The directory holding this package: Python workers import the engine
+# (its daemon module and every UDF) from here, whatever their cwd.
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "mapreducego-spark",
@@ -31,6 +35,20 @@ def get_spark(
     Scale posture (100 TB): every knob here is either adaptive (AQE)
     or a per-job override; nothing hardcodes local-mode assumptions
     into query code.
+
+    Python workers fork from ``mapreducego_spark.pyworker``, found
+    through ``spark.executorEnv.PYTHONPATH`` (``ENGINE_ROOT``), not from
+    ``pyspark.daemon``. PySpark calls ``importlib.invalidate_caches()``
+    before every task; on CPython 3.10-3.12 that re-reads the central
+    directory of every zip on the worker's path, once per importer
+    (https://github.com/python/cpython/blob/v3.11.7/Lib/zipimport.py#L329;
+    3.13 defers the re-read to the next lookup,
+    https://github.com/python/cpython/blob/v3.13.0/Lib/zipimport.py#L276),
+    0.1-0.2 CPU-s a task. The daemon's zip importers skip it. That is
+    safe: the archives on a worker's path never change while it lives,
+    Spark refuses to re-add a file of the same name with new content,
+    and a zip shipped later with ``addPyFile`` gets a new importer on
+    its new path.
     """
     cpus = DEFAULT_CPUS
     # In local mode the driver JVM hosts every executor thread, so the
@@ -70,6 +88,10 @@ def get_spark(
         # processing (measured ~25% slower on simhash at sf0.1).
         .config("spark.sql.codegen.maxFields", "256")
         .config("spark.ui.enabled", "false")
+        # Python workers fork from the engine's daemon, whose zip
+        # importers skip the per-task archive re-read (see docstring).
+        .config("spark.python.daemon.module", "mapreducego_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
         # Warehouse for bucketed saveAsTable demos/tests; a cluster
         # deploy points this at its metastore-backed location.
         .config(

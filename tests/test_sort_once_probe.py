@@ -29,13 +29,14 @@ def _counted_source(spark, acc, n_parts: int = 4, rows_per: int = 50):
 
 def test_plain_orderby_double_executes(spark):
     """Control: a global orderBy above a shuffle-free Python map DOES
-    run the map twice (sampling pass + real pass). If this ever
+    run the map more than once per partition (sampling pass + real
+    pass; the sampler may skip a partition). If this ever
     starts failing, Spark fixed the double execution upstream and
     sort_once's checkpoint is pure overhead — re-measure it."""
     acc = spark.sparkContext.accumulator(0)
     df = _counted_source(spark, acc)
     df.orderBy("id").write.format("noop").mode("overwrite").save()
-    assert acc.value == 8, f"expected 2x4 invocations, saw {acc.value}"
+    assert acc.value > 4, f"expected more than 1x4 invocations, saw {acc.value}"
 
 
 def test_sort_once_single_execution(spark):

@@ -17,19 +17,20 @@ verification is inspectable as an artifact.
 from __future__ import annotations
 
 import math
+import os
 import sys
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The checkout this file lives in, so the engine imported here is the
+# one beside it, not whichever tree happens to sit at a fixed path.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Overridable so correctness (not just wall clock) can be spot-checked
 # at other scales — e.g. SPARK_GRAFT_VERIFY_SF=/tmp/spark_graft_sf1
 # runs the same oracle compare on the 10x amplified dataset. The
 # VERIFY_LOCAL.json artifact is only written for default-dir full runs.
-import os
-
 SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
