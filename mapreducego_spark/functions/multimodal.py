@@ -24,6 +24,7 @@ import os
 import struct
 import zlib
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -38,7 +39,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mapreducego_spark.operators.util import sort_once
+from mapreducego_spark.operators.util import (
+    sort_once,
+    stage_items,
+    staged_dir,
+)
 
 # Import-time probe: the real decoder activates automatically when an
 # image library is present; everywhere else the deterministic stub
@@ -116,6 +121,141 @@ def media_from_binary_files(files: DataFrame) -> DataFrame:
         ).alias("mime"),
         F.col("length").cast("long").alias("n_bytes"),
     )
+
+
+def _media_df(
+    spark: SparkSession, path: str, ext: str, prefix: str = "media"
+) -> DataFrame:
+    """The one scan of staged media: every ``{prefix}_{id}.{ext}``
+    file under ``path`` as a (media_id, payload) row."""
+    # dir load + pathGlobFilter, never a glob-in-path: the glob form
+    # forces a driver-side expansion listing measured ~20x slower on
+    # large staged dirs (NOTES_r14, commit 900a1b4)
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"{prefix}_*.{ext}")
+        .load(path)
+        .select(
+            F.regexp_extract(F.col("path"), rf"{prefix}_(\d+)\.{ext}", 1)
+            .cast("long")
+            .alias("media_id"),
+            F.col("content").alias("payload"),
+        )
+    )
+
+
+def _ddl_names(schema: str) -> list[str]:
+    """Top-level column names of a DDL schema string."""
+    names, depth, start = [], 0, 0
+    for k, ch in enumerate(schema + ","):
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            names.append(schema[start:k].split()[0])
+            start = k + 1
+    return names
+
+
+def _item_rows(
+    media: DataFrame, fn, schema: str, fan_out: bool = False
+) -> DataFrame:
+    """The per-item Arrow wrapper of the media tier: one mapInPandas
+    pass over (media_id, payload) that calls ``fn(media_id, payload)``
+    once per file. ``fn`` returns one row tuple in ``schema``'s column
+    order or, with ``fan_out``, an iterable of such rows (frames,
+    windows, tag frames). Payloads cross into Python once per Arrow
+    batch and never row at a time."""
+    cols = _ddl_names(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            items = zip(batch["media_id"], batch["payload"])
+            if fan_out:
+                rows = [r for mid, p in items for r in fn(int(mid), bytes(p))]
+            else:
+                rows = [fn(int(mid), bytes(p)) for mid, p in items]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return media.mapInPandas(run, schema)
+
+
+def _decode_each(media: DataFrame, fn, schema: str) -> DataFrame:
+    """One ``fn`` row per staged file, presented in media_id order:
+    the whole Spark side of a single-row media entry."""
+    return sort_once(_item_rows(media, fn, schema), "media_id")
+
+
+def _fields_each(media: DataFrame, parse, schema: str) -> DataFrame:
+    """``_decode_each`` for a parser returning a dict whose keys are
+    the schema's column names after media_id."""
+    keys = _ddl_names(schema)[1:]
+
+    def row(mid: int, payload: bytes) -> tuple:
+        m = parse(payload)
+        return (mid, *(m[k] for k in keys))
+
+    return _decode_each(media, row, schema)
+
+
+_RASTER_SCHEMA = (
+    "media_id long, width int, height int, px_sum long, feature_hash string"
+)
+
+
+def _gates(px) -> tuple[int, str]:
+    """The raster gates of the image tier over pixel bytes (or an
+    integer array): their integer sum and md5 of their hex string.
+    Both are oracle-rebuildable in BIGINT + VARCHAR (DuckDB has no md5
+    over BLOB)."""
+    if isinstance(px, (bytes, bytearray)):
+        px = np.frombuffer(px, np.uint8)
+    return (
+        int(px.sum(dtype=np.int64)),
+        hashlib.md5(px.tobytes().hex().encode()).hexdigest(),
+    )
+
+
+def _raster_row(mid: int, w: int, h: int, rgb) -> tuple:
+    """A ``_RASTER_SCHEMA`` row."""
+    return (mid, w, h, *_gates(rgb))
+
+
+def _rgba_row(mid: int, w: int, h: int, rgb: bytes, alpha: bytes) -> tuple:
+    """(media_id, width, height, px_sum, a_sum, feature_hash): the
+    color and alpha planes summed apart, the hash over interleaved
+    RGBA."""
+    px = np.frombuffer(rgb, np.uint8).reshape(-1, 3)
+    a = np.frombuffer(alpha, np.uint8).reshape(-1, 1)
+    return (
+        mid, w, h, int(px.sum(dtype=np.int64)), int(a.sum(dtype=np.int64)),
+        _gates(np.hstack([px, a]))[1],
+    )
+
+
+def _sample_gates(a: np.ndarray) -> tuple[int, int, int, int]:
+    """The audio tier's every-sample integer gates over an int64
+    (frames, channels) matrix: sum, min, max, and the position-weighted
+    sum (weight = frame*channels + channel + 1) that breaks on any
+    interleave, channel-mapping or single-amplitude error."""
+    w = np.arange(a.size, dtype=np.int64).reshape(a.shape) + 1
+    return int(a.sum()), int(a.min()), int(a.max()), int((w * a).sum())
+
+
+def _grid(fn, w: int, h: int) -> np.ndarray:
+    """uint8 array indexed [y][x] of ``fn(x, y)`` (a sample or a
+    channel tuple): the fixture rasters handed to the encoders."""
+    return np.array(
+        [[fn(x, y) for x in range(w)] for y in range(h)], dtype=np.uint8
+    )
+
+
+def _block_planes(spec: dict, w: int, h: int) -> list[bytes]:
+    """Raster planes of a per-8x8-block closed form: Y alone for gray
+    fixtures, else Y, Cb, Cr, each ``spec[k](bx, by)``."""
+    keys = ("y",) if spec["gray"] else ("y", "cb", "cr")
+    return [
+        bytes(spec[k](x // 8, y // 8) for y in range(h) for x in range(w))
+        for k in keys
+    ]
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -410,6 +550,23 @@ def _png_unfilter(raw: bytes, pos: int, width: int, height: int,
     return out, pos
 
 
+def _png_scan_bytes(
+    width: int, height: int, bits: int, interlace: int
+) -> int:
+    """Inflated IDAT length an IHDR implies at ``bits`` per pixel: per
+    scanline (of each non-empty Adam7 pass when interlaced) one filter
+    byte plus the packed row."""
+    if interlace == 0:
+        return height * ((width * bits + 7) // 8 + 1)
+    total = 0
+    for x0, y0, dx, dy in _ADAM7:
+        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
+        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
+        if pw and ph:
+            total += ph * ((pw * bits + 7) // 8 + 1)
+    return total
+
+
 def decode_png(payload: bytes) -> tuple[int, int, bytes]:
     """Spec-correct PNG decoder (pure stdlib, PNG spec RFC 2083 /
     W3C §8-§13), RGB presentation: chunk walk, zlib inflate of the
@@ -435,7 +592,12 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
     channel (types 4/6), from the tRNS chunk's per-palette-index
     table (type 3 — entries beyond the table are opaque 255, per
     spec), or is constant 255. 16-bit alpha presents its high byte
-    like every other sample."""
+    like every other sample.
+
+    Refusal contract: corrupt or inconsistent bytes raise ValueError,
+    valid but unsupported encodings NotImplementedError. Nothing is
+    allocated from IHDR fields until the inflated image data has
+    exactly the length those fields imply."""
     if payload[:8] != PNG_MAGIC:
         raise ValueError("not a PNG payload")
     pos, width, height, color_type = 8, None, None, None
@@ -450,6 +612,8 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
         data = payload[pos + 8 : pos + 8 + length]
         pos += 12 + length  # length + tag + data + crc
         if tag == b"IHDR":
+            if len(data) != 13:
+                raise ValueError("PNG IHDR chunk must be 13 bytes")
             width, height, depth, color_type, comp, filt, interlace = (
                 struct.unpack(">IIBBBBB", data)
             )
@@ -492,7 +656,17 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
     if trns is not None and color_type in (4, 6):
         raise ValueError("tRNS is invalid for alpha-channel color types")
     channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    raw = zlib.decompress(bytes(idat))
+    expected = _png_scan_bytes(width, height, depth * channels, interlace)
+    # deflate expands at most 1032:1, so larger claims are corrupt
+    if expected > 1032 * len(idat):
+        raise ValueError("PNG scanline data has the wrong length")
+    inflate = zlib.decompressobj()
+    try:
+        raw = inflate.decompress(bytes(idat), expected + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG image data: {e}") from None
+    if len(raw) != expected or not inflate.eof:
+        raise ValueError("PNG scanline data has the wrong length")
     if depth < 8:
         # sub-8 (r14): the filter unit is ONE BYTE at these depths
         # (§9.2 — bpp = 1), so _png_unfilter runs on the packed row
@@ -501,9 +675,7 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
         # palette indices pass through to the PLTE lookup unscaled.
         if interlace == 0:
             row_bytes = (width * depth + 7) // 8
-            packed, end = _png_unfilter(raw, 0, row_bytes, height, 1, 1)
-            if end != len(raw):
-                raise ValueError("PNG scanline data has the wrong length")
+            packed, _ = _png_unfilter(raw, 0, row_bytes, height, 1, 1)
             out = bytearray(width * height)
             for y in range(height):
                 out[y * width : (y + 1) * width] = _unpack_sub8(
@@ -527,8 +699,6 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
                     y = y0 + py * dy
                     for px in range(pw):
                         out[y * width + x0 + px * dx] = rowsamp[px]
-            if rpos != len(raw):
-                raise ValueError("PNG scanline data has the wrong length")
         if color_type == 0:
             scale = 255 // ((1 << depth) - 1)
             out = bytes(s * scale for s in out)
@@ -536,9 +706,7 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
         sb = depth // 8  # bytes per sample
         stride = width * channels * sb
         if interlace == 0:
-            out, end = _png_unfilter(raw, 0, width, height, channels, sb)
-            if end != len(raw):
-                raise ValueError("PNG scanline data has the wrong length")
+            out, _ = _png_unfilter(raw, 0, width, height, channels, sb)
         else:  # Adam7: unfilter each pass, scatter into place (raw bytes)
             bpp = channels * sb
             out = bytearray(stride * height)
@@ -558,8 +726,6 @@ def decode_png_rgba(payload: bytes) -> tuple[int, int, bytes, bytes]:
                             y * stride + (x + 1) * bpp] = (
                             row[px * bpp : (px + 1) * bpp]
                         )
-            if rpos != len(raw):
-                raise ValueError("PNG scanline data has the wrong length")
         if sb == 2:
             out = out[::2]  # big-endian high byte == spec depth scaling
     n_px = width * height
@@ -727,25 +893,14 @@ def _png_fixture_pixels(i: int, width: int, height: int) -> bytes:
     return (d * (npx // 16 + 1))[:npx]
 
 
+def encode_png_fixture(i: int) -> bytes:
+    w, h = _png_fixture_dims(i)
+    return encode_png_rgb(w, h, _png_fixture_pixels(i, w, h))
+
+
 def stage_png_media(sf_dir: str, n: int = 240) -> str:
-    """Write ``n`` REAL deterministic PNG files to a staging
-    directory (test/fixture plumbing, driver-side by design — in
-    production media arrives as files; this stages them). Idempotent:
-    the bytes are pure functions of the index, so re-staging
-    overwrites with identical content."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_png{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            w, h = _png_fixture_dims(i)
-            png = encode_png_rgb(w, h, _png_fixture_pixels(i, w, h))
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(png)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    """Stage ``n`` REAL deterministic 8-bit RGB PNG files."""
+    return stage_items(sf_dir, "png", n, "png", encode_png_fixture)
 
 
 def multimodal_decode(
@@ -764,45 +919,10 @@ def multimodal_decode(
     Scale shape: files scanned distributed (binaryFile), payloads
     cross into Python once per Arrow batch, decode parallelizes per
     file; metadata-only consumers would prune before this UDF."""
-    path = stage_png_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    media = _media_df(spark, stage_png_media(sf_dir, n), "png")
+    return _decode_each(
+        media, lambda mid, p: _raster_row(mid, *decode_png(p)), _RASTER_SCHEMA
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_png(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
 
 
 JPEG_SOI = b"\xff\xd8"
@@ -1142,28 +1262,19 @@ def _jpeg_fixture_params(i: int) -> dict:
     }
 
 
+def encode_jpeg_header_fixture(i: int) -> bytes:
+    d = hashlib.md5(str(i).encode()).digest()
+    n_fill = i % 777 + 64
+    return encode_jpeg_headers(
+        entropy=(d * (n_fill // 16 + 1))[:n_fill], **_jpeg_fixture_params(i)
+    )
+
+
 def stage_jpeg_media(sf_dir: str, n: int = 240) -> str:
-    """Write ``n`` real deterministic JPEG header files (same
-    driver-side staging contract as stage_png_media). Entropy filler
-    is md5(str(i)) tiled to i % 777 + 64 bytes, byte-stuffed by the
-    encoder."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpeg{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            d = hashlib.md5(str(i).encode()).digest()
-            n_fill = i % 777 + 64
-            entropy = (d * (n_fill // 16 + 1))[:n_fill]
-            jpg = encode_jpeg_headers(
-                entropy=entropy, **_jpeg_fixture_params(i)
-            )
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(jpg)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    """Stage ``n`` real deterministic JPEG header files. Entropy
+    filler is md5(str(i)) tiled to i % 777 + 64 bytes, byte-stuffed by
+    the encoder."""
+    return stage_items(sf_dir, "jpeg", n, "jpg", encode_jpeg_header_fixture)
 
 
 def multimodal_jpeg_meta(
@@ -1184,47 +1295,13 @@ def multimodal_jpeg_meta(
     Python once per Arrow batch, the parser touches only header
     bytes (stops at SOS); metadata-only consumers prune before any
     pixel work exists at all."""
-    path = stage_jpeg_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = jpeg_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid), m["width"], m["height"],
-                        m["components"], m["precision"],
-                        bool(m["progressive"]), m["density_unit"],
-                        m["x_density"], m["y_density"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "components",
-                    "precision", "progressive", "density_unit",
-                    "x_density", "y_density",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_jpeg_media(sf_dir, n), "jpg")
+    return _fields_each(
+        media, jpeg_meta,
         "media_id long, width int, height int, components int, "
         "precision int, progressive boolean, density_unit int, "
         "x_density int, y_density int",
-    ), "media_id")
+    )
 
 
 def _jpeg_px_fixture_planes(i: int):
@@ -1259,94 +1336,63 @@ def encode_jpeg_pixels_fixture(i: int) -> bytes:
     (full FDCT + Huffman entropy coding, not just markers)."""
     from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
 
-    planes, (w, h) = _jpeg_px_fixture_planes(i)
-
-    def plane(f) -> bytes:
-        return bytes(f(x // 8, y // 8) for y in range(h) for x in range(w))
-
-    if planes["gray"]:
-        return encode_jpeg_baseline(w, h, [plane(planes["y"])])
-    return encode_jpeg_baseline(
-        w, h, [plane(planes["y"]), plane(planes["cb"]), plane(planes["cr"])]
-    )
+    spec, (w, h) = _jpeg_px_fixture_planes(i)
+    return encode_jpeg_baseline(w, h, _block_planes(spec, w, h))
 
 
 def stage_jpeg_pixels(sf_dir: str, n: int = 240) -> str:
-    """Write ``n`` real entropy-coded baseline JPEGs (same staging
-    contract as stage_png_media / stage_jpeg_media; idempotent)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegpx{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def multimodal_jpeg_decode(
-    spark: SparkSession, sf_dir: str, n: int = 240
-) -> DataFrame:
-    """Registry entry (r9 verdict item 4, closing the last multimodal
-    stub): REAL JPEG bytes -> pixels in this container. Staged
-    entropy-coded baseline JPEGs are scanned with the distributed
-    binaryFile source and decoded by jpegcodec.decode_jpeg_baseline
-    (canonical Huffman rebuilt from DHT, dequantize, IDCT, level
-    shift, fixed-point YCbCr->RGB) inside one Arrow-batched
-    mapInPandas pass — the exact multimodal_decode shape, no fake
-    anywhere on this path. Emits decoded dimensions, the integer sum
-    of all RGB bytes, and md5 of the pixel HEX string; the fixture
-    pixels are closed-form in media_id so the DuckDB oracle
-    reconstructs both from pure BIGINT + string arithmetic. Reference
-    analog: the opaque-bytes input contract at master.go:82.
-
-    Scale shape: identical to multimodal_decode — scan distributed,
-    one Arrow crossing per batch, per-file decode parallelism;
-    metadata consumers use the scan-free jpeg_meta tier instead."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
-
-    path = stage_jpeg_pixels(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    """Stage ``n`` real entropy-coded baseline JPEGs."""
+    return stage_items(
+        sf_dir, "jpegpx", n, "jpg", encode_jpeg_pixels_fixture
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+def _jpeg_decode_entry(stage):
+    """The JPEG pixel-decode registry entries: REAL JPEG bytes ->
+    pixels in this container, one entry per staged fixture family.
+    The entries differ only in the stager bound to them:
+
+    - ``multimodal_jpeg_decode``: baseline 4:4:4 and gray scans.
+    - ``multimodal_jpeg_decode_420``: 4:2:0 MCU-interleaved scans
+      (four luma blocks, then Cb, then Cr). Luma varies within each
+      MCU, so a wrong interleave order breaks the hash.
+    - ``multimodal_jpeg_decode_rst``: restart-segmented scans, a DRI
+      of 1..5 MCUs per file (byte realignment, modulo-8 RSTn checks,
+      DC predictor resets at every boundary, E.2.4).
+    - ``multimodal_jpeg_decode_progressive``: multi-scan SOF2 files
+      (DC successive approximation, spectral AC bands, restarts inside
+      progressive scans; Annex G).
+    - ``multimodal_jpeg_decode_422``: 4:2:2 scans at mostly odd,
+      non-MCU-aligned dimensions (partial right-edge MCUs, odd-width
+      chroma padding).
+
+    Each entry scans its staged files with the distributed binaryFile
+    source and decodes them with jpegcodec.decode_jpeg (the SOF
+    dispatcher: baseline or progressive) inside one Arrow-batched
+    mapInPandas pass. It emits the decoded dimensions, the integer sum
+    of all RGB bytes, and md5 of the pixel HEX string. Fixture pixels
+    are closed-form in media_id, so the DuckDB oracle rebuilds both in
+    pure BIGINT + string arithmetic. Reference analog: the
+    opaque-bytes input contract at master.go:82.
+
+    Scale shape: distributed scan, one Arrow crossing per batch,
+    per-file decode parallelism, no shuffle before the presentation
+    sort; metadata consumers use the scan-free jpeg_meta tier
+    instead."""
+
+    def entry(spark: SparkSession, sf_dir: str, n: int = 240) -> DataFrame:
+        from mapreducego_spark.functions.jpegcodec import decode_jpeg
+
+        media = _media_df(spark, stage(sf_dir, n), "jpg")
+        return _decode_each(
+            media, lambda mid, p: _raster_row(mid, *decode_jpeg(p)),
+            _RASTER_SCHEMA,
+        )
+
+    return entry
+
+
+multimodal_jpeg_decode = _jpeg_decode_entry(stage_jpeg_pixels)
 
 
 def multimodal_resize_box(
@@ -1372,57 +1418,18 @@ def multimodal_resize_box(
     perceptual dedup and preview sinks."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
 
-    path = stage_jpeg_pixels(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    def row(mid: int, payload: bytes) -> tuple:
+        w, h, rgb = decode_jpeg_baseline(payload)
+        a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3).astype(np.int64)
+        h2, w2 = h // 2, w // 2
+        a = a[: h2 * 2, : w2 * 2]
+        ds = (
+            a[0::2, 0::2] + a[1::2, 0::2] + a[0::2, 1::2] + a[1::2, 1::2]
+        ) // 4
+        return _raster_row(mid, w2, h2, ds.astype(np.uint8))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                a = (
-                    np.frombuffer(rgb, dtype=np.uint8)
-                    .reshape(h, w, 3)
-                    .astype(np.int64)
-                )
-                h2, w2 = h // 2, w // 2
-                a = a[: h2 * 2, : w2 * 2]
-                ds = (
-                    a[0::2, 0::2] + a[1::2, 0::2]
-                    + a[0::2, 1::2] + a[1::2, 1::2]
-                ) // 4
-                db = ds.astype(np.uint8).tobytes()
-                rows.append(
-                    (
-                        int(mid),
-                        w2,
-                        h2,
-                        int(ds.sum()),
-                        hashlib.md5(db.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long,"
-        " feature_hash string",
-    ), "media_id")
+    media = _media_df(spark, stage_jpeg_pixels(sf_dir, n), "jpg")
+    return _decode_each(media, row, _RASTER_SCHEMA)
 
 
 def _jpeg_px_fixture_planes_420(i: int):
@@ -1469,84 +1476,13 @@ def encode_jpeg_pixels_fixture_420(i: int) -> bytes:
 
 
 def stage_jpeg_pixels_420(sf_dir: str, n: int = 240) -> str:
-    """Stage ``n`` real 4:2:0 entropy-coded JPEGs (same idempotent
-    staging contract as stage_jpeg_pixels)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpeg420_{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_420(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def multimodal_jpeg_decode_420(
-    spark: SparkSession, sf_dir: str, n: int = 240
-) -> DataFrame:
-    """Registry entry (r11; r10 verdict item 2): REAL 4:2:0
-    chroma-subsampled JPEG decode — the dominant real-world encoding
-    the 4:4:4-only r10 codec still refused. Staged MCU-interleaved
-    scans (luma 2x2) are scanned with the distributed binaryFile
-    source and decoded by jpegcodec.decode_jpeg_baseline's
-    generalized interleaved-MCU walk (A.2.3: per MCU, four luma
-    blocks then Cb then Cr, per-component DC prediction) with
-    replication chroma upsampling, inside one Arrow-batched
-    mapInPandas pass. Same output contract as multimodal_jpeg_decode
-    (dims, integer RGB sum, md5 of the pixel hex) and the fixture is
-    closed-form in media_id, so the DuckDB oracle reconstructs every
-    byte in BIGINT — a hash gate over the subsampled entropy layout
-    itself, since luma varies within each MCU (wrong interleave
-    order => wrong hash). Reference analog: the opaque-bytes input
-    contract at master.go:82.
-
-    Scale shape: identical to multimodal_jpeg_decode — distributed
-    scan, one Arrow crossing per batch, per-file decode parallelism,
-    no shuffle before the presentation sort."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
-
-    path = stage_jpeg_pixels_420(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    """Stage ``n`` real 4:2:0 entropy-coded JPEGs."""
+    return stage_items(
+        sf_dir, "jpeg420_", n, "jpg", encode_jpeg_pixels_fixture_420
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+multimodal_jpeg_decode_420 = _jpeg_decode_entry(stage_jpeg_pixels_420)
 
 
 def _jpeg_px_fixture_planes_rst(i: int):
@@ -1577,88 +1513,18 @@ def encode_jpeg_pixels_fixture_rst(i: int) -> bytes:
     from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
 
     spec, (w, h), ri = _jpeg_px_fixture_planes_rst(i)
-
-    def plane(f) -> bytes:
-        return bytes(f(x // 8, y // 8) for y in range(h) for x in range(w))
-
-    planes = (
-        [plane(spec["y"])]
-        if spec["gray"]
-        else [plane(spec["y"]), plane(spec["cb"]), plane(spec["cr"])]
+    return encode_jpeg_baseline(
+        w, h, _block_planes(spec, w, h), restart_interval=ri
     )
-    return encode_jpeg_baseline(w, h, planes, restart_interval=ri)
 
 
 def stage_jpeg_pixels_rst(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegrst{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_rst(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def multimodal_jpeg_decode_rst(
-    spark: SparkSession, sf_dir: str, n: int = 240
-) -> DataFrame:
-    """Registry entry (r11): baseline JPEG decode over RESTART-
-    SEGMENTED scans — every staged file carries a DRI of 1..5 MCUs,
-    so the distributed decode walks real RSTn sequences (byte
-    realignment, modulo-8 marker checking, DC prediction resets at
-    every boundary; E.2.4), the resynchronization structure most
-    camera/encoder output actually has. Same decode contract and
-    closed-form oracle arithmetic as multimodal_jpeg_decode; the
-    restart machinery must be byte-exact or the hash breaks (a DC
-    predictor carried across a boundary shifts every later block).
-
-    Scale shape: identical — distributed binaryFile scan, one Arrow
-    crossing per batch, no shuffle before the presentation sort."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
-
-    path = stage_jpeg_pixels_rst(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    return stage_items(
+        sf_dir, "jpegrst", n, "jpg", encode_jpeg_pixels_fixture_rst
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+multimodal_jpeg_decode_rst = _jpeg_decode_entry(stage_jpeg_pixels_rst)
 
 
 def _jpeg_px_fixture_planes_prog(i: int):
@@ -1697,99 +1563,21 @@ def encode_jpeg_pixels_fixture_prog(i: int) -> bytes:
     from mapreducego_spark.functions.jpegcodec import encode_jpeg_progressive
 
     spec, (w, h), ri = _jpeg_px_fixture_planes_prog(i)
-
-    def plane(f) -> bytes:
-        return bytes(f(x // 8, y // 8) for y in range(h) for x in range(w))
-
-    planes = (
-        [plane(spec["y"])]
-        if spec["gray"]
-        else [plane(spec["y"]), plane(spec["cb"]), plane(spec["cr"])]
-    )
     return encode_jpeg_progressive(
-        w, h, planes, restart_interval=ri, dc_al=1, ac_al=1
+        w, h, _block_planes(spec, w, h), restart_interval=ri, dc_al=1,
+        ac_al=1,
     )
 
 
 def stage_jpeg_pixels_prog(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegprog{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_prog(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def multimodal_jpeg_decode_progressive(
-    spark: SparkSession, sf_dir: str, n: int = 240
-) -> DataFrame:
-    """Registry entry (r12; r11 verdict missing #1): PROGRESSIVE
-    (SOF2) JPEG decode — the multi-scan spectral-selection +
-    successive-approximation encoding that is a double-digit share
-    of real web images and that every earlier round refused. Staged
-    multi-scan files (DC first at Al=1, DC refinement bits, spectral
-    AC bands, some files restart-segmented) are scanned with the
-    distributed binaryFile source and decoded by
-    jpegcodec.decode_jpeg — the SOF dispatcher routing to
-    decode_jpeg_progressive's Annex G scan accumulation — inside one
-    Arrow-batched mapInPandas pass. Same output contract as
-    multimodal_jpeg_decode and closed-form fixture pixels, so the
-    DuckDB oracle reconstructs every byte in BIGINT: a decoder that
-    drops a refinement bit, mis-walks a spectral band, or carries
-    EOB state across a restart breaks the hash. The codec pytests
-    additionally pin nonzero-AC progressive content byte-equal to
-    the baseline decode (test_jpeg_decode.py). Reference analog: the
-    opaque-bytes input contract at master.go:82.
-
-    Scale shape: identical to multimodal_jpeg_decode — distributed
-    scan, one Arrow crossing per batch, per-file decode parallelism,
-    no shuffle before the presentation sort."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg
-
-    path = stage_jpeg_pixels_prog(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    return stage_items(
+        sf_dir, "jpegprog", n, "jpg", encode_jpeg_pixels_fixture_prog
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+multimodal_jpeg_decode_progressive = _jpeg_decode_entry(
+    stage_jpeg_pixels_prog
+)
 
 
 def _jpeg_px_fixture_planes_422(i: int):
@@ -1835,78 +1623,12 @@ def encode_jpeg_pixels_fixture_422(i: int) -> bytes:
 
 
 def stage_jpeg_pixels_422(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpeg422_{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_pixels_fixture_422(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def multimodal_jpeg_decode_422(
-    spark: SparkSession, sf_dir: str, n: int = 240
-) -> DataFrame:
-    """Registry entry (r12; r11 verdict missing #4): REAL 4:2:2
-    chroma-subsampled JPEG decode at NON-MCU-ALIGNED dimensions —
-    the 2x1 sampling family (common camera/video-frame output) plus
-    the partial-edge-MCU geometry that r11 covered only by code
-    path. Staged MCU-interleaved scans (luma 2x1, mostly odd dims)
-    decode through the same generalized A.2.3 walk as 4:2:0;
-    replication upsampling restores chroma. Same output contract and
-    closed-form oracle arithmetic as multimodal_jpeg_decode — luma
-    varies within each 16x8 MCU, so a wrong horizontal interleave
-    order or a mis-placed partial edge block breaks the hash.
-    Reference analog: the opaque-bytes input contract at
-    master.go:82.
-
-    Scale shape: identical — distributed binaryFile scan, one Arrow
-    crossing per batch, no shuffle before the presentation sort."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
-
-    path = stage_jpeg_pixels_422(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    return stage_items(
+        sf_dir, "jpeg422_", n, "jpg", encode_jpeg_pixels_fixture_422
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
 
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
+multimodal_jpeg_decode_422 = _jpeg_decode_entry(stage_jpeg_pixels_422)
 
 
 def _png_variants_fixture(i: int):
@@ -1957,17 +1679,9 @@ def encode_png_variant_fixture(i: int) -> bytes:
 
 
 def stage_png_variants(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pngvar{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(encode_png_variant_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(
+        sf_dir, "pngvar", n, "png", encode_png_variant_fixture
+    )
 
 
 def multimodal_png_variants(
@@ -1989,45 +1703,10 @@ def multimodal_png_variants(
     Scale shape: identical to multimodal_decode — distributed scan,
     one Arrow crossing per batch, no shuffle before the presentation
     sort."""
-    path = stage_png_variants(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
+    media = _media_df(spark, stage_png_variants(sf_dir, n), "png")
+    return _decode_each(
+        media, lambda mid, p: _raster_row(mid, *decode_png(p)), _RASTER_SCHEMA
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_png(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        hashlib.md5(rgb.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
-        "media_id long, width int, height int, px_sum long, "
-        "feature_hash string",
-    ), "media_id")
 
 
 def _png_depth_fixture(i: int):
@@ -2110,17 +1789,9 @@ def encode_png_depth_fixture(i: int) -> bytes:
 
 
 def stage_png_depth(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pngdepth{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(encode_png_depth_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(
+        sf_dir, "pngdepth", n, "png", encode_png_depth_fixture
+    )
 
 
 def multimodal_png_depth(
@@ -2142,51 +1813,12 @@ def multimodal_png_depth(
 
     Scale shape: identical to multimodal_decode — distributed scan,
     one Arrow crossing, no shuffle before the presentation sort."""
-    path = stage_png_depth(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb, alpha = decode_png_rgba(bytes(p))
-                rgba = bytearray()
-                for k in range(w * h):
-                    rgba += rgb[3 * k : 3 * k + 3]
-                    rgba.append(alpha[k])
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        int(sum(alpha)),
-                        hashlib.md5(bytes(rgba).hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "a_sum",
-                    "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_png_depth(sf_dir, n), "png")
+    return _decode_each(
+        media, lambda mid, p: _rgba_row(mid, *decode_png_rgba(p)),
         "media_id long, width int, height int, px_sum long, a_sum long,"
         " feature_hash string",
-    ), "media_id")
+    )
 
 
 def _exif_fixture_params(i: int) -> dict:
@@ -2206,27 +1838,21 @@ def _exif_fixture_params(i: int) -> dict:
     }
 
 
+def _exif_app1(i: int) -> bytes:
+    p = _exif_fixture_params(i)
+    return build_exif(
+        p["byte_order"], p["orientation"], p["make"], p["model"],
+        p["datetime"], p["datetime_original"],
+    )
+
+
 def stage_jpeg_exif(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegexif{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _exif_fixture_params(i)
-            jpg = encode_jpeg_headers(
-                i % 31 + 8,
-                i % 23 + 8,
-                app1=build_exif(
-                    p["byte_order"], p["orientation"], p["make"],
-                    p["model"], p["datetime"], p["datetime_original"],
-                ),
-            )
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(jpg)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(
+        sf_dir, "jpegexif", n, "jpg",
+        lambda i: encode_jpeg_headers(
+            i % 31 + 8, i % 23 + 8, app1=_exif_app1(i)
+        ),
+    )
 
 
 def multimodal_jpeg_exif(
@@ -2246,48 +1872,19 @@ def multimodal_jpeg_exif(
 
     Scale shape: header-only parse (no entropy decode), distributed
     scan, no shuffle before the presentation sort."""
-    path = stage_jpeg_exif(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        x = jpeg_exif(payload)
+        return (
+            mid, x["byte_order"], x["orientation"], x["make"], x["model"],
+            x["datetime"], x["datetime_original"],
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                x = jpeg_exif(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        x["byte_order"],
-                        x["orientation"],
-                        x["make"],
-                        x["model"],
-                        x["datetime"],
-                        x["datetime_original"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "byte_order", "orientation", "make",
-                    "model", "dt", "dt_original",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_jpeg_exif(sf_dir, n), "jpg")
+    return _decode_each(
+        media, row,
         "media_id long, byte_order string, orientation long, make string,"
         " model string, dt string, dt_original string",
-    ), "media_id")
+    )
 
 
 def apply_exif_orientation(a: np.ndarray, orientation: int) -> np.ndarray:
@@ -2322,27 +1919,14 @@ def encode_jpeg_oriented_fixture(i: int) -> bytes:
     closed form) carrying a REAL Exif APP1 with orientation
     i % 8 + 1, spliced directly after SOI — exactly where cameras put
     it. Both byte orders cycle like the exif fixture."""
-    p = _exif_fixture_params(i)
     base = encode_jpeg_pixels_fixture(i)
-    app1 = build_exif(
-        p["byte_order"], p["orientation"], p["make"], p["model"],
-        p["datetime"], p["datetime_original"],
-    )
-    return base[:2] + _jpeg_segment(0xE1, app1) + base[2:]
+    return base[:2] + _jpeg_segment(0xE1, _exif_app1(i)) + base[2:]
 
 
 def stage_jpeg_oriented(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_jpegor{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.jpg"), "wb") as fh:
-                fh.write(encode_jpeg_oriented_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(
+        sf_dir, "jpegor", n, "jpg", encode_jpeg_oriented_fixture
+    )
 
 
 def multimodal_decode_oriented(
@@ -2371,52 +1955,20 @@ def multimodal_decode_oriented(
     permutation, not a copy-heavy Python loop."""
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_jpeg_oriented(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        w, h, rgb = decode_jpeg(payload)
+        o = jpeg_exif(payload)["orientation"]
+        u = apply_exif_orientation(
+            np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3), o
         )
-    )
+        return (mid, o, u.shape[1], u.shape[0], *_gates(u))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                blob = bytes(p)
-                w, h, rgb = decode_jpeg(blob)
-                o = jpeg_exif(blob)["orientation"]
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                u = apply_exif_orientation(a, o)
-                ub = np.ascontiguousarray(u).tobytes()
-                rows.append(
-                    (
-                        int(mid),
-                        o,
-                        u.shape[1],
-                        u.shape[0],
-                        int(np.sum(u, dtype=np.int64)),
-                        hashlib.md5(ub.hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "orientation", "width", "height",
-                    "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_jpeg_oriented(sf_dir, n), "jpg")
+    return _decode_each(
+        media, row,
         "media_id long, orientation long, width int, height int,"
         " px_sum long, feature_hash string",
-    ), "media_id")
+    )
 
 
 def _wav_fixture_params(i: int):
@@ -2477,35 +2029,7 @@ def encode_wav_fixture(i: int) -> bytes:
 
 
 def stage_wav_media(sf_dir: str, n: int = 240) -> str:
-    # dir name versioned (wavB): fixture bytes changed in r13 (odd
-    # LIST payload) and the _STAGED marker makes staging idempotent,
-    # so the old dir must not satisfy the new content
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_wavB{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.wav"), "wb") as fh:
-                fh.write(encode_wav_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def _wav_media_df(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    path = stage_wav_media(sf_dir, n)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.wav")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.wav", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    return stage_items(sf_dir, "wavB", n, "wav", encode_wav_fixture)
 
 
 def multimodal_audio_meta(
@@ -2528,36 +2052,12 @@ def multimodal_audio_meta(
     queues before anyone touches samples."""
     from mapreducego_spark.functions.wavcodec import parse_wav_meta
 
-    media = _wav_media_df(spark, sf_dir, n)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = parse_wav_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        m["sample_rate"],
-                        m["channels"],
-                        m["bits"],
-                        m["n_frames"],
-                        m["duration_us"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "channels", "bits",
-                    "n_frames", "duration_us",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_wav_media(sf_dir, n), "wav")
+    return _fields_each(
+        media, parse_wav_meta,
         "media_id long, sample_rate long, channels long, bits long,"
         " n_frames long, duration_us long",
-    ), "media_id")
+    )
 
 
 def multimodal_audio_stats(
@@ -2580,41 +2080,20 @@ def multimodal_audio_stats(
     sort."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    media = _wav_media_df(spark, sf_dir, n)
+    def row(mid: int, payload: bytes) -> tuple:
+        a = decode_wav(payload)[1].astype(np.int64)
+        s_sum, s_min, s_max, w_sum = _sample_gates(a)
+        return (
+            mid, a.size, s_sum, s_min, s_max, int(np.abs(a).sum()),
+            int((a * a).sum()), w_sum,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                a = s.astype(np.int64)
-                nf, ch = a.shape
-                w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        nf * ch,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                        int(np.abs(a).sum()),
-                        int((a * a).sum()),
-                        int((w * a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "s_sum", "s_min", "s_max",
-                    "abs_sum", "sq_sum", "w_sum",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_wav_media(sf_dir, n), "wav")
+    return _decode_each(
+        media, row,
         "media_id long, n_samples long, s_sum long, s_min long,"
         " s_max long, abs_sum long, sq_sum long, w_sum long",
-    ), "media_id")
+    )
 
 
 def multimodal_audio_loudest_window(
@@ -2646,31 +2125,21 @@ def multimodal_audio_loudest_window(
     after ingest."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    media = _wav_media_df(spark, sf_dir, n)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                a = s.astype(np.int64)
-                win_len = meta["sample_rate"] // 100
-                for w0 in range(0, meta["n_frames"], win_len):
-                    chunk = a[w0 : w0 + win_len]
-                    rows.append(
-                        (
-                            int(mid),
-                            w0 // win_len,
-                            int((chunk * chunk).sum()),
-                            int(np.abs(chunk).max()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "win_idx", "energy", "peak"]
+    def windows(mid: int, payload: bytes):
+        meta, s = decode_wav(payload)
+        a = s.astype(np.int64)
+        win_len = meta["sample_rate"] // 100
+        for w0 in range(0, meta["n_frames"], win_len):
+            chunk = a[w0 : w0 + win_len]
+            yield (
+                mid, w0 // win_len, int((chunk * chunk).sum()),
+                int(np.abs(chunk).max()),
             )
 
-    wins = media.mapInPandas(
-        run, "media_id long, win_idx long, energy long, peak long"
+    media = _media_df(spark, stage_wav_media(sf_dir, n), "wav")
+    wins = _item_rows(
+        media, windows, "media_id long, win_idx long, energy long, peak long",
+        fan_out=True,
     )
     return loudest_window_agg(wins).orderBy("media_id")
 
@@ -2728,43 +2197,31 @@ def encode_avi_fixture(i: int) -> bytes:
     entropy-coded baseline JPEG (FDCT + Huffman), wrapped by the
     avicodec container writer."""
     from mapreducego_spark.functions.avicodec import encode_avi_mjpeg
-    from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
 
     spec = _avi_fixture_params(i)
+    return encode_avi_mjpeg(
+        spec["w"], spec["h"], spec["us_per_frame"], _mjpeg_frames(spec)
+    )
+
+
+def _mjpeg_frames(spec: dict) -> list[bytes]:
+    """Every frame of an MJPEG fixture as a baseline JPEG of its
+    per-(frame, block) closed form ``spec[k](f, bx, by)``."""
+    from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
+
     w, h = spec["w"], spec["h"]
-
-    def plane(fn, f: int) -> bytes:
-        return bytes(
-            fn(f, x // 8, y // 8) for y in range(h) for x in range(w)
-        )
-
-    frames = []
-    for f in range(spec["n_frames"]):
-        if spec["gray"]:
-            frames.append(encode_jpeg_baseline(w, h, [plane(spec["y"], f)]))
-        else:
-            frames.append(
-                encode_jpeg_baseline(
-                    w, h,
-                    [plane(spec["y"], f), plane(spec["cb"], f),
-                     plane(spec["cr"], f)],
-                )
-            )
-    return encode_avi_mjpeg(w, h, spec["us_per_frame"], frames)
+    return [
+        encode_jpeg_baseline(w, h, _block_planes(
+            {"gray": spec["gray"]}
+            | {k: partial(spec[k], f) for k in ("y", "cb", "cr")},
+            w, h,
+        ))
+        for f in range(spec["n_frames"])
+    ]
 
 
 def stage_avi_media(sf_dir: str, n: int = 120) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_avi{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.avi"), "wb") as fh:
-                fh.write(encode_avi_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(sf_dir, "avi", n, "avi", encode_avi_fixture)
 
 
 def multimodal_video_frames(
@@ -2804,52 +2261,20 @@ def _video_frame_rows(
     from mapreducego_spark.functions.avicodec import parse_avi
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_avi_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.avi")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.avi", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    def frames(mid: int, payload: bytes):
+        meta, blobs = parse_avi(payload)
+        us = meta["us_per_frame"]
+        for f, blob in enumerate(blobs):
+            w, h, rgb = decode_jpeg(blob)
+            yield (mid, f, meta["n_frames"], us, f * us, w, h, *_gates(rgb))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = parse_avi(bytes(p))
-                for f, blob in enumerate(frames):
-                    w, h, rgb = decode_jpeg(blob)
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            meta["n_frames"],
-                            meta["us_per_frame"],
-                            f * meta["us_per_frame"],
-                            w,
-                            h,
-                            int(sum(rgb)),
-                            hashlib.md5(rgb.hex().encode()).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames", "us_per_frame",
-                    "ts_us", "width", "height", "px_sum", "feature_hash",
-                ],
-            )
-
-    return media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_avi_media(sf_dir, n), "avi")
+    return _item_rows(
+        media, frames,
         "media_id long, frame_idx long, n_frames long, us_per_frame long,"
         " ts_us long, width int, height int, px_sum long,"
         " feature_hash string",
+        fan_out=True,
     )
 
 
@@ -2952,17 +2377,9 @@ def encode_wav_formats_fixture(i: int) -> bytes:
 
 
 def stage_wav_formats(sf_dir: str, n: int = 240) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_wavfmt{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.wav"), "wb") as fh:
-                fh.write(encode_wav_formats_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(
+        sf_dir, "wavfmt", n, "wav", encode_wav_formats_fixture
+    )
 
 
 def multimodal_audio_formats(
@@ -2989,63 +2406,27 @@ def multimodal_audio_formats(
     sort."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    path = stage_wav_formats(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.wav")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.wav", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        meta, s = decode_wav(payload)
+        if meta["format"] == "float":
+            a = np.rint(s.astype(np.float64) * 1024.0).astype(np.int64)
+            kind = "float32"
+        else:
+            a = s.astype(np.int64)
+            kind = f"pcm{meta['bits']}"
+        fam = ("ext_" if meta["extensible"] else "") + kind
+        return (
+            mid, fam, meta["bits"], meta["channels"], a.shape[0], a.size,
+            *_sample_gates(a),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                if meta["format"] == "float":
-                    a = np.rint(s.astype(np.float64) * 1024.0).astype(
-                        np.int64
-                    )
-                    kind = "float32"
-                else:
-                    a = s.astype(np.int64)
-                    kind = f"pcm{meta['bits']}"
-                fam = ("ext_" if meta["extensible"] else "") + kind
-                nf, ch = a.shape
-                w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        fam,
-                        meta["bits"],
-                        meta["channels"],
-                        nf,
-                        nf * ch,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                        int((w * a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "family", "bits", "channels", "n_frames",
-                    "n_samples", "q_sum", "q_min", "q_max", "q_wsum",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_wav_formats(sf_dir, n), "wav")
+    return _decode_each(
+        media, row,
         "media_id long, family string, bits long, channels long,"
         " n_frames long, n_samples long, q_sum long, q_min long,"
         " q_max long, q_wsum long",
-    ), "media_id")
+    )
 
 
 def mine_image_text_pairs_semantic(
@@ -3087,42 +2468,20 @@ def mine_image_text_pairs_semantic(
     from mapreducego_spark.functions.text import tokens_col
     from mapreducego_spark.sources.catalog import load_table
 
-    path = stage_jpeg_pixels(sf_dir, n)
-    media_files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.jpg")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.jpg", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    def signature(mid: int, payload: bytes) -> tuple:
+        w, h, rgb = decode_jpeg_baseline(payload)
+        a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3).astype(np.int64)
+        wgt = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
+        bucket = (
+            (np.arange(w) // 8)[None, :] + 8 * (np.arange(h) // 8)[:, None]
+        ) % 64
+        sig = np.zeros(64, dtype=np.int64)
+        np.add.at(sig, bucket, wgt)
+        return mid, w, h, sig.tolist()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb = decode_jpeg_baseline(bytes(p))
-                a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-                a = a.astype(np.int64)
-                wgt = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
-                bucket = (
-                    (np.arange(w) // 8)[None, :]
-                    + 8 * (np.arange(h) // 8)[:, None]
-                ) % 64
-                sig = np.zeros(64, dtype=np.int64)
-                np.add.at(sig, bucket, wgt)
-                rows.append((int(mid), w, h, sig.tolist()))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "sig"]
-            )
-
-    media = media_files.mapInPandas(
-        run, "media_id long, width int, height int, sig array<long>"
+    media = _item_rows(
+        _media_df(spark, stage_jpeg_pixels(sf_dir, n), "jpg"), signature,
+        "media_id long, width int, height int, sig array<long>",
     )
     caps = (
         load_table(spark, sf_dir, "documents")
@@ -3337,28 +2696,8 @@ def encode_avi_av_fixture(i: int) -> bytes:
     every frame a full entropy-coded baseline JPEG, the audio track
     sliced into per-frame '01wb' chunks by the container writer."""
     from mapreducego_spark.functions.avicodec import encode_avi_mjpeg_av
-    from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
 
     spec = _avi_av_fixture_params(i)
-    w, h = spec["w"], spec["h"]
-
-    def plane(fn, f: int) -> bytes:
-        return bytes(
-            fn(f, x // 8, y // 8) for y in range(h) for x in range(w)
-        )
-
-    frames = []
-    for f in range(spec["n_frames"]):
-        if spec["gray"]:
-            frames.append(encode_jpeg_baseline(w, h, [plane(spec["y"], f)]))
-        else:
-            frames.append(
-                encode_jpeg_baseline(
-                    w, h,
-                    [plane(spec["y"], f), plane(spec["cb"], f),
-                     plane(spec["cr"], f)],
-                )
-            )
     samples = np.array(
         [
             [spec["s"](t, c) for c in range(spec["channels"])]
@@ -3367,22 +2706,13 @@ def encode_avi_av_fixture(i: int) -> bytes:
         dtype=np.int64,
     )
     return encode_avi_mjpeg_av(
-        w, h, spec["us_per_frame"], frames, spec["rate"], samples
+        spec["w"], spec["h"], spec["us_per_frame"], _mjpeg_frames(spec),
+        spec["rate"], samples,
     )
 
 
 def stage_avi_av_media(sf_dir: str, n: int = 100) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_avimux{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            with open(os.path.join(out, f"media_{i:05d}.avi"), "wb") as fh:
-                fh.write(encode_avi_av_fixture(i))
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(sf_dir, "avimux", n, "avi", encode_avi_av_fixture)
 
 
 def multimodal_video_audio(
@@ -3411,63 +2741,23 @@ def multimodal_video_audio(
     from mapreducego_spark.functions.avicodec import parse_avi_av
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
-    path = stage_avi_av_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.avi")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.avi", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        meta, frames, samples = parse_avi_av(payload)
+        v_px_sum = sum(int(sum(decode_jpeg(blob)[2])) for blob in frames)
+        a = samples.astype(np.int64)
+        return (
+            mid, meta["n_frames"], meta["us_per_frame"], meta["width"],
+            meta["height"], v_px_sum, meta["sample_rate"], a.shape[1],
+            a.shape[0], *_sample_gates(a),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames, samples = parse_avi_av(bytes(p))
-                v_px_sum = 0
-                for blob in frames:
-                    _w, _h, rgb = decode_jpeg(blob)
-                    v_px_sum += int(sum(rgb))
-                a = samples.astype(np.int64)
-                nf, ch = a.shape
-                w = np.arange(nf * ch, dtype=np.int64).reshape(nf, ch) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        meta["n_frames"],
-                        meta["us_per_frame"],
-                        meta["width"],
-                        meta["height"],
-                        v_px_sum,
-                        meta["sample_rate"],
-                        ch,
-                        nf,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                        int((w * a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "us_per_frame", "width",
-                    "height", "v_px_sum", "sample_rate", "channels",
-                    "n_audio", "a_sum", "a_min", "a_max", "a_wsum",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_avi_av_media(sf_dir, n), "avi")
+    return _decode_each(
+        media, row,
         "media_id long, n_frames long, us_per_frame long, width long,"
         " height long, v_px_sum long, sample_rate long, channels long,"
         " n_audio long, a_sum long, a_min long, a_max long, a_wsum long",
-    ), "media_id")
+    )
 
 
 # --- r13 second batch: GIF (LZW) tier ------------------------------
@@ -3497,31 +2787,22 @@ def _gif_fixture_params(i: int):
     }
 
 
-def stage_gif_media(sf_dir: str, n: int = 150) -> str:
+def encode_gif_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.gifcodec import encode_gif
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_gif{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _gif_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            idx = np.array(
-                [[spec["idx"](x, y) for x in range(w)] for y in range(h)],
-                dtype=np.uint8,
-            )
-            blob = encode_gif(
-                w, h,
-                [spec["pal"](j) for j in range(spec["nc"])],
-                [{"indices": idx, "interlace": spec["interlace"]}],
-            )
-            with open(os.path.join(out, f"media_{i:05d}.gif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    spec = _gif_fixture_params(i)
+    return encode_gif(
+        spec["w"], spec["h"],
+        [spec["pal"](j) for j in range(spec["nc"])],
+        [{
+            "indices": _grid(spec["idx"], spec["w"], spec["h"]),
+            "interlace": spec["interlace"],
+        }],
+    )
+
+
+def stage_gif_media(sf_dir: str, n: int = 150) -> str:
+    return stage_items(sf_dir, "gif", n, "gif", encode_gif_fixture)
 
 
 def multimodal_gif_decode(
@@ -3546,53 +2827,21 @@ def multimodal_gif_decode(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.gifcodec import decode_gif
 
-    path = stage_gif_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.gif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.gif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        meta, frames = decode_gif(payload)
+        f = frames[0]
+        rgb = np.asarray(f["palette"], dtype=np.uint8)[f["indices"]]
+        return (
+            mid, meta["width"], meta["height"], len(f["palette"]),
+            bool(f["interlaced"]), *_gates(rgb),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = decode_gif(bytes(p))
-                f = frames[0]
-                pal = np.asarray(f["palette"], dtype=np.uint8)
-                rgb = pal[f["indices"]]
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        len(f["palette"]),
-                        bool(f["interlaced"]),
-                        int(rgb.astype(np.int64).sum()),
-                        hashlib.md5(
-                            rgb.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "table_size",
-                    "interlaced", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_gif_media(sf_dir, n), "gif")
+    return _decode_each(
+        media, row,
         "media_id long, width long, height long, table_size long,"
         " interlaced boolean, px_sum long, feature_hash string",
-    ), "media_id")
+    )
 
 
 def _gif_anim_fixture_params(i: int):
@@ -3637,50 +2886,38 @@ def _gif_anim_fixture_params(i: int):
     }
 
 
-def stage_gif_anim_media(sf_dir: str, n: int = 120) -> str:
+def encode_gif_anim_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.gifcodec import encode_gif
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_gifanim{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _gif_anim_fixture_params(i)
-            frames = []
-            for f in range(spec["n_frames"]):
-                left, top, pw, ph = spec["geom"](f)
-                patch = np.array(
-                    [
-                        [spec["idx"](f, left + dx, top + dy)
-                         for dx in range(pw)]
-                        for dy in range(ph)
-                    ],
-                    dtype=np.uint8,
-                )
-                frames.append(
-                    {
-                        "indices": patch,
-                        "left": left,
-                        "top": top,
-                        "delay_cs": spec["delay"](f),
-                        "transparent": spec["transparent"](f),
-                        "disposal": 1,
-                        "palette": [
-                            spec["lpal"](f, j) for j in range(spec["nc"])
-                        ] if spec["local"](f) else None,
-                    }
-                )
-            blob = encode_gif(
-                spec["w"], spec["h"],
-                [spec["gpal"](j) for j in range(spec["nc"])],
-                frames, loop=True,
-            )
-            with open(os.path.join(out, f"media_{i:05d}.gif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    spec = _gif_anim_fixture_params(i)
+    frames = []
+    for f in range(spec["n_frames"]):
+        left, top, pw, ph = spec["geom"](f)
+        frames.append(
+            {
+                "indices": _grid(
+                    lambda dx, dy: spec["idx"](f, left + dx, top + dy),
+                    pw, ph,
+                ),
+                "left": left,
+                "top": top,
+                "delay_cs": spec["delay"](f),
+                "transparent": spec["transparent"](f),
+                "disposal": 1,
+                "palette": [
+                    spec["lpal"](f, j) for j in range(spec["nc"])
+                ] if spec["local"](f) else None,
+            }
+        )
+    return encode_gif(
+        spec["w"], spec["h"],
+        [spec["gpal"](j) for j in range(spec["nc"])],
+        frames, loop=True,
+    )
+
+
+def stage_gif_anim_media(sf_dir: str, n: int = 120) -> str:
+    return stage_items(sf_dir, "gifanim", n, "gif", encode_gif_anim_fixture)
 
 
 def multimodal_gif_frames(
@@ -3706,54 +2943,21 @@ def multimodal_gif_frames(
     Scale shape: distributed scan, one Arrow crossing, bounded
     per-file fan-out (<= 5 rows/file), no shuffle before the
     presentation sort."""
-    from mapreducego_spark.functions.gifcodec import (
-        compose_frames,
-        decode_gif,
-    )
+    from mapreducego_spark.functions.gifcodec import compose_frames, decode_gif
 
-    path = stage_gif_anim_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.gif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.gif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = decode_gif(bytes(p))
-                for f, canvas in enumerate(compose_frames(meta, frames)):
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            meta["n_frames"],
-                            frames[f]["delay_cs"],
-                            int(canvas.astype(np.int64).sum()),
-                            hashlib.md5(
-                                canvas.tobytes().hex().encode()
-                            ).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames", "delay_cs",
-                    "px_sum", "feature_hash",
-                ],
+    def frames(mid: int, payload: bytes):
+        meta, fr = decode_gif(payload)
+        for f, canvas in enumerate(compose_frames(meta, fr)):
+            yield (
+                mid, f, meta["n_frames"], fr[f]["delay_cs"], *_gates(canvas)
             )
 
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_gif_anim_media(sf_dir, n), "gif")
+    return sort_once(_item_rows(
+        media, frames,
         "media_id long, frame_idx long, n_frames long, delay_cs long,"
         " px_sum long, feature_hash string",
+        fan_out=True,
     ), "media_id", "frame_idx")
 
 
@@ -3794,11 +2998,15 @@ def stage_webdataset_shards(sf_dir: str, n_shards: int = 16) -> str:
 
     from mapreducego_spark.functions.jpegcodec import encode_jpeg_baseline
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_wds{n_shards}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def add(tf, name: str, data: bytes) -> None:
+        info = tarfile.TarInfo(name)
+        info.size = len(data)
+        info.mtime = 0
+        info.uid = info.gid = 0
+        info.mode = 0o644
+        tf.addfile(info, io.BytesIO(data))
+
+    def write(out: str) -> int:
         import duckdb
 
         docs = duckdb.sql(
@@ -3812,40 +3020,19 @@ def stage_webdataset_shards(sf_dir: str, n_shards: int = 16) -> str:
             )
             for s in range(n_shards)
         ]
-
-        def add(tf, name: str, data: bytes) -> None:
-            info = tarfile.TarInfo(name)
-            info.size = len(data)
-            info.mtime = 0
-            info.uid = info.gid = 0
-            info.mode = 0o644
-            tf.addfile(info, io.BytesIO(data))
-
         for doc_id, text in docs:
             spec = _wds_jpeg_params(doc_id)
             w, h = spec["w"], spec["h"]
-
-            def plane(fn) -> bytes:
-                return bytes(
-                    fn(x // 8, y // 8)
-                    for y in range(h) for x in range(w)
-                )
-
-            planes = (
-                [plane(spec["y"])] if spec["gray"]
-                else [plane(spec["y"]), plane(spec["cb"]),
-                      plane(spec["cr"])]
-            )
-            jpg = encode_jpeg_baseline(w, h, planes)
             tf = tars[doc_id % n_shards]
             key = f"{doc_id:09d}"
-            add(tf, key + ".jpg", jpg)
+            add(tf, key + ".jpg",
+                encode_jpeg_baseline(w, h, _block_planes(spec, w, h)))
             add(tf, key + ".txt", text.encode("utf-8"))
         for tf in tars:
             tf.close()
-        with open(marker, "w") as fh:
-            fh.write(str(n_shards))
-    return out
+        return n_shards
+
+    return staged_dir(sf_dir, f"wds{n_shards}", write)
 
 
 def walk_wds_members(payload: bytes) -> dict[str, dict[str, bytes]]:
@@ -3905,12 +3092,7 @@ def webdataset_pairs(
     from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
     path = stage_webdataset_shards(sf_dir, n_shards)
-    shards = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "shard_*.tar")
-        .load(path)
-        .select(F.col("content").alias("payload"))
-    )
+    shards = _media_df(spark, path, "tar", "shard").select("payload")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -3918,16 +3100,10 @@ def webdataset_pairs(
             for payload in batch["payload"]:
                 for key, slot in walk_wds_members(payload).items():
                     w, h, rgb = decode_jpeg(slot["jpg"])
-                    rows.append(
-                        (
-                            int(key),
-                            w,
-                            h,
-                            int(sum(rgb)),
-                            hashlib.md5(rgb.hex().encode()).hexdigest(),
-                            slot["txt"].decode("utf-8"),
-                        )
-                    )
+                    rows.append((
+                        int(key), w, h, *_gates(rgb),
+                        slot["txt"].decode("utf-8"),
+                    ))
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -3970,46 +3146,18 @@ def multimodal_audio_resample(
     one Arrow crossing, no shuffle before the presentation sort."""
     from mapreducego_spark.functions.wavcodec import decode_wav
 
-    media = _wav_media_df(spark, sf_dir, n)
+    def row(mid: int, payload: bytes) -> tuple:
+        a = decode_wav(payload)[1].astype(np.int64)
+        n_out = a.shape[0] // 2
+        r = (a[: n_out * 2 : 2] + a[1 : n_out * 2 : 2] + 65536) // 2 - 32768
+        return (mid, a.shape[0], n_out, a.shape[1], *_sample_gates(r))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, s = decode_wav(bytes(p))
-                a = s.astype(np.int64)
-                nf, ch = a.shape
-                n_out = nf // 2
-                r = (a[: n_out * 2 : 2] + a[1 : n_out * 2 : 2]
-                     + 65536) // 2 - 32768
-                w = np.arange(n_out * ch, dtype=np.int64).reshape(
-                    n_out, ch
-                ) + 1
-                rows.append(
-                    (
-                        int(mid),
-                        nf,
-                        n_out,
-                        ch,
-                        int(r.sum()),
-                        int(r.min()),
-                        int(r.max()),
-                        int((w * r).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "in_frames", "out_frames", "channels",
-                    "r_sum", "r_min", "r_max", "r_wsum",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_wav_media(sf_dir, n), "wav")
+    return _decode_each(
+        media, row,
         "media_id long, in_frames long, out_frames long, channels long,"
         " r_sum long, r_min long, r_max long, r_wsum long",
-    ), "media_id")
+    )
 
 
 # --- r13 second batch: BMP tier -------------------------------------
@@ -4059,45 +3207,25 @@ def _bmp_fixture_params(i: int):
     }
 
 
-def stage_bmp_media(sf_dir: str, n: int = 150) -> str:
+def encode_bmp_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.bmpcodec import encode_bmp
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    # dir version B: r14 extended the family cycle (top-down, delta
-    # RLE) — the _STAGED marker must not satisfy old content
-    out = f"/tmp/spark_graft_media/{tag}_bmpB{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _bmp_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            if spec["family"] in ("rgb24", "td24"):
-                px = np.array(
-                    [[spec["rgb"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                blob = encode_bmp(
-                    w, h, px, topdown=spec["family"] == "td24"
-                )
-            else:
-                px = np.array(
-                    [[spec["idx"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                blob = encode_bmp(
-                    w, h, px,
-                    [spec["pal"](j) for j in range(spec["nc"])],
-                    rle=spec["family"] in ("rle8", "rle8d"),
-                    delta_sparse=spec["family"] == "rle8d",
-                )
-            with open(os.path.join(out, f"media_{i:05d}.bmp"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    spec = _bmp_fixture_params(i)
+    w, h, fam = spec["w"], spec["h"], spec["family"]
+    if fam in ("rgb24", "td24"):
+        return encode_bmp(
+            w, h, _grid(spec["rgb"], w, h), topdown=fam == "td24"
+        )
+    return encode_bmp(
+        w, h, _grid(spec["idx"], w, h),
+        [spec["pal"](j) for j in range(spec["nc"])],
+        rle=fam in ("rle8", "rle8d"),
+        delta_sparse=fam == "rle8d",
+    )
+
+
+def stage_bmp_media(sf_dir: str, n: int = 150) -> str:
+    return stage_items(sf_dir, "bmpB", n, "bmp", encode_bmp_fixture)
 
 
 def multimodal_bmp_decode(
@@ -4124,49 +3252,19 @@ def multimodal_bmp_decode(
     before the presentation sort."""
     from mapreducego_spark.functions.bmpcodec import decode_bmp
 
-    path = stage_bmp_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.bmp")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.bmp", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        meta, rgb = decode_bmp(payload)
+        return (
+            mid, meta["width"], meta["height"], meta["compression"],
+            *_gates(rgb),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, rgb = decode_bmp(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        meta["compression"],
-                        int(rgb.astype(np.int64).sum()),
-                        hashlib.md5(
-                            rgb.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "family",
-                    "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_bmp_media(sf_dir, n), "bmp")
+    return _decode_each(
+        media, row,
         "media_id long, width long, height long, family string,"
         " px_sum long, feature_hash string",
-    ), "media_id")
+    )
 
 
 def _tiff_fixture_params(i: int):
@@ -4209,50 +3307,28 @@ def _tiff_fixture_params(i: int):
     }
 
 
-def stage_tiff_media(sf_dir: str, n: int = 180) -> str:
+def encode_tiff_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.tiffcodec import encode_tiff
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_tiffD{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _tiff_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            fam = spec["family"]
-            pb = fam.endswith("pb")
-            lzw = "lzw" in fam
-            zip_ = "zip" in fam
-            if fam.startswith("rgb"):
-                px = np.array(
-                    [[spec["rgb"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                photometric = 2
-            else:
-                px = np.array(
-                    [[spec["gray"](x, y) for x in range(w)]
-                     for y in range(h)],
-                    dtype=np.uint8,
-                )
-                photometric = 1
-                if fam.startswith("white0"):
-                    # store the INVERTED samples; decode restores
-                    px = (255 - px.astype(np.int16)).astype(np.uint8)
-                    photometric = 0
-            blob = encode_tiff(
-                px, photometric, spec["byte_order"],
-                packbits=pb, rows_per_strip=spec["rps"],
-                lzw=lzw, deflate=zip_,
-                predictor=2 if fam.endswith("lzwp") else 1,
-            )
-            with open(os.path.join(out, f"media_{i:05d}.tif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    spec = _tiff_fixture_params(i)
+    w, h, fam = spec["w"], spec["h"], spec["family"]
+    if fam.startswith("rgb"):
+        px, photometric = _grid(spec["rgb"], w, h), 2
+    elif fam.startswith("white0"):
+        # store the INVERTED samples; decode restores
+        px, photometric = 255 - _grid(spec["gray"], w, h), 0
+    else:
+        px, photometric = _grid(spec["gray"], w, h), 1
+    return encode_tiff(
+        px, photometric, spec["byte_order"],
+        packbits=fam.endswith("pb"), rows_per_strip=spec["rps"],
+        lzw="lzw" in fam, deflate="zip" in fam,
+        predictor=2 if fam.endswith("lzwp") else 1,
+    )
+
+
+def stage_tiff_media(sf_dir: str, n: int = 180) -> str:
+    return stage_items(sf_dir, "tiffD", n, "tif", encode_tiff_fixture)
 
 
 def multimodal_tiff_decode(
@@ -4285,52 +3361,20 @@ def multimodal_tiff_decode(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.tiffcodec import decode_tiff
 
-    path = stage_tiff_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.tif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.tif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        meta, px = decode_tiff(payload)
+        return (
+            mid, meta["width"], meta["height"], meta["family"],
+            meta["byte_order"], meta["n_strips"], *_gates(px),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, px = decode_tiff(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        meta["family"],
-                        meta["byte_order"],
-                        meta["n_strips"],
-                        int(px.astype(np.int64).sum()),
-                        hashlib.md5(
-                            px.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "family",
-                    "byte_order", "n_strips", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_tiff_media(sf_dir, n), "tif")
+    return _decode_each(
+        media, row,
         "media_id long, width long, height long, family string,"
         " byte_order string, n_strips long, px_sum long,"
         " feature_hash string",
-    ), "media_id")
+    )
 
 
 def _webp_fixture_params(i: int):
@@ -4413,57 +3457,43 @@ def _webp_fixture_params(i: int):
     }
 
 
-def stage_webp_media(sf_dir: str, n: int = 162) -> str:
+def encode_webp_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.vp8lcodec import encode_vp8l
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_webpC{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _webp_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            px = np.array(
-                [[spec["rgba"](x, y) for x in range(w)]
-                 for y in range(h)],
-                dtype=np.uint8,
-            )
-            fam = spec["family"]
-            kwargs: dict = {}
-            if fam == "subgreen":
-                kwargs["transform"] = "subtract_green"
-            elif fam in ("pred", "predtr"):
-                kwargs.update(
-                    transform="predictor", tile_bits=2,
-                    predictor_mode_fn=spec["mode_fn"],
-                )
-            elif fam == "meta":
-                kwargs["meta"] = (2, spec["group_fn"])
-            elif fam == "ctrans":
-                kwargs.update(
-                    transform="color", tile_bits=2,
-                    color_cte_fn=spec["cte_fn"],
-                )
-            elif fam == "palette":
-                pal = []
-                for j in range(spec["n_pal"]):
-                    r = (i * 11 + j * 29) % 256
-                    g = (i * 13 + j * 31) % 256
-                    b = (i * 17 + j * 37) % 256
-                    a = (j * 7 + 1) % 256
-                    pal.append((a << 24) | (r << 16) | (g << 8) | b)
-                kwargs.update(transform="color_indexing", palette=pal)
-            elif fam == "lz77":
-                kwargs["lz77"] = True
-            elif fam == "cache":
-                kwargs["cache_bits"] = 6
-            blob = encode_vp8l(px, **kwargs)
-            with open(os.path.join(out, f"media_{i:05d}.webp"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    spec = _webp_fixture_params(i)
+    fam = spec["family"]
+    kwargs: dict = {}
+    if fam == "subgreen":
+        kwargs["transform"] = "subtract_green"
+    elif fam in ("pred", "predtr"):
+        kwargs.update(
+            transform="predictor", tile_bits=2,
+            predictor_mode_fn=spec["mode_fn"],
+        )
+    elif fam == "meta":
+        kwargs["meta"] = (2, spec["group_fn"])
+    elif fam == "ctrans":
+        kwargs.update(
+            transform="color", tile_bits=2, color_cte_fn=spec["cte_fn"],
+        )
+    elif fam == "palette":
+        pal = []
+        for j in range(spec["n_pal"]):
+            r = (i * 11 + j * 29) % 256
+            g = (i * 13 + j * 31) % 256
+            b = (i * 17 + j * 37) % 256
+            a = (j * 7 + 1) % 256
+            pal.append((a << 24) | (r << 16) | (g << 8) | b)
+        kwargs.update(transform="color_indexing", palette=pal)
+    elif fam == "lz77":
+        kwargs["lz77"] = True
+    elif fam == "cache":
+        kwargs["cache_bits"] = 6
+    return encode_vp8l(_grid(spec["rgba"], spec["w"], spec["h"]), **kwargs)
+
+
+def stage_webp_media(sf_dir: str, n: int = 162) -> str:
+    return stage_items(sf_dir, "webpC", n, "webp", encode_webp_fixture)
 
 
 def multimodal_webp_decode(
@@ -4496,52 +3526,20 @@ def multimodal_webp_decode(
     no shuffle before the presentation sort."""
     from mapreducego_spark.functions.vp8lcodec import decode_webp
 
-    path = stage_webp_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.webp")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.webp", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    def row(mid: int, payload: bytes) -> tuple:
+        meta, px = decode_webp(payload)
+        return (
+            mid, meta["width"], meta["height"], meta["transforms"],
+            meta["cache_bits"], meta["n_groups"], *_gates(px),
         )
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, px = decode_webp(bytes(p))
-                rows.append(
-                    (
-                        int(mid),
-                        meta["width"],
-                        meta["height"],
-                        meta["transforms"],
-                        meta["cache_bits"],
-                        meta["n_groups"],
-                        int(px.astype(np.int64).sum()),
-                        hashlib.md5(
-                            px.tobytes().hex().encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "transforms",
-                    "cache_bits", "n_groups", "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_webp_media(sf_dir, n), "webp")
+    return _decode_each(
+        media, row,
         "media_id long, width long, height long, transforms string,"
         " cache_bits long, n_groups long, px_sum long,"
         " feature_hash string",
-    ), "media_id")
+    )
 
 
 # -------------------------------------------------- MP3/MP4 meta tier
@@ -4620,89 +3618,50 @@ def _mp4_fixture_params(i: int) -> dict:
     }
 
 
-def stage_mp3_media(sf_dir: str, n: int = 240) -> str:
-    from mapreducego_spark.functions.mediameta import (
-        build_mp3,
-        build_mp3_vbr,
+def encode_mp3_fixture(i: int) -> bytes:
+    from mapreducego_spark.functions.mediameta import build_mp3, build_mp3_vbr
+
+    p = _mp3_fixture_params(i)
+    if p["vbr"]:
+        return build_mp3_vbr(
+            p["rate"], p["n_frames"], p["mode"], p["id3v2_pad"],
+            p["id3v1"], kind=p["vbr_kind"],
+            kbps_fn=lambda j: _MP3_KBPS_CYCLE[(i + 2 * j) % 14], seed=i,
+        )
+    return build_mp3(
+        p["kbps"], p["rate"], p["n_frames"], p["mode"], p["id3v2_pad"],
+        p["id3v1"], seed=i,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_mp3b{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _mp3_fixture_params(i)
-            if p["vbr"]:
-                data = build_mp3_vbr(
-                    p["rate"], p["n_frames"], p["mode"],
-                    p["id3v2_pad"], p["id3v1"], kind=p["vbr_kind"],
-                    kbps_fn=lambda j, i=i: _MP3_KBPS_CYCLE[(i + 2 * j) % 14],
-                    seed=i,
-                )
-            else:
-                data = build_mp3(
-                    p["kbps"], p["rate"], p["n_frames"], p["mode"],
-                    p["id3v2_pad"], p["id3v1"], seed=i,
-                )
-            with open(os.path.join(out, f"media_{i:05d}.mp3"), "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+
+def stage_mp3_media(sf_dir: str, n: int = 240) -> str:
+    return stage_items(sf_dir, "mp3b", n, "mp3", encode_mp3_fixture)
 
 
-def stage_mp4_media(sf_dir: str, n: int = 240) -> str:
+def encode_mp4_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.mediameta import (
         build_mp4,
         build_mp4_fragmented,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_mp4b{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _mp4_fixture_params(i)
-            acodec = None if p["acodec"] is None else p["acodec"].encode()
-            if p["fragmented"]:
-                data = build_mp4_fragmented(
-                    p["brand"].encode(), p["timescale"], p["width"],
-                    p["height"], p["vcodec"].encode(), acodec,
-                    p["v1_times"], p["fragments"], p["trex_default"],
-                    seed=i,
-                )
-            else:
-                data = build_mp4(
-                    p["brand"].encode(), p["timescale"], p["duration"],
-                    p["width"], p["height"], p["vcodec"].encode(),
-                    acodec, p["v1_times"], p["mdat_size"],
-                    mdat_largesize=p["mdat_largesize"],
-                    mdat_to_eof=p["mdat_to_eof"], seed=i,
-                )
-            with open(os.path.join(out, f"media_{i:05d}.mp4"), "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
-
-
-def _media_df(spark: SparkSession, path: str, ext: str) -> DataFrame:
-    # dir load + pathGlobFilter, never a glob-in-path: the glob form
-    # forces a driver-side expansion listing measured ~20x slower on
-    # large staged dirs (NOTES_r14, commit 900a1b4)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"media_*.{ext}")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), rf"media_(\d+)\.{ext}", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
+    p = _mp4_fixture_params(i)
+    acodec = None if p["acodec"] is None else p["acodec"].encode()
+    if p["fragmented"]:
+        return build_mp4_fragmented(
+            p["brand"].encode(), p["timescale"], p["width"], p["height"],
+            p["vcodec"].encode(), acodec, p["v1_times"], p["fragments"],
+            p["trex_default"], seed=i,
         )
+    return build_mp4(
+        p["brand"].encode(), p["timescale"], p["duration"], p["width"],
+        p["height"], p["vcodec"].encode(), acodec, p["v1_times"],
+        p["mdat_size"], mdat_largesize=p["mdat_largesize"],
+        mdat_to_eof=p["mdat_to_eof"], seed=i,
     )
+
+
+def stage_mp4_media(sf_dir: str, n: int = 240) -> str:
+    return stage_items(sf_dir, "mp4b", n, "mp4", encode_mp4_fixture)
 
 
 def multimodal_mp3_meta(
@@ -4732,36 +3691,13 @@ def multimodal_mp3_meta(
     from mapreducego_spark.functions.mediameta import parse_mp3_meta
 
     media = _media_df(spark, stage_mp3_media(sf_dir, n), "mp3")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = parse_mp3_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid), m["tag_bytes"], m["bitrate_kbps"],
-                        m["sample_rate"], m["channels"], m["n_frames"],
-                        m["audio_bytes"], m["vbr"], m["has_id3v1"],
-                        m["duration_ms"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "tag_bytes", "bitrate_kbps", "sample_rate",
-                    "channels", "n_frames", "audio_bytes", "vbr",
-                    "has_id3v1", "duration_ms",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return _fields_each(
+        media, parse_mp3_meta,
         "media_id long, tag_bytes long, bitrate_kbps long,"
         " sample_rate long, channels long, n_frames long,"
         " audio_bytes long, vbr boolean, has_id3v1 boolean,"
         " duration_ms long",
-    ), "media_id")
+    )
 
 
 def multimodal_mp4_meta(
@@ -4791,37 +3727,13 @@ def multimodal_mp4_meta(
     from mapreducego_spark.functions.mediameta import parse_mp4_meta
 
     media = _media_df(spark, stage_mp4_media(sf_dir, n), "mp4")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                m = parse_mp4_meta(bytes(p))
-                rows.append(
-                    (
-                        int(mid), m["brand"], m["timescale"], m["duration"],
-                        m["duration_ms"], m["n_tracks"], m["width"],
-                        m["height"], m["video_codec"], m["audio_codec"],
-                        m["fragmented"], m["n_fragments"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "brand", "timescale", "duration",
-                    "duration_ms", "n_tracks", "width", "height",
-                    "video_codec", "audio_codec", "fragmented",
-                    "n_fragments",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    return _fields_each(
+        media, parse_mp4_meta,
         "media_id long, brand string, timescale long, duration long,"
         " duration_ms long, n_tracks long, width long, height long,"
         " video_codec string, audio_codec string, fragmented boolean,"
         " n_fragments long",
-    ), "media_id")
+    )
 
 
 _ID3_FRAME_SPECS = (
@@ -4855,38 +3767,25 @@ def _mp3_tag_fixture_params(i: int) -> dict:
     }
 
 
-def stage_mp3_tag_media(sf_dir: str, n: int = 240) -> str:
-    from mapreducego_spark.functions.mediameta import (
-        _mp3_frame,
-        build_id3v2,
+def encode_mp3_tag_fixture(i: int) -> bytes:
+    from mapreducego_spark.functions.mediameta import _mp3_frame, build_id3v2
+
+    p = _mp3_tag_fixture_params(i)
+    raw = (
+        [("PRIV", b"owner\x00" + bytes((i + k) % 251 for k in range(20)))]
+        if p["priv"] else None
+    )
+    data = build_id3v2(
+        p["frames"], version=p["version"], pad=p["pad"], raw_frames=raw,
+    )
+    # one real CBR audio frame so the file IS an MP3
+    return data + _mp3_frame(
+        9, 0, 0, 0, lambda sz: bytes((i + k) % 251 for k in range(sz))
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_id3a{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            p = _mp3_tag_fixture_params(i)
-            raw = (
-                [("PRIV", b"owner\x00" + bytes((i + k) % 251
-                                               for k in range(20)))]
-                if p["priv"] else None
-            )
-            data = build_id3v2(
-                p["frames"], version=p["version"], pad=p["pad"],
-                raw_frames=raw,
-            )
-            # one real CBR audio frame so the file IS an MP3
-            data += _mp3_frame(
-                9, 0, 0, 0,
-                lambda sz, i=i: bytes((i + k) % 251 for k in range(sz)),
-            )
-            with open(os.path.join(out, f"media_{i:05d}.mp3"), "wb") as fh:
-                fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+
+def stage_mp3_tag_media(sf_dir: str, n: int = 240) -> str:
+    return stage_items(sf_dir, "id3a", n, "mp3", encode_mp3_tag_fixture)
 
 
 def multimodal_mp3_tags(
@@ -4913,34 +3812,19 @@ def multimodal_mp3_tags(
     before the presentation sort."""
     from mapreducego_spark.functions.mediameta import parse_id3v2_frames
 
-    media = _media_df(spark, stage_mp3_tag_media(sf_dir, n), "mp3")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                payload = bytes(p)
-                version = payload[3]
-                _, frames = parse_id3v2_frames(payload)
-                for j, fr in enumerate(frames):
-                    rows.append(
-                        (
-                            int(mid), version, j, fr["frame_id"],
-                            fr["encoding"], fr["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "tag_version", "frame_idx", "frame_id",
-                    "encoding", "text",
-                ],
+    def frames(mid: int, payload: bytes):
+        _, tag_frames = parse_id3v2_frames(payload)
+        for j, fr in enumerate(tag_frames):
+            yield (
+                mid, payload[3], j, fr["frame_id"], fr["encoding"], fr["text"]
             )
 
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_mp3_tag_media(sf_dir, n), "mp3")
+    return sort_once(_item_rows(
+        media, frames,
         "media_id long, tag_version long, frame_idx long,"
         " frame_id string, encoding long, text string",
+        fan_out=True,
     ), "media_id", "frame_idx")
 
 
@@ -4978,50 +3862,30 @@ def _gif_disposal_fixture_params(i: int):
     }
 
 
-def stage_gif_disposal_media(sf_dir: str, n: int = 120) -> str:
+def encode_gif_disposal_fixture(i: int) -> bytes:
     from mapreducego_spark.functions.gifcodec import encode_gif
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_gifdisp{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _gif_disposal_fixture_params(i)
-            w, h = spec["w"], spec["h"]
-            base = np.array(
-                [[spec["base"](x, y) for x in range(w)] for y in range(h)],
-                dtype=np.uint8,
-            )
-            x1, y1, w1, h1 = spec["r1"]
-            patch1 = np.array(
-                [[spec["p1"](dx, dy) for dx in range(w1)]
-                 for dy in range(h1)],
-                dtype=np.uint8,
-            )
-            x2, y2, w2, h2 = spec["r2"]
-            patch2 = np.array(
-                [[spec["p2"](dx, dy) for dx in range(w2)]
-                 for dy in range(h2)],
-                dtype=np.uint8,
-            )
-            frames = [
-                {"indices": base, "delay_cs": 2,
-                 "disposal": 2 if spec["wipe"] else 1},
-                {"indices": patch1, "left": x1, "top": y1,
-                 "delay_cs": 4, "transparent": 0, "disposal": 3},
-                {"indices": patch2, "left": x2, "top": y2,
-                 "delay_cs": 6, "disposal": 0},
-            ]
-            blob = encode_gif(
-                w, h, [spec["gpal"](j) for j in range(spec["nc"])],
-                frames, bg_index=1, loop=True,
-            )
-            with open(os.path.join(out, f"media_{i:05d}.gif"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    spec = _gif_disposal_fixture_params(i)
+    x1, y1, w1, h1 = spec["r1"]
+    x2, y2, w2, h2 = spec["r2"]
+    frames = [
+        {"indices": _grid(spec["base"], spec["w"], spec["h"]),
+         "delay_cs": 2, "disposal": 2 if spec["wipe"] else 1},
+        {"indices": _grid(spec["p1"], w1, h1), "left": x1, "top": y1,
+         "delay_cs": 4, "transparent": 0, "disposal": 3},
+        {"indices": _grid(spec["p2"], w2, h2), "left": x2, "top": y2,
+         "delay_cs": 6, "disposal": 0},
+    ]
+    return encode_gif(
+        spec["w"], spec["h"], [spec["gpal"](j) for j in range(spec["nc"])],
+        frames, bg_index=1, loop=True,
+    )
+
+
+def stage_gif_disposal_media(sf_dir: str, n: int = 120) -> str:
+    return stage_items(
+        sf_dir, "gifdisp", n, "gif", encode_gif_disposal_fixture
+    )
 
 
 def multimodal_gif_disposal(
@@ -5044,53 +3908,19 @@ def multimodal_gif_disposal(
     Scale shape: distributed scan, one Arrow crossing, bounded
     fan-out (3 rows/file), no shuffle before the presentation
     sort."""
-    from mapreducego_spark.functions.gifcodec import (
-        compose_frames,
-        decode_gif,
-    )
+    from mapreducego_spark.functions.gifcodec import compose_frames, decode_gif
 
-    path = stage_gif_disposal_media(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.gif")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.gif", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    def frames(mid: int, payload: bytes):
+        meta, fr = decode_gif(payload)
+        for f, canvas in enumerate(compose_frames(meta, fr)):
+            yield (mid, f, fr[f]["disposal"], *_gates(canvas))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                meta, frames = decode_gif(bytes(p))
-                for f, canvas in enumerate(compose_frames(meta, frames)):
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            frames[f]["disposal"],
-                            int(canvas.astype(np.int64).sum()),
-                            hashlib.md5(
-                                canvas.tobytes().hex().encode()
-                            ).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "disposal",
-                    "px_sum", "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_gif_disposal_media(sf_dir, n), "gif")
+    return sort_once(_item_rows(
+        media, frames,
         "media_id long, frame_idx long, disposal long,"
         " px_sum long, feature_hash string",
+        fan_out=True,
     ), "media_id", "frame_idx")
 
 
@@ -5127,40 +3957,27 @@ def _png_lowdepth_fixture(i: int):
     }
 
 
+def encode_png_lowdepth_fixture(i: int) -> bytes:
+    spec = _png_lowdepth_fixture(i)
+    w, h = spec["w"], spec["h"]
+    samples = bytes(spec["sample"](x, y) for y in range(h) for x in range(w))
+    if spec["kind"][0] == "g":
+        return encode_png_sub8(
+            w, h, 0, spec["depth"], samples, interlace=spec["interlace"],
+        )
+    pal = bytes(v for j in range(spec["mx"]) for v in spec["pal"](j))
+    trns = (
+        bytes(spec["trns"](j) for j in range(spec["tn"]))
+        if spec["tn"] else None
+    )
+    return encode_png_sub8(
+        w, h, 3, spec["depth"], samples, palette=pal, trns=trns,
+        interlace=spec["interlace"],
+    )
+
+
 def stage_png_lowdepth(sf_dir: str, n: int = 200) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pnglow{n}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        for i in range(n):
-            spec = _png_lowdepth_fixture(i)
-            w, h = spec["w"], spec["h"]
-            samples = bytes(
-                spec["sample"](x, y) for y in range(h) for x in range(w)
-            )
-            if spec["kind"][0] == "g":
-                blob = encode_png_sub8(
-                    w, h, 0, spec["depth"], samples,
-                    interlace=spec["interlace"],
-                )
-            else:
-                pal = bytes(
-                    v for j in range(spec["mx"]) for v in spec["pal"](j)
-                )
-                trns = (
-                    bytes(spec["trns"](j) for j in range(spec["tn"]))
-                    if spec["tn"] else None
-                )
-                blob = encode_png_sub8(
-                    w, h, 3, spec["depth"], samples, palette=pal,
-                    trns=trns, interlace=spec["interlace"],
-                )
-            with open(os.path.join(out, f"media_{i:05d}.png"), "wb") as fh:
-                fh.write(blob)
-        with open(marker, "w") as fh:
-            fh.write(str(n))
-    return out
+    return stage_items(sf_dir, "pnglow", n, "png", encode_png_lowdepth_fixture)
 
 
 def multimodal_png_lowdepth(
@@ -5181,48 +3998,9 @@ def multimodal_png_lowdepth(
 
     Scale shape: distributed scan, one Arrow crossing, no shuffle
     before the presentation sort."""
-    path = stage_png_lowdepth(sf_dir, n)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "media_*.png")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"media_(\d+)\.png", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.col("content").alias("payload"),
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                w, h, rgb, alpha = decode_png_rgba(bytes(p))
-                rgba = bytearray()
-                for k in range(w * h):
-                    rgba += rgb[3 * k : 3 * k + 3]
-                    rgba.append(alpha[k])
-                rows.append(
-                    (
-                        int(mid),
-                        w,
-                        h,
-                        int(sum(rgb)),
-                        int(sum(alpha)),
-                        hashlib.md5(bytes(rgba).hex().encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "a_sum",
-                    "feature_hash",
-                ],
-            )
-
-    return sort_once(media.mapInPandas(
-        run,
+    media = _media_df(spark, stage_png_lowdepth(sf_dir, n), "png")
+    return _decode_each(
+        media, lambda mid, p: _rgba_row(mid, *decode_png_rgba(p)),
         "media_id long, width long, height long, px_sum long,"
         " a_sum long, feature_hash string",
-    ), "media_id")
+    )

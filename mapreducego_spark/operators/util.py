@@ -1,4 +1,5 @@
-"""Cross-engine determinism helpers.
+"""Cross-engine determinism helpers, plus the media-fixture staging
+helpers every staged-file entry shares.
 
 The driver hash-compares Spark results against DuckDB. Floating-point
 SUMs are order-dependent (Spark sums per-partition then merges; DuckDB
@@ -9,6 +10,9 @@ produce bit-identical values.
 """
 
 from __future__ import annotations
+
+import os
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -111,8 +115,6 @@ def sort_once(df, *cols):
     execution (a perf regression, never a correctness one);
     tests/test_sort_once_probe.py pins the task-invocation count so
     the upgrade surfaces it loudly instead."""
-    import os
-
     mode = os.environ.get("SPARK_GRAFT_SORT_ONCE", "checkpoint")
     if mode == "orderby":
         return df.orderBy(*cols)
@@ -170,3 +172,46 @@ def spread_scan(df):
     if n_parts < target:
         return df.repartition(target)
     return df
+
+
+MEDIA_ROOT = "/tmp/spark_graft_media"
+
+
+def staged_dir(sf_dir: str, name: str, write: Callable[[str], int]) -> str:
+    """Fixture directory ``MEDIA_ROOT/<tag>_<name>``, filled once.
+
+    ``tag`` is the basename of ``sf_dir``. ``write(out)`` writes the
+    fixture files into ``out`` and returns how many it wrote; the
+    count then goes into a marker file, and a directory that has the
+    marker is returned as is. Staging is driver-side test plumbing (in
+    production media arrives as files) and idempotent.
+
+    The rule that follows from the marker: a change to the bytes a
+    fixture writes must rename its directory (bump the version in
+    ``name``, e.g. ``bmpB`` -> ``bmpC``). Otherwise a directory staged
+    by the old code keeps serving the old bytes. The digests in
+    tests/test_fixture_bytes.py catch a change that forgot to."""
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    out = os.path.join(MEDIA_ROOT, f"{tag}_{name}")
+    os.makedirs(out, exist_ok=True)
+    marker = os.path.join(out, "_STAGED")
+    if not os.path.exists(marker):
+        count = write(out)
+        with open(marker, "w") as fh:
+            fh.write(str(count))
+    return out
+
+
+def stage_items(
+    sf_dir: str, name: str, n: int, ext: str, encode: Callable[[int], bytes]
+) -> str:
+    """Stage ``n`` files ``media_{i:05d}.{ext}`` holding ``encode(i)``
+    into ``staged_dir(sf_dir, f"{name}{n}", ...)``."""
+
+    def write(out: str) -> int:
+        for i in range(n):
+            with open(os.path.join(out, f"media_{i:05d}.{ext}"), "wb") as fh:
+                fh.write(encode(i))
+        return n
+
+    return staged_dir(sf_dir, f"{name}{n}", write)

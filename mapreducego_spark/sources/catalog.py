@@ -18,6 +18,7 @@ from mapreducego_spark.operators.util import (
     merge_small_splits,
     sort_once,
     spread_scan,
+    staged_dir,
 )
 
 # The driver-provisioned star schema + LLM-pipeline tables
@@ -1342,14 +1343,7 @@ def stage_warc_archives(sf_dir: str, n_files: int = 16) -> str:
         gzip_member,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    # staging-dir suffix is the fixture VERSION: the _STAGED marker
-    # makes staging idempotent, so any change to the served HTML
-    # must bump it ("b" = the out-link list for warc_link_graph)
-    out = f"/tmp/spark_graft_media/{tag}_warcb{n_files}"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def write(out: str) -> int:
         import duckdb
 
         docs = duckdb.sql(
@@ -1383,9 +1377,9 @@ def stage_warc_archives(sf_dir: str, n_files: int = 16) -> str:
                 os.path.join(out, f"crawl_{f:04d}.warc.gz"), "wb"
             ) as fh:
                 fh.write(b"".join(parts[f]))
-        with open(marker, "w") as fh:
-            fh.write(str(n_files))
-    return out
+        return n_files
+
+    return staged_dir(sf_dir, f"warcb{n_files}", write)
 
 
 def warc_extract_text(
@@ -1604,19 +1598,14 @@ def stage_pdf_files(sf_dir: str) -> str:
     (xref, font) pair occurs: 0 = standard WinAnsi Type1,
     1 = Type1 with /Encoding /Differences remapping letter/digit
     codes to glyph names, 2 = Type0 CID font (Identity-H 2-byte
-    codes through a /ToUnicode CMap). Idempotent via the _STAGED
-    marker; the dir suffix is the fixture VERSION."""
+    codes through a /ToUnicode CMap)."""
     from mapreducego_spark.sources.pdfcodec import (
         append_incremental_update,
         build_pdf,
         render_page_content,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_pdfe"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def write(out: str) -> int:
         import duckdb
 
         docs = duckdb.sql(
@@ -1654,9 +1643,9 @@ def stage_pdf_files(sf_dir: str) -> str:
                     pdf = append_incremental_update(pdf, f"doc {doc_id}")
             with open(os.path.join(out, f"doc_{doc_id:07d}.pdf"), "wb") as fh:
                 fh.write(pdf)
-        with open(marker, "w") as fh:
-            fh.write(str(len(docs)))
-    return out
+        return len(docs)
+
+    return staged_dir(sf_dir, "pdfe", write)
 
 
 def pdf_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1781,15 +1770,10 @@ def stage_subtitle_files(sf_dir: str) -> str:
     reader's skip/id/settings paths all stay exercised). Cue k of a
     doc holds its tokens [6k, 6k+6) and runs from
     k*2000 + doc_id % 997 ms for 1500 + (k % 7)*100 ms — every
-    timestamp closed-form for the DuckDB oracle. Idempotent via the
-    _STAGED marker; the dir suffix is the fixture VERSION."""
+    timestamp closed-form for the DuckDB oracle."""
     from mapreducego_spark.sources.subtitlecodec import build_srt, build_vtt
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = f"/tmp/spark_graft_media/{tag}_suba"
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
+    def write(out: str) -> int:
         import duckdb
 
         docs = duckdb.sql(
@@ -1816,9 +1800,9 @@ def stage_subtitle_files(sf_dir: str) -> str:
             path = os.path.join(out, f"doc_{doc_id:07d}.{ext}")
             with open(path, "wb") as fh:
                 fh.write(data)
-        with open(marker, "w") as fh:
-            fh.write(str(len(docs)))
-    return out
+        return len(docs)
+
+    return staged_dir(sf_dir, "suba", write)
 
 
 def subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2569,3 +2569,29 @@ def test_tiff_structural_refusals_tiles_planar_predictor_order():
     # non-uint8 raster refuses at the encoder
     with pytest.raises(ValueError, match="uint8"):
         encode_tiff(g.astype(np.int32), 1)
+
+
+def test_raster_gates_match_the_per_byte_loop():
+    """The shared row helpers vectorize what each entry used to loop
+    over in Python; the loop form stays here as the reference."""
+    from mapreducego_spark.functions.multimodal import (
+        _gates,
+        _rgba_row,
+        decode_png_rgba,
+        encode_png_depth_fixture,
+    )
+
+    for i in range(8):
+        w, h, rgb, alpha = decode_png_rgba(encode_png_depth_fixture(i))
+        rgba = bytearray()
+        for k in range(w * h):
+            rgba += rgb[3 * k : 3 * k + 3]
+            rgba.append(alpha[k])
+        want = (
+            i, w, h, int(sum(rgb)), int(sum(alpha)),
+            hashlib.md5(bytes(rgba).hex().encode()).hexdigest(),
+        )
+        assert _rgba_row(i, w, h, rgb, alpha) == want
+        assert _gates(rgb) == (
+            int(sum(rgb)), hashlib.md5(rgb.hex().encode()).hexdigest()
+        )

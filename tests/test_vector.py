@@ -297,3 +297,26 @@ def test_ivfpq_recall_floor_and_exact_rerank_values(spark):
     assert [tuple(r) for r in vector_ann_ivfpq(spark, sf).collect()] == [
         tuple(r) for r in got_rows
     ]
+
+
+def test_lsh_fixture_dots_clear_the_sign_seam():
+    """dedup_embedding_lsh's oracle takes sketch bit p = sign(v .
+    plane_p) from a DuckDB SUM fold while the engine uses a BLAS
+    matmul. The two agree unless a dot lies within summation-reorder
+    error of zero; pin that no sf0.01 fixture dot does, so a fixture
+    that lands on the seam fails here by name instead of as an
+    opaque oracle hash mismatch."""
+    import pyarrow.parquet as pq
+
+    from mapreducego_spark.functions import vector as V
+    from tests.conftest import SF_ORACLE
+
+    emb = pq.read_table(f"{SF_ORACLE}/embeddings.parquet")
+    mat = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
+    dots = mat @ V._plane_matrix(V.EMB_DIMS, V.N_PLANES)
+    k = int(np.argmin(np.abs(dots)))
+    vec, plane = divmod(k, V.N_PLANES)
+    assert abs(dots.flat[k]) > 1e-12, (
+        f"vec_id {emb.column('vec_id')[vec]} . plane {plane} ="
+        f" {dots.flat[k]!r}: the LSH oracle's sign seam is hit"
+    )
