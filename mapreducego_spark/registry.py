@@ -205,23 +205,6 @@ def _triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count_suppliers(spark, sf_dir)
 
 
-# ORDERING NOTE (round 4): the round driver verifies the FIRST 50
-# entries of this dict, in insertion order; the dict is ordered by
-# verification NEED so every entry earns a driver row at most ~2
-# rounds stale. The r4 window (manifest in NOTES_r04.md):
-#   (1) the 3 stream sinks (red in r3, fixed this round — the fix
-#       must earn driver-green rows),
-#   (2) entries new or changed in r4 (upsert_documents,
-#       compact_documents, sql_wordcount_udf -> pandas_udf,
-#       dedup_incremental step caching),
-#   (3) the 7 never-driver-checked entries (q6/q15/repetition_profile
-#       + the rows-only approximate tier),
-#   (4) the 15 r1-only entries (3 rounds stale),
-#   (5) the 19 r2-only entries (2 rounds stale),
-#   (6) wordcount/mr_wordcount (r2-green, plan changed r3).
-# Behind the window: the r1+r2 twice-green stable tier, then the 47
-# entries green in CORRECTNESS_r03 (freshest rows rotate last).
-#
 # TPC-H coverage note (fixture-inexpressible queries): Q2, Q9, Q11,
 # Q16 and Q20 require the partsupp table, and Q12 requires
 # lineitem.l_shipmode/l_receiptdate — neither exists in the driver
@@ -229,12 +212,9 @@ def _triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schemas), so those six are intentionally absent, not gaps. Every
 # other TPC-H query shape is implemented.
 QUERIES: dict[str, QueryFn] = {
-    # -- (1) stream sinks: red in CORRECTNESS_r03 (staged-stream ts
-    # encoding bug), fixed + multi-batch in r4 ---------------------
     "stream_tumbling_sink": ST.stream_tumbling_sink,
     "stream_sliding_sink": ST.stream_sliding_sink,
     "stream_session_sink": ST.stream_session_sink,
-    # -- (2) new/changed in r4 -------------------------------------
     # MERGE and compaction promoted from pytest-only to oracle rows
     "upsert_documents": CAT.upsert_documents,
     "upsert_schema_evolution": CAT.upsert_documents_evolved,
@@ -247,8 +227,7 @@ QUERIES: dict[str, QueryFn] = {
     "rollup_incremental": RU.rollup_incremental,
     # per-language exact-quantile gate (corpus-relative filtering)
     "quality_gate_per_lang": _quality_gate,
-    # CCNet-style unigram log-prob (perplexity) quality score — new
-    # in r5, first in line for the r6 driver window
+    # CCNet-style unigram log-prob (perplexity) quality score
     "perplexity_score": lambda spark, sf_dir: T.perplexity_score(
         load_table(spark, sf_dir, "documents")
     ),
@@ -332,7 +311,6 @@ QUERIES: dict[str, QueryFn] = {
     "sql_wordcount_udf": MR.sql_wordcount_udf,
     # step-caching + optional-persist rework this round
     "dedup_incremental": D.dedup_incremental,
-    # -- (3) never driver-checked ----------------------------------
     "q6_forecast_revenue": R.q6_forecast_revenue,
     "q15_top_supplier": R.q15_top_supplier,
     "repetition_profile": _repetition_profile,
@@ -377,7 +355,6 @@ QUERIES: dict[str, QueryFn] = {
     # trained-quantizer ANN, not an oracle gap to close.
     "hybrid_rerank_ann": V.hybrid_rerank_ann,
     "contamination_report": _contamination_report,
-    # -- (4) r1-only: last driver row three rounds ago -------------
     "token_count": _token_count,
     "dedup_exact": D.dedup_exact,
     "vector_topk": V.vector_topk,
@@ -393,7 +370,6 @@ QUERIES: dict[str, QueryFn] = {
     "dedup_events": TW.dedup_events,
     "multimodal_meta": M.multimodal_meta,
     "vector_ann_lsh": V.vector_ann_lsh,  # rows-only (approximate)
-    # -- (5) r2-only: last driver row two rounds ago ---------------
     "map_functions": R.map_functions,
     "array_functions": R.array_functions,
     "string_functions2": R.string_functions2,
@@ -413,11 +389,8 @@ QUERIES: dict[str, QueryFn] = {
     "explode_outer": R.explode_outer_query,
     "set_intersect_all": R.set_intersect_all,
     "window_distribution": W.window_distribution,
-    # -- (6) r2-green; map stage re-planned in r3 ------------------
     "wordcount": _wordcount,
     "mr_wordcount": _mr_wordcount,
-    # ==== 50-entry window boundary ================================
-    # -- twice-green (r1+r2) stable tier ---------------------------
     "filter_project": R.filter_project,
     "computed_columns": R.computed_columns,
     "scalar_functions": R.scalar_functions,
@@ -446,7 +419,6 @@ QUERIES: dict[str, QueryFn] = {
     "window_rank": W.window_rank,
     "window_lag_lead": W.window_lag_lead,
     "window_running": W.window_running,
-    # -- green in CORRECTNESS_r03 (freshest rows rotate last) ------
     "window_range_frame": W.window_range_frame,
     "window_value_fns": W.window_value_fns,
     "tfidf_top_terms": _tfidf,
@@ -494,8 +466,6 @@ QUERIES: dict[str, QueryFn] = {
     "dup_ngram_profile": _dup_ngram_profile,
     "q8_market_share": R.q8_market_share,
     "q17_small_quantity": R.q17_small_quantity,
-    # -- (6) new in r5 (post-window; first in line for the r6
-    # window together with perplexity_score) ----------------------
     # salted two-phase exact COUNT(DISTINCT) — the aggregation-side
     # sibling of join_skew_salted (holistic aggs are the ones plain
     # map-side partials cannot de-skew)
@@ -831,944 +801,67 @@ QUERIES: dict[str, QueryFn] = {
     "copurchase_triples": R.copurchase_triples,
 }
 
-# ORDERING: the round driver verifies the FIRST 50 entries in
-# insertion order, so the dict is re-sequenced by verification need
-# each round (see _R10_WINDOW below the historical windows).
-# r9 window kept for the record (see VERDICT.md r9): staleness
-# proposal verbatim — bm25_topk + curriculum_oversample (first driver
-# rows), the 16 r4-stale, the 32 oldest r5-stale.
-_R9_WINDOW = [
-    # (1) the 2 never-driver-checked entries (r8 verdict item 1)
-    "curriculum_oversample",
-    "bm25_topk",
-    # (2) the 16 r4-stale entries, alphabetical
-    "stream_dedup_sink",
-    "stream_enrich_sink",
-    "stream_join_sink",
-    "stream_session_sink",
-    "stream_sliding_sink",
-    "stream_tumbling_sink",
-    "string_functions2",
-    "text_stats",
-    "token_count",
-    "upsert_documents",
-    "vector_ann_ivf",
-    "vector_ann_lsh",
-    "window_session",
-    "window_sliding",
-    "window_tumbling",
-    "xml_round_trip",
-    # (3) the 32 oldest r5-stale entries, alphabetical
-    "agg_approx_distinct",
-    "agg_basic",
-    "agg_collect",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_histogram",
-    "agg_minmax_by",
-    "agg_percentile_approx",
-    "agg_percentiles",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "agg_unpivot",
-    "computed_columns",
-    "decontaminate_embedding",
-    "dedup_spans",
-    "distinct_rows",
-    "explode_outer",
-    "filter_project",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_full_outer",
-    "join_inner",
-    "join_left_outer",
-    "join_semi",
-    "join_theta",
-    "json_extract",
-    "knn_label_vote",
-    "mr_wordcount",
-    "null_functions",
-    "pagerank",
+# Each round's correctness run (CORRECTNESS_r*.json) verifies the
+# FIRST 50 entries of QUERIES in insertion order. _VERIFY_FIRST names
+# them: the proposal `python tools/staleness.py` prints (never-checked
+# entries first, then the oldest CORRECTNESS_r*.json rows), pasted
+# verbatim and refreshed each round. The rest keep the literal's
+# order above.
+_VERIFY_FIRST = [
+    "multimodal_audio_stats",  # r12
+    "multimodal_decode",  # r12
+    "multimodal_dedup",  # r12
+    "multimodal_jpeg_decode_422",  # r12
+    "multimodal_jpeg_decode_progressive",  # r12
+    "multimodal_jpeg_exif",  # r12
+    "multimodal_png_variants",  # r12
+    "nb_classify",  # r12
+    "outlier_iqr",  # r12
+    "parquet_merge_schema",  # r12
+    "perplexity_bigram",  # r12
+    "perplexity_score",  # r12
+    "prepare_corpus",  # r12
+    "quantile_normalize",  # r12
+    "ri_orphans",  # r12
+    "rrf_fusion",  # r12
+    "running_balance",  # r12
+    "scd2_history",  # r12
+    "session_paths",  # r12
+    "shortest_paths",  # r12
+    "skew_report",  # r12
+    "skyline_offers",  # r12
+    "snapshot_diff",  # r12
+    "split_no_leakage",  # r12
+    "stream_upsert_sink",  # r12
+    "trend_fit",  # r12
+    "triangle_count",  # r12
+    "weighted_paths",  # r12
+    "zorder_key",  # r12
+    "join_asof_forward",  # r13
+    "join_asof_nearest",  # r13
+    "join_right_outer",  # r13
+    "join_skew_salted",  # r13
+    "json_rescue",  # r13
+    "json_round_trip",  # r13
+    "lang_id",  # r13
+    "map_functions",  # r13
+    "multimodal_audio_formats",  # r13
+    "multimodal_audio_loudest_window",  # r13
+    "multimodal_decode_oriented",  # r13
+    "multimodal_gif_decode",  # r13
+    "multimodal_gif_frames",  # r13
+    "multimodal_meta",  # r13
+    "multimodal_png_depth",  # r13
+    "multimodal_resize_box",  # r13
+    "multimodal_video_audio",  # r13
+    "multimodal_video_frames",  # r13
+    "multimodal_video_scenes",  # r13
+    "nest_order_lines",  # r13
+    "ngram_containment",  # r13
 ]
-assert len(_R9_WINDOW) == 50, len(_R9_WINDOW)
-
-# r8 window kept for the record (see NOTES_r08.md). The r8 window was
-# tools/staleness.py's proposal taken VERBATIM (the r7 verdict's
-# demand): the 13 entries that have
-# never had a driver CORRECTNESS row (incl. json_rescue and
-# prepare_corpus_mixed, which the r7 deferral note below omitted —
-# both new in r7, neither in _R7_WINDOW), then all 11 r3-stale
-# entries, then the 26 oldest r4-stale entries alphabetically.
-# After this window the max staleness is r4 and nothing shipped
-# BEFORE r8 is never-checked. Deferred to the r9 window (the ONLY
-# never-driver-checked entries after this round, stated here so the
-# staleness report and prose cannot diverge again): bm25_topk and
-# curriculum_oversample, both NEW in r8 after the window was frozen —
-# each oracle-green in the regenerated full VERIFY_LOCAL and pinned
-# by a serial-reference / algebraic-law pytest.
-_R8_WINDOW = [
-    # (1) the 13 never-driver-checked entries (r7 verdict item 1)
-    "vector_ann_pq",
-    "vector_ann_ivfpq",
-    "fuzzy_match_blocked",
-    "tfidf_cosine_pairs",
-    "ngram_containment",
-    "nest_order_lines",
-    "stream_left_join_sink",
-    "stream_funnel_sink",
-    "sketch_active_users",
-    "curriculum_mix",
-    "prepare_corpus_mixed",
-    "json_rescue",
-    "join_asof_nearest",
-    # (2) the 11 r3-stale entries
-    "quality_filter",
-    "sample_deterministic",
-    "sample_stratified",
-    "sample_weighted",
-    "sessionize",
-    "simhash",
-    "tfidf_top_terms",
-    "topk_per_group",
-    "udaf_revenue_cents",
-    "window_range_frame",
-    "window_value_fns",
-    # (3) the 26 oldest r4-stale entries, alphabetical
-    "agg_pivot",
-    "array_functions",
-    "compact_documents",
-    "csv_round_trip",
-    "date_functions",
-    "dedup_embedding_lsh",
-    "dedup_events",
-    "dedup_exact",
-    "dedup_fingerprint",
-    "fingerprint",
-    "join_asof_forward",
-    "join_right_outer",
-    "join_skew_salted",
-    "json_round_trip",
-    "lang_id",
-    "map_functions",
-    "multimodal_meta",
-    "orc_round_trip",
-    "profile_table",
-    "q15_top_supplier",
-    "q6_forecast_revenue",
-    "quality_gate_per_lang",
-    "quality_score",
-    "repetition_profile",
-    "rollup_incremental",
-    "sql_wordcount_udf",
-]
-assert len(_R8_WINDOW) == 50, len(_R8_WINDOW)
-
-# r7 window kept for the record (see NOTES_r07.md). r7 closed most of
-# the driver-evidence gap: 53 registry
-# entries had NO CORRECTNESS_r* row anywhere (window rotation math;
-# verified against the union of CORRECTNESS_r01-r06 keys). The r7
-# window =
-#   (1) multimodal_decode (new in r7: real stdlib PNG decode);
-#   (2) the 17 entries the r6 verdict flagged as never-driver-checked
-#       AND absent from the committed VERIFY_LOCAL;
-#   (3) the 6 entries whose implementation changed in r7
-#       (jaccard_prefix_join mid-prefix/integer-id rewrite;
-#       join_asof_tolerance microsecond gap; the minhash family's
-#       unrounded threshold compare: dedup_minhash, dedup_clusters,
-#       dedup_incremental, split_no_leakage — kfold_split, also
-#       threshold-touched, is already in (4); quantile_normalize and
-#       fuzzy_match_snm, two-phase-rank rewrites, are in (2)/(4));
-#   (4) 24 more never-checked entries, alphabetical.
-# Deferred to r8 (the only never-checked entries left after this
-# window): vector_ann_pq, vector_ann_ivfpq, sketch_active_users
-# (rows-only by design, pinned by recall/error-floor pytests) and
-# fuzzy_match_blocked, tfidf_cosine_pairs, ngram_containment,
-# nest_order_lines, stream_left_join_sink, stream_funnel_sink (all
-# green in the committed full VERIFY_LOCAL regenerated this round).
-_R7_WINDOW = [
-    # (1) new in r7
-    "multimodal_decode",
-    # (2) the 17 never-checked flagged by the r6 verdict
-    "bpe_train",
-    "bpe_apply",
-    "dedup_eval",
-    "multimodal_dedup",
-    "copurchase_triples",
-    "nb_classify",
-    "cms_heavy_hitters",
-    "shortest_paths",
-    "weighted_paths",
-    "scd2_history",
-    "hist_equi_depth",
-    "ivm_join_view",
-    "rrf_fusion",
-    "attribution_last_touch",
-    "concurrent_events",
-    "skyline_offers",
-    "ab_test_lift",
-    # (3) changed in r7
-    "jaccard_prefix_join",
-    "join_asof_tolerance",
-    "dedup_minhash",
-    "dedup_clusters",
-    "dedup_incremental",
-    "split_no_leakage",
-    # (2)/(4) never-checked, rewritten in r7
-    "quantile_normalize",
-    "fuzzy_match_snm",
-    # (4) never-checked, alphabetical
-    "active_users_rolling",
-    "agg_skew_salted",
-    "bitmap_distinct",
-    "cdc_apply",
-    "clustering_coefficient",
-    "copurchase_pairs",
-    "dedup_vs_reference",
-    "gapfill_linear",
-    "kfold_split",
-    "label_centroids",
-    "outlier_iqr",
-    "parquet_merge_schema",
-    "perplexity_bigram",
-    "perplexity_score",
-    "prepare_corpus",
-    "ri_orphans",
-    "running_balance",
-    "session_paths",
-    "skew_report",
-    "snapshot_diff",
-    "stream_upsert_sink",
-    "trend_fit",
-    "triangle_count",
-    "zorder_key",
-]
-assert len(_R7_WINDOW) == 50, len(_R7_WINDOW)
-
-# r6 window kept for the record (see NOTES_r06.md). r6 window =
-#   (1) the 8 NEW r6 entries + the 4 whose implementation changed in
-#       r6 (jaccard_prefix_join plan rewrite + unrounded threshold,
-#       ngram_jaccard unrounded threshold, udtf_sentences space-only
-#       strip, validate_quarantine input guards);
-#   (2) 34 of the 46 entries whose last driver row is from r3 — the
-#       12 deferred to r7 (quality_filter, sample_deterministic,
-#       sample_stratified, sample_weighted, sessionize, simhash,
-#       split_no_leakage, tfidf_top_terms, topk_per_group,
-#       udaf_revenue_cents, window_range_frame, window_value_fns)
-#       are the only entries that will then be older than r4.
-_R6_WINDOW = [
-    # (1) new in r6
-    "corr_matrix",
-    "outlier_mad",
-    "mutual_information",
-    "entropy_score",
-    "vocab_coverage",
-    "source_cap",
-    "scd2_apply",
-    "kcore_peel",
-    "join_asof_tolerance",
-    "vector_range",
-    "winsorize",
-    "mode_per_group",
-    # (1) changed in r6
-    "jaccard_prefix_join",
-    "ngram_jaccard",
-    "udtf_sentences",
-    "validate_quarantine",
-    # (2) r3-stale, alphabetical
-    "agg_stats",
-    "chunk_documents",
-    "cohort_retention",
-    "corpus_clean",
-    "decontaminate",
-    "dedup_clusters",
-    "dedup_embedding",
-    "dedup_minhash",
-    "doc_grep",
-    "dup_ngram_profile",
-    "event_transitions",
-    "funnel_conversion",
-    "gapfill_locf",
-    "heavy_hitters",
-    "inverted_index",
-    "job_wordcount_files",
-    "join_range_binned",
-    "multimodal_features",
-    "multimodal_frames",
-    "pack_shards",
-    "pii_scrub",
-    "q10_returned_items",
-    "q13_custdist",
-    "q14_promo_revenue",
-    "q17_small_quantity",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q21_waiting_supplier",
-    "q22_cold_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-]
-assert len(_R6_WINDOW) == 50, len(_R6_WINDOW)
-# The r10 window is tools/staleness.py's proposal taken VERBATIM
-# (the r9 verdict's demand #2): the 6 entries that have never had a
-# driver CORRECTNESS row (kmeans_embed, semantic_dedup,
-# dedup_keep_best, hard_negatives, contamination_report,
-# multimodal_jpeg_meta — all new in r9 after _R9_WINDOW froze; the r9
-# round skipped tools/end_of_round.py so their full-verify evidence
-# only landed in r10's regenerated artifacts), then the FOUR entries
-# NEW IN R10 ITSELF (multimodal_jpeg_decode, mine_training_pairs,
-# hybrid_rerank, mine_image_text_pairs — the
-# window is no longer frozen before the round's capability work, so
-# new entries get their driver row in the SAME round and the
-# "never-driver-checked" deferral list dies here), then the 18
-# r5-stale entries, then the 22 oldest r6-stale entries
-# alphabetically (ngram_jaccard, outlier_mad, pack_shards, and
-# pii_scrub yield their slots to the r10-new entries; max staleness
-# after this window stays r6).
-_R10_WINDOW = [
-    # (1) the 6 never-driver-checked entries (r9 verdict item 2)
-    "kmeans_embed",
-    "semantic_dedup",
-    "dedup_keep_best",
-    "hard_negatives",
-    "contamination_report",
-    "multimodal_jpeg_meta",
-    # (2) the 4 entries new in r10 — driver rows in their birth round
-    "multimodal_jpeg_decode",
-    "mine_training_pairs",
-    "hybrid_rerank",
-    "mine_image_text_pairs",
-    # (3) the 18 r5-stale entries, alphabetical
-    "scalar_functions",
-    "scalar_subquery",
-    "set_except",
-    "set_intersect",
-    "set_intersect_all",
-    "set_union",
-    "set_union_all_counts",
-    "simhash_pairs",
-    "sort_global",
-    "stream_stateful_totals",
-    "topk",
-    "upsert_schema_evolution",
-    "vector_topk",
-    "window_distribution",
-    "window_lag_lead",
-    "window_rank",
-    "window_running",
-    "wordcount",
-    # (4) the 22 oldest r6-stale entries, alphabetical
-    "agg_stats",
-    "chunk_documents",
-    "cohort_retention",
-    "corpus_clean",
-    "corr_matrix",
-    "decontaminate",
-    "dedup_embedding",
-    "doc_grep",
-    "dup_ngram_profile",
-    "entropy_score",
-    "event_transitions",
-    "funnel_conversion",
-    "gapfill_locf",
-    "heavy_hitters",
-    "inverted_index",
-    "job_wordcount_files",
-    "join_range_binned",
-    "kcore_peel",
-    "mode_per_group",
-    "multimodal_features",
-    "multimodal_frames",
-    "mutual_information",
-]
-assert len(_R10_WINDOW) == 50, len(_R10_WINDOW)
-
-# The r11 window is tools/staleness.py's proposal taken VERBATIM
-# (the r10 verdict's demand #1): the SIX entries new in r11 itself
-# (multimodal_jpeg_decode_420, multimodal_jpeg_decode_rst,
-# hybrid_rerank_ann, avro_round_trip, avro_schema_evolution,
-# mine_image_text_pairs_semantic — driver rows in their birth round,
-# the standing policy since r10), then the 24 r6-stale entries
-# (the TPC-H suite tail + the r6 analytics batch), then the 20
-# oldest r7-stale entries alphabetically (hist_equi_depth and
-# ivm_join_view yield their slots to the later-round additions,
-# exactly as ngram_jaccard's batch did in r10). Max staleness after
-# this window: r7.
-_R11_WINDOW = [
-    # (1) new in r11 — driver rows in their birth round
-    "avro_round_trip",
-    "avro_schema_evolution",
-    "hybrid_rerank_ann",
-    "multimodal_jpeg_decode_420",
-    "multimodal_jpeg_decode_rst",
-    "mine_image_text_pairs_semantic",
-    # (2) the 24 r6-stale entries, alphabetical
-    "ngram_jaccard",
-    "outlier_mad",
-    "pack_shards",
-    "pii_scrub",
-    "q10_returned_items",
-    "q13_custdist",
-    "q14_promo_revenue",
-    "q17_small_quantity",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q21_waiting_supplier",
-    "q22_cold_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "scd2_apply",
-    "source_cap",
-    "udtf_sentences",
-    "validate_quarantine",
-    "vector_range",
-    "vocab_coverage",
-    "winsorize",
-    # (3) the 20 oldest r7-stale entries, alphabetical
-    "ab_test_lift",
-    "active_users_rolling",
-    "agg_skew_salted",
-    "attribution_last_touch",
-    "bitmap_distinct",
-    "bpe_apply",
-    "bpe_train",
-    "cdc_apply",
-    "clustering_coefficient",
-    "cms_heavy_hitters",
-    "concurrent_events",
-    "copurchase_pairs",
-    "copurchase_triples",
-    "dedup_clusters",
-    "dedup_eval",
-    "dedup_incremental",
-    "dedup_minhash",
-    "dedup_vs_reference",
-    "fuzzy_match_snm",
-    "gapfill_linear",
-]
-assert len(_R11_WINDOW) == 50, len(_R11_WINDOW)
-
-# The r12 window is tools/staleness.py's proposal with the standing
-# birth-round policy applied: the EIGHT entries new in r12 itself
-# (multimodal_jpeg_decode_progressive, multimodal_jpeg_decode_422,
-# avro_logical_types, multimodal_audio_meta, multimodal_audio_stats,
-# multimodal_audio_loudest_window, multimodal_png_variants,
-# multimodal_jpeg_exif — driver rows in their birth round), then ALL
-# 30 r7-stale entries
-# (the r11 verdict's named list, verbatim), then the 12 oldest
-# r8-stale entries alphabetically (join_asof_forward,
-# join_asof_nearest, join_right_outer, join_skew_salted,
-# json_rescue, json_round_trip, lang_id, map_functions yield their
-# slots to the new entries, exactly as hist_equi_depth/ivm_join_view
-# did in r11). Max staleness after this window: r8.
-_R12_WINDOW = [
-    # (1) new in r12 — driver rows in their birth round
-    "avro_logical_types",
-    "multimodal_audio_loudest_window",
-    "multimodal_audio_meta",
-    "multimodal_audio_stats",
-    "multimodal_jpeg_decode_422",
-    "multimodal_jpeg_decode_progressive",
-    "multimodal_jpeg_exif",
-    "multimodal_png_variants",
-    # (2) the 30 r7-stale entries, alphabetical
-    "hist_equi_depth",
-    "ivm_join_view",
-    "jaccard_prefix_join",
-    "join_asof_tolerance",
-    "kfold_split",
-    "label_centroids",
-    "multimodal_decode",
-    "multimodal_dedup",
-    "nb_classify",
-    "outlier_iqr",
-    "parquet_merge_schema",
-    "perplexity_bigram",
-    "perplexity_score",
-    "prepare_corpus",
-    "quantile_normalize",
-    "ri_orphans",
-    "rrf_fusion",
-    "running_balance",
-    "scd2_history",
-    "session_paths",
-    "shortest_paths",
-    "skew_report",
-    "skyline_offers",
-    "snapshot_diff",
-    "split_no_leakage",
-    "stream_upsert_sink",
-    "trend_fit",
-    "triangle_count",
-    "weighted_paths",
-    "zorder_key",
-    # (3) the 12 oldest r8-stale entries, alphabetical
-    "agg_pivot",
-    "array_functions",
-    "compact_documents",
-    "csv_round_trip",
-    "curriculum_mix",
-    "date_functions",
-    "dedup_embedding_lsh",
-    "dedup_events",
-    "dedup_exact",
-    "dedup_fingerprint",
-    "fingerprint",
-    "fuzzy_match_blocked",
-]
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-
-# The r13 window is the r12 verdict's demand #2 with the standing
-# policies applied: the TEN entries new in r13 itself
-# (multimodal_audio_formats, multimodal_decode_oriented,
-# multimodal_gif_decode, multimodal_gif_frames,
-# multimodal_png_depth, multimodal_resize_box,
-# multimodal_video_audio, multimodal_video_frames,
-# multimodal_video_scenes, warc_extract_text — driver rows in their
-# birth round), the TWO entries r13 changed
-# (avro_logical_types — the r12 verdict's #1, re-proving the
-# unix_micros/epoch-day presentation fix against the driver's own
-# hash; multimodal_audio_loudest_window — windows re-cut to 10 ms so
-# the argmax is non-vacuous, which changes its output), then ALL 38
-# r8-stale entries (the verdict's named list, verbatim). The
-# new/changed entries displace all 11 of the verdict's r9 slots,
-# exactly the "keeping birth-round slots for anything new"
-# carve-out. Max staleness after this window: r9.
-_R13_WINDOW = [
-    # (1) new in r13 — driver rows in their birth round
-    "multimodal_audio_formats",
-    "multimodal_decode_oriented",
-    "multimodal_gif_decode",
-    "multimodal_gif_frames",
-    "multimodal_png_depth",
-    "multimodal_resize_box",
-    "multimodal_video_audio",
-    "multimodal_video_frames",
-    "multimodal_video_scenes",
-    "warc_extract_text",
-    # (2) changed in r13 — re-prove under the driver's own gate
-    "avro_logical_types",
-    "multimodal_audio_loudest_window",
-    # (3) the 38 r8-stale entries, alphabetical (verdict list)
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_right_outer",
-    "join_skew_salted",
-    "json_rescue",
-    "json_round_trip",
-    "lang_id",
-    "map_functions",
-    "multimodal_meta",
-    "nest_order_lines",
-    "ngram_containment",
-    "orc_round_trip",
-    "prepare_corpus_mixed",
-    "profile_table",
-    "q15_top_supplier",
-    "q6_forecast_revenue",
-    "quality_filter",
-    "quality_gate_per_lang",
-    "quality_score",
-    "repetition_profile",
-    "rollup_incremental",
-    "sample_deterministic",
-    "sample_stratified",
-    "sample_weighted",
-    "sessionize",
-    "simhash",
-    "sketch_active_users",
-    "sql_wordcount_udf",
-    "stream_funnel_sink",
-    "stream_left_join_sink",
-    "tfidf_cosine_pairs",
-    "tfidf_top_terms",
-    "topk_per_group",
-    "udaf_revenue_cents",
-    "vector_ann_ivfpq",
-    "vector_ann_pq",
-    "window_range_frame",
-    "window_value_fns",
-]
-assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-# NOTE (r13 ADVICE): the comment above says "TEN entries new in r13"
-# — the four later second-batch entries (webdataset_pairs,
-# multimodal_audio_resample, warc_link_graph, multimodal_bmp_decode)
-# were committed after this window froze and never got birth-round
-# slots; the r14 window below leads with them, per the r13 verdict
-# demand #3.
-
-# The r14 window is the r13 verdict's demand #2 with the standing
-# policies applied: the 4 entries that have NEVER had a driver row
-# (born after the r13 window froze; multimodal_bmp_decode also
-# CHANGED in r14 — families extended), avro_logical_types (the r13
-# verdict's #1 — re-proving the amt_milli BIGINT presentation under
-# the driver's own hash), the SEVEN entries new in r14 itself
-# (pdf_extract_text, snapshot_time_travel, snapshot_changes,
-# multimodal_mp3_meta, multimodal_mp4_meta, multimodal_gif_disposal,
-# multimodal_png_lowdepth — driver rows in their birth round), then
-# the 38 alphabetically-first of the 50 r9-stale entries (the
-# birth-round slots displace from the r9 tail, exactly the
-# carve-out r13 applied). Max staleness after this window: the 12
-# remaining r9 entries (stream_sliding_sink, stream_tumbling_sink,
-# string_functions2, text_stats, token_count, upsert_documents,
-# vector_ann_ivf, vector_ann_lsh, window_session, window_sliding,
-# window_tumbling, xml_round_trip) — r15 leads with them.
-_R14_WINDOW = [
-    # (1) never driver-tested (r13 second batch, no slot) — first
-    "webdataset_pairs",
-    "multimodal_audio_resample",
-    "warc_link_graph",
-    "multimodal_bmp_decode",
-    # (2) changed in r14 — re-prove under the driver's own gate
-    "avro_logical_types",
-    # (3) new in r14 — driver rows in their birth round
-    "pdf_extract_text",
-    "snapshot_time_travel",
-    "multimodal_mp3_meta",
-    "multimodal_mp4_meta",
-    "multimodal_gif_disposal",
-    "multimodal_png_lowdepth",
-    "snapshot_changes",
-    # multimodal_bmp_decode above also CHANGED in r14 (families
-    # extended with top-down + delta-RLE) — already in slot (1)
-    # (4) the 38 alphabetically-first r9-stale entries
-    "agg_approx_distinct",
-    "agg_basic",
-    "agg_collect",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_histogram",
-    "agg_minmax_by",
-    "agg_percentile_approx",
-    "agg_percentiles",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "agg_unpivot",
-    "bm25_topk",
-    "computed_columns",
-    "curriculum_oversample",
-    "decontaminate_embedding",
-    "dedup_spans",
-    "distinct_rows",
-    "explode_outer",
-    "filter_project",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_full_outer",
-    "join_inner",
-    "join_left_outer",
-    "join_semi",
-    "join_theta",
-    "json_extract",
-    "knn_label_vote",
-    "mr_wordcount",
-    "null_functions",
-    "pagerank",
-    "stream_dedup_sink",
-    "stream_enrich_sink",
-    "stream_join_sink",
-    "stream_session_sink",
-]
-assert len(_R14_WINDOW) == 50, len(_R14_WINDOW)
-
-# The r15 window is tools/staleness.py's proposal with the standing
-# changed-entry carve-out: (1) snapshot_append, NEW in r15 (the
-# manifest-commit tier — birth-round slot); (2) the 12 r9-stale
-# entries the r14 verdict demand #1 names — after them every
-# registry entry is <= r10; (3) the FIVE entries whose code changed
-# in r15 and must re-prove under the driver's own hash
-# (pdf_extract_text: +xref_form column + 3-form fixtures;
-# multimodal_mp3_meta: +vbr column + VBR fixtures;
-# multimodal_mp4_meta: +fragmented/n_fragments + fMP4 fixtures;
-# snapshot_time_travel + snapshot_changes: the commit protocol
-# under them changed — log-is-commit-point, atomic log publish);
-# (4) the 30 alphabetically-first r10-stale entries (32 minus the
-# two slots the r15 births displaced; the displaced tail
-# scalar_subquery..set_union waits for r16). Max staleness after
-# this window: r10.
-_R15_WINDOW = [
-    # (1) never driver-tested (new in r15; subtitle_cues and
-    # multimodal_mp3_tags displace scalar_functions and
-    # mutual_information from the r10 block — they wait for r16
-    # with scalar_subquery..set_union)
-    "snapshot_append",
-    "subtitle_cues",
-    "multimodal_mp3_tags",
-    # (2) the 12 r9-stale entries — the oldest driver evidence
-    "stream_sliding_sink",
-    "stream_tumbling_sink",
-    "string_functions2",
-    "text_stats",
-    "token_count",
-    "upsert_documents",
-    "vector_ann_ivf",
-    "vector_ann_lsh",
-    "window_session",
-    "window_sliding",
-    "window_tumbling",
-    "xml_round_trip",
-    # (3) changed in r15 — re-prove under the driver's own gate
-    "pdf_extract_text",
-    "multimodal_mp3_meta",
-    "multimodal_mp4_meta",
-    "snapshot_time_travel",
-    "snapshot_changes",
-    # (4) the 30 alphabetically-first r10-stale entries (32 minus
-    # the two slots displaced by the r15 births)
-    "agg_stats",
-    "chunk_documents",
-    "cohort_retention",
-    "contamination_report",
-    "corpus_clean",
-    "corr_matrix",
-    "decontaminate",
-    "dedup_embedding",
-    "dedup_keep_best",
-    "doc_grep",
-    "dup_ngram_profile",
-    "entropy_score",
-    "event_transitions",
-    "funnel_conversion",
-    "gapfill_locf",
-    "hard_negatives",
-    "heavy_hitters",
-    "hybrid_rerank",
-    "inverted_index",
-    "job_wordcount_files",
-    "join_range_binned",
-    "kcore_peel",
-    "kmeans_embed",
-    "mine_image_text_pairs",
-    "mine_training_pairs",
-    "mode_per_group",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_jpeg_decode",
-    "multimodal_jpeg_meta",
-]
-assert len(_R15_WINDOW) == 50, len(_R15_WINDOW)
-QUERIES = {name: QUERIES[name] for name in _R15_WINDOW} | {
-    name: fn for name, fn in QUERIES.items() if name not in set(_R15_WINDOW)
+QUERIES = {name: QUERIES[name] for name in _VERIFY_FIRST} | {
+    name: fn for name, fn in QUERIES.items() if name not in _VERIFY_FIRST
 }
-
-
-# The r16 window, standing policies applied: (1) the three r16
-# births (no driver row yet); (2) the FIVE entries whose code or
-# output schema changed in r16 (pdf_extract_text: +font_form column
-# + font-cycled fixtures; snapshot_append / snapshot_time_travel /
-# snapshot_changes: the commit protocol under them changed —
-# token-suffixed artifact staging, loser-cleans-up collisions;
-# multimodal_mp3_meta: the VBR-tag truncation guard); (3) ALL 20
-# r10-stale entries (the r15 verdict's missing #4 list, verbatim —
-# max registry staleness becomes r11); (4) the 22 alphabetically-
-# first r11-stale entries (the changed-entry carve-outs displace
-# hybrid_rerank_ann..ngram_jaccard to r17). The two r15 watch items
-# (cms_heavy_hitters, copurchase_triples) land fresh driver rows in
-# section 4.
-_R16_WINDOW = [
-    # (1) never driver-tested (new in r16)
-    "snapshot_pruned_read",
-    "multimodal_tiff_decode",
-    "multimodal_webp_decode",
-    # (2) changed in r16 — re-prove under the driver's own gate
-    "pdf_extract_text",
-    "snapshot_append",
-    "snapshot_time_travel",
-    "snapshot_changes",
-    "multimodal_mp3_meta",
-    # (3) the full r10-stale set — the oldest driver evidence
-    "mutual_information",
-    "scalar_functions",
-    "scalar_subquery",
-    "semantic_dedup",
-    "set_except",
-    "set_intersect",
-    "set_intersect_all",
-    "set_union",
-    "set_union_all_counts",
-    "simhash_pairs",
-    "sort_global",
-    "stream_stateful_totals",
-    "topk",
-    "upsert_schema_evolution",
-    "vector_topk",
-    "window_distribution",
-    "window_lag_lead",
-    "window_rank",
-    "window_running",
-    "wordcount",
-    # (4) the 22 alphabetically-first r11-stale entries
-    "ab_test_lift",
-    "active_users_rolling",
-    "agg_skew_salted",
-    "attribution_last_touch",
-    "avro_round_trip",
-    "avro_schema_evolution",
-    "bitmap_distinct",
-    "bpe_apply",
-    "bpe_train",
-    "cdc_apply",
-    "clustering_coefficient",
-    "cms_heavy_hitters",
-    "concurrent_events",
-    "copurchase_pairs",
-    "copurchase_triples",
-    "dedup_clusters",
-    "dedup_eval",
-    "dedup_incremental",
-    "dedup_minhash",
-    "dedup_vs_reference",
-    "fuzzy_match_snm",
-    "gapfill_linear",
-]
-assert len(_R16_WINDOW) == 50, len(_R16_WINDOW)
-QUERIES = {name: QUERIES[name] for name in _R16_WINDOW} | {
-    name: fn for name, fn in QUERIES.items() if name not in set(_R16_WINDOW)
-}
-
-
-# The r17 window, standing policies applied: (1) the THREE entries
-# whose code/output changed in r17 (multimodal_webp_decode: +meta
-# prefix codes, +all-modes predictor family, +n_groups column,
-# spec-exact modes 10/11/13 and the wire-order simple code;
-# multimodal_tiff_decode: +LZW and LZW+predictor families;
-# pdf_extract_text: +LZWDecode stream cycle, +stream_filter
-# column); (2) ALL 28 r11-stale entries — leading with the five
-# carve-out-displaced ones the _R16_WINDOW comment promised
-# (hybrid_rerank_ann..ngram_jaccard), then alphabetical — max
-# registry staleness becomes r12; (3) the 19 alphabetically-first
-# r12-stale entries (the carve-outs displace
-# multimodal_audio_stats / multimodal_decode / multimodal_dedup to
-# r18). snapshots.py also changed in r17 (vacuum's manifest-orphan
-# sweep) but no registry entry calls vacuum — its evidence is the
-# pytest tier (test_round17.py) and the snapshot entries stay on
-# their fresh r16 driver rows.
-_R17_WINDOW = [
-    # (1) changed in r17 — re-prove under the driver's own gate
-    "multimodal_webp_decode",
-    "multimodal_tiff_decode",
-    "pdf_extract_text",
-    # (2) all 28 r11-stale entries, displaced five first
-    "hybrid_rerank_ann",
-    "mine_image_text_pairs_semantic",
-    "multimodal_jpeg_decode_420",
-    "multimodal_jpeg_decode_rst",
-    "ngram_jaccard",
-    "outlier_mad",
-    "pack_shards",
-    "pii_scrub",
-    "q10_returned_items",
-    "q13_custdist",
-    "q14_promo_revenue",
-    "q17_small_quantity",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q21_waiting_supplier",
-    "q22_cold_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "scd2_apply",
-    "source_cap",
-    "udtf_sentences",
-    "validate_quarantine",
-    "vector_range",
-    "vocab_coverage",
-    "winsorize",
-    # (3) the 19 alphabetically-first r12-stale entries
-    "agg_pivot",
-    "array_functions",
-    "compact_documents",
-    "csv_round_trip",
-    "curriculum_mix",
-    "date_functions",
-    "dedup_embedding_lsh",
-    "dedup_events",
-    "dedup_exact",
-    "dedup_fingerprint",
-    "fingerprint",
-    "fuzzy_match_blocked",
-    "hist_equi_depth",
-    "ivm_join_view",
-    "jaccard_prefix_join",
-    "join_asof_tolerance",
-    "kfold_split",
-    "label_centroids",
-    "multimodal_audio_meta",
-]
-assert len(_R17_WINDOW) == 50, len(_R17_WINDOW)
-QUERIES = {name: QUERIES[name] for name in _R17_WINDOW} | {
-    name: fn for name, fn in QUERIES.items() if name not in set(_R17_WINDOW)
-}
-
-
-# r5 window kept for the record (see NOTES_r05.md)
-_R5_WINDOW = [
-    # (1) changed in r5
-    "upsert_schema_evolution",
-    "dedup_spans",
-    "vector_topk",
-    "knn_label_vote",
-    "decontaminate_embedding",
-    "pagerank",
-    "simhash_pairs",
-    "stream_stateful_totals",
-    # (2) r2-stale, alphabetical
-    "agg_approx_distinct",
-    "agg_basic",
-    "agg_collect",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_histogram",
-    "agg_minmax_by",
-    "agg_percentile_approx",
-    "agg_percentiles",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "agg_unpivot",
-    "computed_columns",
-    "distinct_rows",
-    "explode_outer",
-    "filter_project",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_full_outer",
-    "join_inner",
-    "join_left_outer",
-    "join_semi",
-    "join_theta",
-    "json_extract",
-    "mr_wordcount",
-    "null_functions",
-    "scalar_functions",
-    "scalar_subquery",
-    "set_except",
-    "set_intersect",
-    "set_intersect_all",
-    "set_union",
-    "set_union_all_counts",
-    "sort_global",
-    "topk",
-    "window_distribution",
-    "window_lag_lead",
-    "window_rank",
-    "window_running",
-    "wordcount",
-]
-assert len(_R5_WINDOW) == 50, len(_R5_WINDOW)
 
 
 # --- DuckDB oracle SQL ---------------------------------------------------

@@ -134,12 +134,16 @@ def gzip_member(record: bytes) -> bytes:
 
 def split_gzip_members(payload: bytes) -> list[bytes]:
     """Decompress a concatenation of gzip members, one output blob
-    per member — the boundary a 100 TB reader splits archives on."""
+    per member — the boundary a 100 TB reader splits archives on.
+    A corrupt member raises ValueError, never a raw zlib.error."""
     out = []
     pos = 0
     while pos < len(payload):
         d = zlib.decompressobj(wbits=31)
-        out.append(d.decompress(payload[pos:]))
+        try:
+            out.append(d.decompress(payload[pos:]))
+        except zlib.error as e:
+            raise ValueError(f"corrupt gzip member in WARC archive: {e}") from e
         if not d.eof:
             raise ValueError("truncated gzip member in WARC archive")
         consumed = len(payload) - pos - len(d.unused_data)

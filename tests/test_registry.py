@@ -1,7 +1,29 @@
-"""Round-9 additions: waiver-freeze gate (r8 verdict item 7) and the
-scale-oracle mechanism's registry invariants."""
+"""Registry invariants: the verification window leads the registry,
+the plan waiver lists only shrink and name live queries, and the
+scale oracles shadow real oracle-gated entries."""
 
 from __future__ import annotations
+
+
+def test_verify_first_is_fifty_unique_registry_names():
+    from mapreducego_spark.registry import _VERIFY_FIRST, QUERIES
+
+    assert len(_VERIFY_FIRST) == 50
+    assert len(set(_VERIFY_FIRST)) == 50
+    assert set(_VERIFY_FIRST) <= set(QUERIES), (
+        sorted(set(_VERIFY_FIRST) - set(QUERIES))
+    )
+
+
+def test_queries_lead_with_verify_first():
+    """Each round's correctness run verifies the first 50 entries of
+    queries() in insertion order; that window is _VERIFY_FIRST, in
+    its order."""
+    import __spark_entry__
+    from mapreducego_spark.registry import _VERIFY_FIRST, QUERIES
+
+    assert list(QUERIES)[:50] == _VERIFY_FIRST
+    assert list(__spark_entry__.queries())[:50] == _VERIFY_FIRST
 
 
 # The r8-verdict-frozen waiver sets. A waiver list may only SHRINK;
@@ -44,7 +66,7 @@ def test_bnlj_waiver_list_only_shrinks():
     assert not grown, (
         f"plan_audit.WAIVED grew beyond the r8-frozen set: {sorted(grown)}"
         " — waivers require a bounding argument AND a deliberate update"
-        " of tests/test_round9.py's frozen set"
+        " of tests/test_registry.py's frozen set"
     )
     # the waiver scope must stay BNLJ-only: a broader flag set would
     # let a waiver clear cartesians or row-at-a-time Python

@@ -6,13 +6,16 @@ CORRECTNESS_r{N}.json contains a row for it, then print:
   - a staleness histogram (round -> #queries whose LAST driver row is
     from that round, plus never-checked),
   - the never-checked list,
+  - how many names of the live `_VERIFY_FIRST` already have a row in
+    the newest CORRECTNESS file (a high count means the next round
+    re-checks entries it has just checked),
   - a proposed next verification window of WINDOW_SIZE entries:
-    never-checked first (registry order), then oldest-stale.
+    never-checked first (registry order), then oldest-stale, printed
+    as a paste-ready `_VERIFY_FIRST = [...]` block.
 
 The round driver verifies the FIRST 50 registry entries in insertion
-order, so the proposal is what `_R{N}_WINDOW` in registry.py should
-contain (minus the round's own new/changed entries, which take
-priority and must be added by hand).
+order, and registry.py puts `_VERIFY_FIRST` first, so the block
+replaces that list as printed.
 
 Usage: python tools/staleness.py [window_size]
 """
@@ -31,7 +34,7 @@ WINDOW_SIZE = int(sys.argv[1]) if len(sys.argv) > 1 else 50
 
 
 def main() -> None:
-    from mapreducego_spark.registry import QUERIES
+    from mapreducego_spark.registry import _VERIFY_FIRST, QUERIES
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     last_round: dict[str, int] = {}
@@ -64,12 +67,20 @@ def main() -> None:
         (q for q in QUERIES if q in last_round),
         key=lambda q: (last_round[q], q),
     )
+    repeat = [q for q in _VERIFY_FIRST if last_round.get(q) == latest]
+    print(
+        f"\nlive _VERIFY_FIRST: {len(repeat)} of {len(_VERIFY_FIRST)}"
+        f" already have a CORRECTNESS_r{latest:02d} row"
+    )
+
     proposal = (never + stale_sorted)[:WINDOW_SIZE]
     oldest_after = (never + stale_sorted)[WINDOW_SIZE:]
     print(f"\nproposed next window ({WINDOW_SIZE}):")
+    print("_VERIFY_FIRST = [")
     for q in proposal:
         tag = "never" if q not in last_round else f"r{last_round[q]}"
-        print(f"  {q}  [{tag}]")
+        print(f'    "{q}",  # {tag}')
+    print("]")
     if oldest_after:
         q = oldest_after[0]
         tag = "never" if q not in last_round else f"r{last_round[q]}"
