@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import struct
 
+from mapreducego_spark.functions.wavcodec import riff_chunks, walk_chunks
+
 
 def _chunk(cid: bytes, data: bytes) -> bytes:
     out = cid + struct.pack("<I", len(data)) + data
@@ -109,21 +111,6 @@ def encode_avi_mjpeg(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _walk_chunks(buf: bytes, pos: int, end: int):
-    """Yield (fourcc, body_start, size) over one chunk sequence,
-    skipping word-alignment pads; loud on overruns."""
-    while pos + 8 <= end:
-        cid = buf[pos : pos + 4]
-        (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-        body = pos + 8
-        if body + size > end:
-            raise ValueError(
-                f"AVI chunk {cid!r} declares {size} bytes past its parent"
-            )
-        yield cid, body, size
-        pos = body + size + (size % 2)
-
-
 def parse_avi(payload: bytes) -> tuple[dict, list[bytes]]:
     """Parse an MJPEG AVI into (meta, frames).
 
@@ -131,31 +118,23 @@ def parse_avi(payload: bytes) -> tuple[dict, list[bytes]]:
     ('MJPG'), duration_us (exact integer). ``frames``: the raw JPEG
     bytes of each '##dc'/'##db' chunk in movi order — feed them to
     jpegcodec.decode_jpeg."""
-    if len(payload) < 12 or payload[:4] != b"RIFF":
-        raise ValueError("not a RIFF file")
-    (riff_size,) = struct.unpack("<I", payload[4:8])
-    if payload[8:12] != b"AVI ":
-        raise ValueError("RIFF file is not AVI")
-    if riff_size + 8 > len(payload):
-        raise ValueError("RIFF size exceeds payload (truncated file)")
-    end = 8 + riff_size
     avih = None
     handler = None
     n_video_streams = 0
     frames: list[bytes] = []
     saw_movi = False
-    for cid, body, size in _walk_chunks(payload, 12, end):
+    for cid, body, size in riff_chunks(payload, b"AVI "):
         if cid != b"LIST":
             continue  # top-level JUNK etc.: skip by size
         fourcc = payload[body : body + 4]
         if fourcc == b"hdrl":
-            for c2, b2, s2 in _walk_chunks(payload, body + 4, body + size):
+            for c2, b2, s2 in walk_chunks(payload, body + 4, body + size):
                 if c2 == b"avih":
                     if s2 < 56:
                         raise ValueError("avih shorter than MainAVIHeader")
                     avih = struct.unpack("<14I", payload[b2 : b2 + 56])
                 elif c2 == b"LIST" and payload[b2 : b2 + 4] == b"strl":
-                    for c3, b3, s3 in _walk_chunks(
+                    for c3, b3, s3 in walk_chunks(
                         payload, b2 + 4, b2 + s2
                     ):
                         if c3 != b"strh":
@@ -175,7 +154,7 @@ def parse_avi(payload: bytes) -> tuple[dict, list[bytes]]:
                         handler = "MJPG"
         elif fourcc == b"movi":
             saw_movi = True
-            for c2, b2, s2 in _walk_chunks(payload, body + 4, body + size):
+            for c2, b2, s2 in walk_chunks(payload, body + 4, body + size):
                 # '##dc' compressed / '##db' uncompressed video frame
                 if c2[2:4] in (b"dc", b"db"):
                     frames.append(payload[b2 : b2 + s2])
@@ -302,14 +281,6 @@ def parse_avi_av(payload: bytes):
     scope, anything else refuses loudly."""
     import numpy as np
 
-    if len(payload) < 12 or payload[:4] != b"RIFF":
-        raise ValueError("not a RIFF file")
-    (riff_size,) = struct.unpack("<I", payload[4:8])
-    if payload[8:12] != b"AVI ":
-        raise ValueError("RIFF file is not AVI")
-    if riff_size + 8 > len(payload):
-        raise ValueError("RIFF size exceeds payload (truncated file)")
-    end = 8 + riff_size
     avih = None
     stream_types: list[bytes] = []   # fccType per strl, in order
     audio_fmt = None
@@ -317,19 +288,19 @@ def parse_avi_av(payload: bytes):
     audio_chunks: list[bytes] = []
     video_sid = audio_sid = None
     saw_movi = False
-    for cid, body, size in _walk_chunks(payload, 12, end):
+    for cid, body, size in riff_chunks(payload, b"AVI "):
         if cid != b"LIST":
             continue
         fourcc = payload[body : body + 4]
         if fourcc == b"hdrl":
-            for c2, b2, s2 in _walk_chunks(payload, body + 4, body + size):
+            for c2, b2, s2 in walk_chunks(payload, body + 4, body + size):
                 if c2 == b"avih":
                     if s2 < 56:
                         raise ValueError("avih shorter than MainAVIHeader")
                     avih = struct.unpack("<14I", payload[b2 : b2 + 56])
                 elif c2 == b"LIST" and payload[b2 : b2 + 4] == b"strl":
                     strh = strf = None
-                    for c3, b3, s3 in _walk_chunks(
+                    for c3, b3, s3 in walk_chunks(
                         payload, b2 + 4, b2 + s2
                     ):
                         if c3 == b"strh":
@@ -379,7 +350,7 @@ def parse_avi_av(payload: bytes):
                         )
         elif fourcc == b"movi":
             saw_movi = True
-            for c2, b2, s2 in _walk_chunks(payload, body + 4, body + size):
+            for c2, b2, s2 in walk_chunks(payload, body + 4, body + size):
                 if not c2[:2].isdigit():
                     continue
                 sid = int(c2[:2])

@@ -1,17 +1,22 @@
-"""Baseline-sequential + progressive JPEG codec, pure stdlib + numpy
+"""Sequential + progressive JPEG codec, pure stdlib + numpy
 (ITU-T T.81).
 
-This closes the last multimodal decode stub (the r9 verdict item 4):
-``decode_jpeg_baseline`` really entropy-decodes the scan — canonical
-Huffman tables rebuilt from the DHT segments (Annex C), DC-diff /
-AC run-length symbol stream with EOB and ZRL (F.2.2), byte
-unstuffing (B.1.1.5), dequantization, inverse zigzag, 2-D IDCT
-(A.3.3), level shift + clamp, and libjpeg-style fixed-point
-YCbCr->RGB (BT.601 constants scaled by 2^16). The matching encoder
-``encode_jpeg_baseline`` performs the forward pipeline (level shift,
-FDCT, quantize, Huffman encode, byte stuffing) so the repo can stage
-REAL scans for the decode tier's fixtures without PIL in the
-container.
+One decoder, ``decode_jpeg``, serves every supported frame type — the
+pixel path the multimodal tier calls: canonical Huffman tables rebuilt
+from the DHT segments (Annex C), byte unstuffing (B.1.1.5), the scan
+loop (a sequential frame's one interleaved scan is the Ss=0, Se=63,
+Ah=Al=0 case of the progressive model), dequantization, inverse
+zigzag, 2-D IDCT (A.3.3), level shift + clamp, and libjpeg-style
+fixed-point YCbCr->RGB (BT.601 constants scaled by 2^16).
+``decode_jpeg_baseline`` and ``decode_jpeg_progressive`` are the same
+decoder restricted to one frame family. One marker walker,
+``jpeg_segments``, serves the decoder and the scan-free header tier
+(multimodal.jpeg_meta / jpeg_exif), and one segment writer,
+``jpeg_segment``, serves every encoder. The matching encoders
+``encode_jpeg_baseline`` / ``encode_jpeg_progressive`` perform the
+forward pipeline (level shift, FDCT, quantize, Huffman encode, byte
+stuffing) so the repo can stage REAL scans for the decode tier's
+fixtures without PIL in the container.
 
 Reference parity note: the reference repo (MapReduceGo) has no media
 tier at all; this belongs to the 100 TB training-data north star
@@ -32,10 +37,9 @@ reconstruction JFIF permits). Restart intervals (DRI/RSTn, E.2.4)
 are supported in both directions: byte-aligned modulo-8 marker
 sequence with DC-predictor resets, out-of-sequence or missing RSTs
 failing loudly. Progressive (SOF2) is supported in both directions
-too — spectral selection + successive approximation per Annex G
-(``encode_jpeg_progressive`` / ``decode_jpeg_progressive``, with
-``decode_jpeg`` dispatching on the frame type; r11 verdict missing
-#1). 12-bit, sampling factors > 2, hierarchical/lossless frames, or
+too — spectral selection + successive approximation per Annex G.
+A sequential frame's one scan must cover every component. 12-bit,
+sampling factors > 2, hierarchical/lossless frames, or
 arithmetic-coded streams raise NotImplementedError; structurally
 broken streams raise ValueError.
 
@@ -223,9 +227,12 @@ class _BitWriter:
 
 
 class _BitReader:
-    def __init__(self, data: bytes) -> None:
+    """MSB-first bits of the entropy-coded data that starts at ``pos``
+    (B.1.1.5 unstuffing); a marker where data is due fails loudly."""
+
+    def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
-        self.pos = 0
+        self.pos = pos
         self._acc = 0
         self._n = 0
 
@@ -244,7 +251,9 @@ class _BitReader:
                 raise ValueError(
                     f"unexpected marker 0xFF{nxt:02X} inside scan"
                 )
-        self._acc = (self._acc << 8) | byte
+        # keep only the unread bits: an unmasked accumulator grows with
+        # the scan, and every read would shift the whole of it
+        self._acc = ((self._acc & ((1 << self._n) - 1)) << 8) | byte
         self._n += 8
 
     def expect_restart(self, n: int) -> None:
@@ -293,6 +302,82 @@ def _extend(v: int, size: int) -> int:
 
 def _category(v: int) -> int:
     return v.bit_length() if v >= 0 else (-v).bit_length()
+
+
+# ------------------------------------------------------ marker segments
+
+# Frame headers SOF0..SOF15 (B.1.1.3); 0xC4 is DHT, 0xC8 is reserved
+# and 0xCC is DAC.
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def jpeg_segment(marker: int, data: bytes) -> bytes:
+    """One marker segment: FF <marker> <2-byte big-endian length
+    INCLUDING the length field itself> <data> (B.1.1.4)."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
+
+
+def _scan_entropy_end(payload: bytes, start: int) -> int:
+    """First byte after ``start`` belonging to a real marker (FF00
+    stuffing and RSTn markers are part of the entropy data)."""
+    n = len(payload)
+    end = start
+    while end + 1 < n:
+        if payload[end] == 0xFF and payload[end + 1] != 0x00 and not (
+            0xD0 <= payload[end + 1] <= 0xD7
+        ):
+            break
+        end += 1 + (payload[end] == 0xFF)
+    return end
+
+
+def jpeg_segments(payload: bytes):
+    """Walk the marker stream (Annex B) and yield ``(marker, data,
+    pos)`` for every segment up to EOI, ``pos`` being the offset right
+    after the segment — for SOS, where its entropy-coded data starts.
+
+    Checks SOI, skips 0xFF fill bytes (B.1.1.2) and standalone
+    markers (RSTn, TEM), bounds every length field by the payload, and
+    checks the segments callers index into before yielding them: DRI
+    carries its 2-byte interval, SOS its Ns component pairs, a frame
+    header its Nf component triples. The entropy data after each SOS
+    is skipped only when the caller asks for the next segment, so a
+    header sniffer that stops at SOS never scans the body. Every
+    structural fault raises ValueError."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (missing SOI)")
+    pos, n = 2, len(payload)
+    while pos + 2 <= n:
+        if payload[pos] != 0xFF:
+            raise ValueError(f"expected marker at byte {pos}")
+        while pos + 1 < n and payload[pos + 1] == 0xFF:
+            pos += 1
+        if pos + 1 >= n:
+            raise ValueError("JPEG ends inside a marker")
+        marker = payload[pos + 1]
+        pos += 2
+        if marker == 0xD9:
+            return
+        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
+            continue
+        if pos + 2 > n:
+            raise ValueError("truncated JPEG segment header")
+        (seg_len,) = struct.unpack(">H", payload[pos : pos + 2])
+        if seg_len < 2 or pos + seg_len > n:
+            raise ValueError("JPEG segment length out of bounds")
+        data = payload[pos + 2 : pos + seg_len]
+        pos += seg_len
+        if marker == 0xDD and len(data) < 2:
+            raise ValueError("truncated DRI segment")
+        if marker == 0xDA and (not data or len(data) < 4 + 2 * data[0]):
+            raise ValueError("truncated SOS header")
+        if marker in _SOF_MARKERS and (
+            len(data) < 6 or len(data) < 6 + 3 * data[5]
+        ):
+            raise ValueError("truncated SOF frame header")
+        yield marker, data, pos
+        if marker == 0xDA:
+            pos = _scan_entropy_end(payload, pos)
 
 
 # ---------------------------------------------------------------- encoder
@@ -463,9 +548,6 @@ def encode_jpeg_baseline(
                         )
     scan = w.flush()
 
-    def seg(marker: int, data: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
     app0 = (
         b"JFIF\x00"
         + bytes([1, 2, density_unit])
@@ -492,245 +574,21 @@ def encode_jpeg_baseline(
         + bytes([0, 63, 0])
     )
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
+        jpeg_segment(0xDD, struct.pack(">H", restart_interval))
         if restart_interval
         else b""
     )
     return (
         b"\xff\xd8"
-        + seg(0xE0, app0)
-        + seg(0xDB, dqt)
-        + seg(0xC1 if sof1 else 0xC0, sof)
-        + seg(0xC4, dht)
+        + jpeg_segment(0xE0, app0)
+        + jpeg_segment(0xDB, dqt)
+        + jpeg_segment(0xC1 if sof1 else 0xC0, sof)
+        + jpeg_segment(0xC4, dht)
         + dri
-        + seg(0xDA, sos)
+        + jpeg_segment(0xDA, sos)
         + scan
         + b"\xff\xd9"
     )
-
-
-# ---------------------------------------------------------------- decoder
-
-
-def decode_jpeg_baseline(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline-sequential JPEG to (width, height, rgb).
-
-    Full entropy path: DHT canonical-Huffman rebuild, DC/AC symbol
-    decode with EXTEND, dequantize, de-zigzag, 2-D IDCT, level
-    shift + clamp, then the integer fixed-point YCbCr->RGB (or gray
-    expansion). len(rgb) == width*height*3."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos, n = 2, len(payload)
-    quant_tables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    # per SOF component: (component id, h samp, v samp, quant table id)
-    comps: list[tuple[int, int, int, int]] = []
-    # per SOS scan slot: (SOF component index, dc table, ac table) —
-    # the selector byte is honored, so SOS order may differ from SOF
-    # order (the silent-misdecode case the r10 ADVICE flagged)
-    scan_map: list[tuple[int, int, int]] = []
-    scan_start = None
-    restart_interval = 0
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment header")
-        (seg_len,) = struct.unpack(">H", payload[pos : pos + 2])
-        if seg_len < 2 or pos + seg_len > n:
-            raise ValueError("JPEG segment length out of bounds")
-        data = payload[pos + 2 : pos + seg_len]
-        pos += seg_len
-        if marker == 0xDB:  # DQT, possibly several tables per segment
-            i = 0
-            while i < len(data):
-                prec, tid = data[i] >> 4, data[i] & 0xF
-                if prec != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                vals = data[i + 1 : i + 65]
-                if len(vals) < 64:
-                    raise ValueError("truncated DQT segment")
-                q = np.zeros((8, 8))
-                for k, (r, c) in enumerate(ZIGZAG):
-                    q[r, c] = vals[k]
-                quant_tables[tid] = q
-                i += 65
-        elif marker == 0xC4:  # DHT, possibly several tables
-            i = 0
-            while i < len(data):
-                cls, tid = data[i] >> 4, data[i] & 0xF
-                bits = list(data[i + 1 : i + 17])
-                nv = sum(bits)
-                vals = list(data[i + 17 : i + 17 + nv])
-                if len(bits) < 16 or len(vals) < nv:
-                    raise ValueError("truncated DHT segment")
-                huff[(cls, tid)] = _decode_table(bits, vals)
-                i += 17 + nv
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"non-baseline JPEG frame (SOF marker 0xFF{marker:02X})"
-            )
-        elif marker in (0xC0, 0xC1):  # SOF0 / SOF1
-            # extended sequential (SOF1) at 8-bit precision is the
-            # same Huffman-sequential decode as baseline — its only
-            # extensions are 12-bit precision (refused below) and
-            # table ids 2..3 (the DHT walk already keys on (cls, id))
-            if len(data) < 6:
-                raise ValueError("truncated SOF frame header")
-            if data[0] != 8:
-                raise NotImplementedError("only 8-bit precision")
-            height, width = struct.unpack(">HH", data[1:5])
-            ncomp = data[5]
-            if ncomp not in (1, 3):
-                raise NotImplementedError("1 or 3 components only")
-            for ci in range(ncomp):
-                cid, samp, qid = data[6 + 3 * ci : 9 + 3 * ci]
-                sh, sv = samp >> 4, samp & 0xF
-                if ncomp == 1 and (sh, sv) != (1, 1):
-                    # a single-component scan is non-interleaved per
-                    # A.2.2 — its MCU is one block and sampling
-                    # factors would be meaningless here
-                    raise NotImplementedError(
-                        "subsampling factors on a 1-component frame"
-                    )
-                if not (1 <= sh <= 2 and 1 <= sv <= 2):
-                    raise NotImplementedError(
-                        f"sampling factors {sh}x{sv} unsupported"
-                        " (subsampling limited to factors 1..2)"
-                    )
-                comps.append((cid, sh, sv, qid))
-        elif marker == 0xDD:  # DRI: restart interval in MCUs
-            restart_interval = struct.unpack(">H", data[:2])[0]
-        elif marker == 0xDA:  # SOS
-            ns = data[0]
-            if ns != len(comps):
-                raise NotImplementedError("non-interleaved scans")
-            for si in range(ns):
-                sel = data[1 + 2 * si]  # component selector (B.2.3)
-                tables = data[2 + 2 * si]
-                matches = [
-                    k for k, (cid, *_rest) in enumerate(comps) if cid == sel
-                ]
-                if not matches:
-                    raise ValueError(
-                        f"SOS selects undeclared component {sel}"
-                    )
-                scan_map.append((matches[0], tables >> 4, tables & 0xF))
-            if sorted(k for k, _, _ in scan_map) != list(range(ns)):
-                raise ValueError("SOS selects a component twice")
-            scan_start = pos
-            break
-    if width is None or scan_start is None:
-        raise ValueError("JPEG missing SOF0 or SOS")
-
-    # locate end of entropy data (next real marker; FF00 is stuffing)
-    end = scan_start
-    while end + 1 < n:
-        if payload[end] == 0xFF and payload[end + 1] not in (0x00,) and not (
-            0xD0 <= payload[end + 1] <= 0xD7
-        ):
-            break
-        end += 1 + (payload[end] == 0xFF)
-    reader = _BitReader(payload[scan_start:end])
-
-    ncomp = len(comps)
-    hmax = max(sh for _, sh, _, _ in comps)
-    vmax = max(sv for _, _, sv, _ in comps)
-    mcx_n = (width + 8 * hmax - 1) // (8 * hmax)
-    mcy_n = (height + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcy_n * sv * 8, mcx_n * sh * 8), dtype=np.uint8)
-        for _, sh, sv, _ in comps
-    ]
-    # resolve each scan slot's tables/geometry once, in SOS order —
-    # the interleaved MCU walks components in SOS order (A.2.3)
-    slots = []
-    for ci, dc_id, ac_id in scan_map:
-        dc_t = huff.get((0, dc_id))
-        ac_t = huff.get((1, ac_id))
-        q = quant_tables.get(comps[ci][3])
-        if dc_t is None or ac_t is None or q is None:
-            raise ValueError("scan references undefined table")
-        slots.append((ci, comps[ci][1], comps[ci][2], dc_t, ac_t, q))
-    prev_dc = [0] * ncomp
-    coeff = np.zeros(64)
-    mcu_idx = 0
-    rst_n = 0
-    for my in range(mcy_n):
-        for mx in range(mcx_n):
-            if restart_interval and mcu_idx and (
-                mcu_idx % restart_interval == 0
-            ):
-                # E.2.4: byte-align, consume RSTn (mod-8 sequence),
-                # reset every DC predictor
-                reader.expect_restart(rst_n)
-                rst_n = (rst_n + 1) & 7
-                prev_dc = [0] * ncomp
-            mcu_idx += 1
-            for ci, sh, sv, dc_t, ac_t, q in slots:
-                for vy in range(sv):
-                    for vx in range(sh):
-                        s = reader.symbol(dc_t)
-                        diff = _extend(reader.bits(s), s) if s else 0
-                        prev_dc[ci] += diff
-                        coeff[:] = 0
-                        seq = [0] * 64
-                        seq[0] = prev_dc[ci]
-                        k = 1
-                        while k < 64:
-                            rs = reader.symbol(ac_t)
-                            if rs == 0x00:  # EOB
-                                break
-                            if rs == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            size = rs & 0xF
-                            if size == 0:
-                                # run/size with size 0 is only valid
-                                # as EOB or ZRL (F.1.2.2.1) — loud
-                                # structural failure, not a negative
-                                # shift deep in EXTEND
-                                raise ValueError(
-                                    "invalid AC run/size symbol"
-                                    f" 0x{rs:02X}"
-                                )
-                            k += rs >> 4
-                            if k > 63:
-                                raise ValueError("AC run past end of block")
-                            seq[k] = _extend(reader.bits(size), size)
-                            k += 1
-                        coeff[_ZZ_FLAT] = seq
-                        cq = (coeff.reshape(8, 8)) * q
-                        spatial = _BASIS.T @ cq @ _BASIS + 128.0
-                        r0 = (my * sv + vy) * 8
-                        c0 = (mx * sh + vx) * 8
-                        planes[ci][r0 : r0 + 8, c0 : c0 + 8] = np.clip(
-                            np.round(spatial), 0, 255
-                        ).astype(np.uint8)
-
-    # upsample subsampled components by sample replication (nearest
-    # neighbor), then crop the MCU padding
-    full = []
-    for p, (_, sh, sv, _) in zip(planes, comps):
-        if (sh, sv) != (hmax, vmax):
-            p = np.repeat(np.repeat(p, vmax // sv, axis=0), hmax // sh, axis=1)
-        full.append(p[:height, :width])
-    if ncomp == 1:
-        rgb = np.repeat(full[0].reshape(-1), 3).tobytes()
-    else:
-        rgb = ycbcr_to_rgb_planes(*full).tobytes()
-    return width, height, rgb
 
 
 # ----------------------------------------------------- progressive (SOF2)
@@ -740,11 +598,10 @@ def decode_jpeg_baseline(payload: bytes) -> tuple[int, int, bytes]:
 # file carries the SAME quantized coefficients as a baseline file of
 # the same image — they are just delivered across multiple scans (a
 # DC pass, DC refinement bits, per-component AC spectral bands, AC
-# refinement bits), so the decode back half (dequantize, IDCT,
-# upsample, color transform) is shared with the baseline path and a
-# progressive re-encode of any image must decode BYTE-IDENTICAL to
-# its baseline encode (the cross-check pytest pins exactly that).
-# The scan-level algorithms below follow the spec figures (G.1.2.2
+# refinement bits), so a progressive re-encode of any image must
+# decode BYTE-IDENTICAL to its baseline encode (the cross-check pytest
+# pins exactly that). The scan-level algorithms here and in the
+# decoder's scan loop follow the spec figures (G.1.2.2
 # first pass with EOBn run coding; G.1.2.3 refinement with buffered
 # correction bits — the same structure libjpeg's jcphuff/jdphuff
 # implement, re-derived here from the spec text).
@@ -1022,9 +879,6 @@ def encode_jpeg_progressive(
                     )
                 )
 
-    def seg(marker: int, data: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
     app0 = b"JFIF\x00" + bytes([1, 2, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
     dqt = bytes([0]) + bytes(QUANT_FLAT)
     sof = (
@@ -1041,238 +895,94 @@ def encode_jpeg_progressive(
         + bytes([0x10]) + bytes(PROG_AC_BITS) + bytes(PROG_AC_VALS)
     )
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
+        jpeg_segment(0xDD, struct.pack(">H", restart_interval))
         if restart_interval
         else b""
     )
-    out = bytearray(b"\xff\xd8" + seg(0xE0, app0) + seg(0xDB, dqt))
-    out += seg(0xC2, sof) + seg(0xC4, dht) + dri
+    out = bytearray(b"\xff\xd8" + jpeg_segment(0xE0, app0))
+    out += jpeg_segment(0xDB, dqt) + jpeg_segment(0xC2, sof)
+    out += jpeg_segment(0xC4, dht) + dri
     for sos_payload, entropy in scans:
-        out += seg(0xDA, sos_payload) + entropy
+        out += jpeg_segment(0xDA, sos_payload) + entropy
     out += b"\xff\xd9"
     return bytes(out)
 
 
-def _scan_entropy_end(payload: bytes, start: int) -> int:
-    """First byte after ``start`` belonging to a real marker (FF00
-    stuffing and RSTn markers are part of the entropy data)."""
-    n = len(payload)
-    end = start
-    while end + 1 < n:
-        if payload[end] == 0xFF and payload[end + 1] != 0x00 and not (
-            0xD0 <= payload[end + 1] <= 0xD7
-        ):
-            break
-        end += 1 + (payload[end] == 0xFF)
-    return end
+# ---------------------------------------------------------------- decoder
+#
+# One decoder for every supported frame type. A sequential frame
+# (SOF0/SOF1) is the simplest case of the progressive scan model: one
+# interleaved scan with Ss=0, Se=63, Ah=Al=0. Every scan accumulates
+# quantized coefficients (zigzag order) into per-component block
+# buffers; the back half (dequantize, de-zigzag, IDCT, level shift,
+# replication upsample, fixed-point YCbCr->RGB) runs once after the
+# last scan.
+
+_SEQUENTIAL = (0xC0, 0xC1)
+
+
+def decode_jpeg(payload: bytes) -> tuple[int, int, bytes]:
+    """Decode a sequential (SOF0/SOF1) or progressive (SOF2) JPEG to
+    (width, height, rgb) with len(rgb) == width*height*3 — the entry
+    the multimodal tier calls when the encoding family isn't known in
+    advance. Other frame types raise NotImplementedError."""
+    return _decode(
+        payload, (*_SEQUENTIAL, 0xC2), "unsupported JPEG frame type 0xFF{:02X}"
+    )
+
+
+def decode_jpeg_baseline(payload: bytes) -> tuple[int, int, bytes]:
+    """``decode_jpeg`` for sequential frames (SOF0/SOF1) only."""
+    return _decode(
+        payload, _SEQUENTIAL, "non-baseline JPEG frame (SOF marker 0xFF{:02X})"
+    )
 
 
 def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode a progressive (SOF2) JPEG to (width, height, rgb).
+    """``decode_jpeg`` for progressive frames (SOF2) only."""
+    return _decode(
+        payload,
+        (0xC2,),
+        "decode_jpeg_progressive requires SOF2 (found SOF marker 0xFF{:02X})",
+    )
 
-    Multi-scan Annex G decode: every SOS accumulates into the
-    per-component coefficient arrays — DC first/refinement scans
-    (interleaved MCU walk, arithmetic-shift successive approximation),
-    AC first scans (EOBn run decoding per G.1.2.2), AC refinement
-    scans (correction bits per G.1.2.3) — and the back half
-    (dequantize, de-zigzag, IDCT, level shift, replication upsample,
-    fixed-point YCbCr->RGB) is the same arithmetic as the baseline
-    decoder, so a progressive and a baseline encode of one image
-    decode byte-identically (pytest-pinned). Restart markers follow
-    E.2.4 within every scan. Structural violations (refinement size
-    != 1, run past the band, out-of-sequence RST) raise ValueError;
-    capability gaps (12-bit, arithmetic coding) raise
+
+def _decode(
+    payload: bytes, frames: tuple[int, ...], refusal: str
+) -> tuple[int, int, bytes]:
+    """Walk the segments, decode every scan into the coefficient
+    buffers, then reconstruct the pixels. A sequential frame's single
+    scan must cover every component and ends the decode. Structural
+    violations raise ValueError; capability gaps (frame types outside
+    ``frames``, 12-bit precision, sampling factors > 2) raise
     NotImplementedError."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos, n = 2, len(payload)
     quant_tables: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
+    # per SOF component: (component id, h samp, v samp, quant table id)
     comps: list[tuple[int, int, int, int]] = []
+    # per component: quantized coefficients in zigzag order, one row
+    # of 64 per block of the MCU-padded grid
     coeffs: list[np.ndarray] = []
+    # per component: the real (non-padded) block grid, which is what a
+    # non-interleaved scan covers (A.2.2)
     grids: list[tuple[int, int]] = []
-    eob_state = {"run": 0}
+    sequential = False
     restart_interval = 0
-    hmax = vmax = 1
-    mcx_n = mcy_n = 0
     saw_scan = False
-
-    def decode_scan(scan_map, ss, se, ah, al, reader) -> None:
-        """One SOS's entropy data into the coefficient arrays."""
-        eobrun = 0
-        pred = [0] * len(comps)
-
-        def block_dc_first(ci, by, bx, dc_t) -> None:
-            s = reader.symbol(dc_t)
-            diff = _extend(reader.bits(s), s) if s else 0
-            pred[ci] += diff
-            coeffs[ci][by, bx, 0] = pred[ci] << al
-
-        def block_dc_refine(ci, by, bx) -> None:
-            if reader.bit():
-                coeffs[ci][by, bx, 0] |= 1 << al
-
-        def block_ac_first(blk, ac_t) -> None:
-            nonlocal eobrun
-            if eobrun > 0:
-                eobrun -= 1
-                return
-            k = ss
-            while k <= se:
-                rs = reader.symbol(ac_t)
-                r, s = rs >> 4, rs & 0xF
-                if s == 0:
-                    if r != 15:
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += reader.bits(r)
-                        return
-                    k += 16  # ZRL
-                    continue
-                k += r
-                if k > se:
-                    raise ValueError("AC run past spectral band end")
-                blk[k] = _extend(reader.bits(s), s) << al
-                k += 1
-
-        p1, m1 = 1 << al, -(1 << al)
-
-        def corr_bit(blk, k) -> None:
-            if reader.bit() and (int(blk[k]) & p1) == 0:
-                blk[k] += p1 if blk[k] >= 0 else m1
-
-        def block_ac_refine(blk, ac_t) -> None:
-            nonlocal eobrun
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = reader.symbol(ac_t)
-                    r, s = rs >> 4, rs & 0xF
-                    if s:
-                        if s != 1:
-                            raise ValueError(
-                                "AC refinement size must be 1"
-                            )
-                        val = p1 if reader.bit() else m1
-                    else:
-                        if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += reader.bits(r)
-                            break
-                        val = 0  # ZRL: skip 16 zero-history slots
-                    while k <= se:
-                        if blk[k] != 0:
-                            corr_bit(blk, k)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val:
-                        if k > se:
-                            raise ValueError(
-                                "refinement coefficient past band end"
-                            )
-                        blk[k] = val
-                    k += 1
-            if eobrun > 0:
-                while k <= se:
-                    if blk[k] != 0:
-                        corr_bit(blk, k)
-                    k += 1
-                eobrun -= 1
-
-        # resolve tables once
-        slots = []
-        for ci, dc_id, ac_id in scan_map:
-            dc_t = ac_t = None
-            if ss == 0 and ah == 0:
-                dc_t = huff.get((0, dc_id))
-                if dc_t is None:
-                    raise ValueError("scan references undefined DC table")
-            if ss > 0:
-                ac_t = huff.get((1, ac_id))
-                if ac_t is None:
-                    raise ValueError("scan references undefined AC table")
-            slots.append((ci, dc_t, ac_t))
-
-        rst_n = 0
-        mcu = 0
-
-        def boundary() -> None:
-            nonlocal rst_n, eobrun
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                reader.expect_restart(rst_n)
-                rst_n = (rst_n + 1) & 7
-                pred[:] = [0] * len(comps)
-                eobrun = 0
-
-        if len(scan_map) > 1:  # interleaved: DC scans only (G.1.1.1.1)
-            for my in range(mcy_n):
-                for mx in range(mcx_n):
-                    boundary()
-                    mcu += 1
-                    for ci, dc_t, _ in slots:
-                        _, sh, sv, _ = comps[ci]
-                        for vy in range(sv):
-                            for vx in range(sh):
-                                by, bx = my * sv + vy, mx * sh + vx
-                                if ah == 0:
-                                    block_dc_first(ci, by, bx, dc_t)
-                                else:
-                                    block_dc_refine(ci, by, bx)
-        else:
-            ci, dc_t, ac_t = slots[0]
-            bw, bh = grids[ci]
-            for by in range(bh):
-                for bx in range(bw):
-                    boundary()
-                    mcu += 1
-                    if ss == 0:
-                        if ah == 0:
-                            block_dc_first(ci, by, bx, dc_t)
-                        else:
-                            block_dc_refine(ci, by, bx)
-                    elif ah == 0:
-                        block_ac_first(coeffs[ci][by, bx], ac_t)
-                    else:
-                        block_ac_refine(coeffs[ci][by, bx], ac_t)
-
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment header")
-        (seg_len,) = struct.unpack(">H", payload[pos : pos + 2])
-        if seg_len < 2 or pos + seg_len > n:
-            raise ValueError("JPEG segment length out of bounds")
-        data = payload[pos + 2 : pos + seg_len]
-        pos += seg_len
-        if marker == 0xDB:
+    for marker, data, pos in jpeg_segments(payload):
+        if marker == 0xDB:  # DQT, possibly several tables per segment
             i = 0
             while i < len(data):
-                prec, tid = data[i] >> 4, data[i] & 0xF
-                if prec != 0:
+                if data[i] >> 4:
                     raise NotImplementedError("16-bit quant tables")
                 vals = data[i + 1 : i + 65]
                 if len(vals) < 64:
                     raise ValueError("truncated DQT segment")
-                q = np.zeros((8, 8))
-                for k, (r, c) in enumerate(ZIGZAG):
-                    q[r, c] = vals[k]
-                quant_tables[tid] = q
+                q = np.zeros(64)
+                q[_ZZ_FLAT] = np.frombuffer(vals, np.uint8)
+                quant_tables[data[i] & 0xF] = q.reshape(8, 8)
                 i += 65
-        elif marker == 0xC4:
+        elif marker == 0xC4:  # DHT, possibly several tables
             i = 0
             while i < len(data):
                 cls, tid = data[i] >> 4, data[i] & 0xF
@@ -1283,9 +993,14 @@ def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
                     raise ValueError("truncated DHT segment")
                 huff[(cls, tid)] = _decode_table(bits, vals)
                 i += 17 + nv
-        elif marker == 0xC2:  # SOF2: progressive, Huffman
-            if len(data) < 6:
-                raise ValueError("truncated SOF frame header")
+        elif marker in _SOF_MARKERS:
+            if marker not in frames:
+                raise NotImplementedError(refusal.format(marker))
+            if comps:
+                raise ValueError("JPEG declares a second frame header")
+            # SOF1 at 8-bit is the same Huffman-sequential decode as
+            # SOF0: its only extensions are 12-bit precision (refused
+            # here) and table ids 2..3 (the DHT walk keys on the id)
             if data[0] != 8:
                 raise NotImplementedError("only 8-bit precision")
             height, width = struct.unpack(">HH", data[1:5])
@@ -1293,9 +1008,11 @@ def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
             if ncomp not in (1, 3):
                 raise NotImplementedError("1 or 3 components only")
             for ci in range(ncomp):
-                cid, s, qid = data[6 + 3 * ci : 9 + 3 * ci]
-                sh, sv = s >> 4, s & 0xF
+                cid, samp, qid = data[6 + 3 * ci : 9 + 3 * ci]
+                sh, sv = samp >> 4, samp & 0xF
                 if ncomp == 1 and (sh, sv) != (1, 1):
+                    # a single-component scan is non-interleaved per
+                    # A.2.2: its MCU is one block
                     raise NotImplementedError(
                         "subsampling factors on a 1-component frame"
                     )
@@ -1305,10 +1022,18 @@ def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
                         " (subsampling limited to factors 1..2)"
                     )
                 comps.append((cid, sh, sv, qid))
+            sequential = marker in _SEQUENTIAL
             hmax = max(sh for _, sh, _, _ in comps)
             vmax = max(sv for _, _, sv, _ in comps)
             mcx_n = (width + 8 * hmax - 1) // (8 * hmax)
             mcy_n = (height + 8 * vmax - 1) // (8 * vmax)
+            # every coded block costs at least one bit, and the MCU
+            # padding at most quadruples a component's coded grid: a
+            # larger frame is a corrupt header, refused before the
+            # buffers are allocated
+            padded = mcx_n * mcy_n * sum(sh * sv for _, sh, sv, _ in comps)
+            if padded > 32 * len(payload):
+                raise ValueError("JPEG frame too large for its payload")
             for _, sh, sv, _ in comps:
                 coeffs.append(
                     np.zeros((mcy_n * sv, mcx_n * sh, 64), dtype=np.int64)
@@ -1316,66 +1041,68 @@ def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
                 cw = (width * sh + hmax - 1) // hmax
                 ch = (height * sv + vmax - 1) // vmax
                 grids.append(((cw + 7) // 8, (ch + 7) // 8))
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "decode_jpeg_progressive requires SOF2"
-                f" (found SOF marker 0xFF{marker:02X})"
-            )
-        elif marker == 0xDD:
+        elif marker == 0xDD:  # DRI: restart interval in MCUs
             restart_interval = struct.unpack(">H", data[:2])[0]
-        elif marker == 0xDA:
-            if width is None:
-                raise ValueError("SOS before SOF2")
+        elif marker == 0xDA:  # SOS
+            if not comps:
+                raise ValueError("JPEG scan before its frame header")
             ns = data[0]
-            if len(data) != 4 + 2 * ns:
-                raise ValueError("malformed SOS header")
-            scan_map = []
+            if sequential and ns != len(comps):
+                raise NotImplementedError("non-interleaved scans")
+            if ns == 0:
+                raise ValueError("SOS selects no component")
+            if sequential:
+                ss, se, ah, al = 0, 63, 0, 0
+            else:
+                if len(data) != 4 + 2 * ns:
+                    raise ValueError("malformed SOS header")
+                ss, se, a = data[1 + 2 * ns : 4 + 2 * ns]
+                ah, al = a >> 4, a & 0xF
+                if ss == 0 and se != 0:
+                    raise ValueError("DC scan must have Se = 0")
+                if ss > 0 and (ns != 1 or not ss <= se <= 63):
+                    raise ValueError(
+                        "AC scans must be single-component with a valid band"
+                    )
+                if ah not in (0, al + 1):
+                    raise ValueError("successive approximation must step by 1")
+            # the selector byte is honored, so SOS order may differ
+            # from SOF order; the interleaved MCU walks SOS order
+            slots = []
             for si in range(ns):
-                sel = data[1 + 2 * si]
-                tables = data[2 + 2 * si]
-                matches = [
-                    k for k, (cid, *_r) in enumerate(comps) if cid == sel
-                ]
-                if not matches:
+                sel, tables = data[1 + 2 * si], data[2 + 2 * si]
+                ci = next((k for k, c in enumerate(comps) if c[0] == sel), None)
+                if ci is None:
                     raise ValueError(f"SOS selects undeclared component {sel}")
-                scan_map.append((matches[0], tables >> 4, tables & 0xF))
-            ss, se, a = data[1 + 2 * ns], data[2 + 2 * ns], data[3 + 2 * ns]
-            ah, al = a >> 4, a & 0xF
-            if ss == 0 and se != 0:
-                raise ValueError("DC scan must have Se = 0")
-            if ss > 0 and (ns != 1 or not ss <= se <= 63):
-                raise ValueError(
-                    "AC scans must be single-component with a valid band"
-                )
-            if ah not in (0, al + 1):
-                raise ValueError("successive approximation must step by 1")
-            end = _scan_entropy_end(payload, pos)
-            decode_scan(scan_map, ss, se, ah, al, _BitReader(payload[pos:end]))
+                if any(slot[0] == ci for slot in slots):
+                    raise ValueError("SOS selects a component twice")
+                dc_t = ac_t = None
+                if ss == 0 and ah == 0:
+                    dc_t = huff.get((0, tables >> 4))
+                    if dc_t is None:
+                        raise ValueError("scan references undefined DC table")
+                if se > 0:
+                    ac_t = huff.get((1, tables & 0xF))
+                    if ac_t is None:
+                        raise ValueError("scan references undefined AC table")
+                slots.append((ci, comps[ci][1], comps[ci][2], dc_t, ac_t))
+            _decode_scan(
+                _BitReader(payload, pos), slots, coeffs, grids,
+                (mcx_n, mcy_n), restart_interval, ss, se, ah, al,
+            )
             saw_scan = True
-            pos = end
-    if width is None or not saw_scan:
-        raise ValueError("JPEG missing SOF2 or SOS")
+            if sequential:
+                break
+    if not saw_scan:
+        raise ValueError("JPEG missing SOF or SOS")
 
-    # shared back half: dequantize, de-zigzag, IDCT, level shift
     planes = []
-    for (cid, sh, sv, qid), carr in zip(comps, coeffs):
+    for (_, _, _, qid), carr in zip(comps, coeffs):
         q = quant_tables.get(qid)
         if q is None:
             raise ValueError("frame references undefined quant table")
-        gh, gw = carr.shape[0], carr.shape[1]
-        plane = np.zeros((gh * 8, gw * 8), dtype=np.uint8)
-        coeff = np.zeros(64)
-        for by in range(gh):
-            for bx in range(gw):
-                coeff[_ZZ_FLAT] = carr[by, bx]
-                cq = coeff.reshape(8, 8) * q
-                spatial = _BASIS.T @ cq @ _BASIS + 128.0
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
-                    np.round(spatial), 0, 255
-                ).astype(np.uint8)
-        planes.append(plane)
-
+        planes.append(_idct_plane(carr, q))
+    coeffs.clear()  # free the int64 buffers before the colour step
     full = []
     for p, (_, sh, sv, _) in zip(planes, comps):
         if (sh, sv) != (hmax, vmax):
@@ -1388,38 +1115,183 @@ def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
     return width, height, rgb
 
 
-def decode_jpeg(payload: bytes) -> tuple[int, int, bytes]:
-    """Dispatch on the frame type: SOF0 -> the baseline decoder,
-    SOF2 -> the progressive decoder; other SOFs raise loudly. This is
-    the entry the multimodal tier calls when the encoding family
-    isn't known in advance."""
-    pos, n = 2, len(payload)
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xC0, 0xC1):  # SOF1 = sequential at 8-bit
-            return decode_jpeg_baseline(payload)
-        if marker == 0xC2:
-            return decode_jpeg_progressive(payload)
-        if marker in (0xC3, 0xC5, 0xC6, 0xC7,
-                      0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"unsupported JPEG frame type 0xFF{marker:02X}"
-            )
-        if marker == 0xD9 or marker == 0xDA:
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment header")
-        (seg_len,) = struct.unpack(">H", payload[pos : pos + 2])
-        if seg_len < 2 or pos + seg_len > n:
-            raise ValueError("JPEG segment length out of bounds")
-        pos += seg_len
-    raise ValueError("JPEG has no SOF marker before the scan")
+def _decode_scan(
+    reader: _BitReader,
+    slots: list,
+    coeffs: list[np.ndarray],
+    grids: list[tuple[int, int]],
+    mcu_grid: tuple[int, int],
+    restart_interval: int,
+    ss: int,
+    se: int,
+    ah: int,
+    al: int,
+) -> None:
+    """One scan's entropy data into the coefficient buffers. ``slots``
+    holds (component index, h samp, v samp, DC table, AC table) per
+    scan component in SOS order. Ss=0 with Se=63 is a sequential scan
+    (F.2.2: DC difference then AC run/size symbols per block); the
+    rest are Annex G passes: DC first and refinement, AC first
+    (G.1.2.2, EOBn runs) and AC refinement (G.1.2.3, correction
+    bits). Restart markers follow E.2.4."""
+    eobrun = 0
+    pred = [0] * len(coeffs)
+
+    def block_dc_first(ci, c, by, bx, dc_t, _ac_t) -> None:
+        s = reader.symbol(dc_t)
+        if s:
+            if s > 11:
+                raise ValueError(f"DC difference category {s} out of range")
+            pred[ci] += _extend(reader.bits(s), s)
+        c[by, bx, 0] = pred[ci] << al
+
+    def block_seq(ci, c, by, bx, dc_t, ac_t) -> None:
+        block_dc_first(ci, c, by, bx, dc_t, ac_t)
+        blk = c[by, bx]
+        k = 1
+        while k < 64:
+            rs = reader.symbol(ac_t)
+            if rs == 0x00:  # EOB
+                return
+            if rs == 0xF0:  # ZRL
+                k += 16
+                continue
+            size = rs & 0xF
+            if size == 0:
+                # run/size with size 0 is only valid as EOB or ZRL
+                # (F.1.2.2.1): loud structural failure, not a
+                # negative shift deep in EXTEND
+                raise ValueError(f"invalid AC run/size symbol 0x{rs:02X}")
+            k += rs >> 4
+            if k > 63:
+                raise ValueError("AC run past end of block")
+            blk[k] = _extend(reader.bits(size), size)
+            k += 1
+
+    def block_dc_refine(_ci, c, by, bx, _dc_t, _ac_t) -> None:
+        if reader.bit():
+            c[by, bx, 0] |= 1 << al
+
+    def block_ac_first(_ci, c, by, bx, _dc_t, ac_t) -> None:
+        nonlocal eobrun
+        if eobrun > 0:
+            eobrun -= 1
+            return
+        blk = c[by, bx]
+        k = ss
+        while k <= se:
+            rs = reader.symbol(ac_t)
+            r, s = rs >> 4, rs & 0xF
+            if s == 0:
+                if r != 15:
+                    eobrun = (1 << r) - 1
+                    if r:
+                        eobrun += reader.bits(r)
+                    return
+                k += 16  # ZRL
+                continue
+            k += r
+            if k > se:
+                raise ValueError("AC run past spectral band end")
+            blk[k] = _extend(reader.bits(s), s) << al
+            k += 1
+
+    p1, m1 = 1 << al, -(1 << al)
+
+    def corr_bit(blk, k) -> None:
+        if reader.bit() and (int(blk[k]) & p1) == 0:
+            blk[k] += p1 if blk[k] >= 0 else m1
+
+    def block_ac_refine(_ci, c, by, bx, _dc_t, ac_t) -> None:
+        nonlocal eobrun
+        blk = c[by, bx]
+        k = ss
+        if eobrun == 0:
+            while k <= se:
+                rs = reader.symbol(ac_t)
+                r, s = rs >> 4, rs & 0xF
+                if s:
+                    if s != 1:
+                        raise ValueError("AC refinement size must be 1")
+                    val = p1 if reader.bit() else m1
+                else:
+                    if r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += reader.bits(r)
+                        break
+                    val = 0  # ZRL: skip 16 zero-history slots
+                while k <= se:
+                    if blk[k] != 0:
+                        corr_bit(blk, k)
+                    else:
+                        if r == 0:
+                            break
+                        r -= 1
+                    k += 1
+                if val:
+                    if k > se:
+                        raise ValueError("refinement coefficient past band end")
+                    blk[k] = val
+                k += 1
+        if eobrun > 0:
+            while k <= se:
+                if blk[k] != 0:
+                    corr_bit(blk, k)
+                k += 1
+            eobrun -= 1
+
+    if ss == 0:
+        block = block_seq if se else (
+            block_dc_first if ah == 0 else block_dc_refine
+        )
+    else:
+        block = block_ac_first if ah == 0 else block_ac_refine
+
+    rst_n = 0
+    mcu = 0
+
+    def boundary() -> None:
+        nonlocal rst_n, eobrun
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            reader.expect_restart(rst_n)
+            rst_n = (rst_n + 1) & 7
+            pred[:] = [0] * len(pred)
+            eobrun = 0
+
+    if len(slots) > 1:  # interleaved MCUs (A.2.3)
+        mcx_n, mcy_n = mcu_grid
+        for my in range(mcy_n):
+            for mx in range(mcx_n):
+                boundary()
+                mcu += 1
+                for ci, sh, sv, dc_t, ac_t in slots:
+                    c = coeffs[ci]
+                    for vy in range(sv):
+                        for vx in range(sh):
+                            block(ci, c, my * sv + vy, mx * sh + vx, dc_t, ac_t)
+    else:
+        ci, _, _, dc_t, ac_t = slots[0]
+        c = coeffs[ci]
+        bw, bh = grids[ci]
+        for by in range(bh):
+            for bx in range(bw):
+                boundary()
+                mcu += 1
+                block(ci, c, by, bx, dc_t, ac_t)
+
+
+def _idct_plane(carr: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Dequantize, de-zigzag, 2-D IDCT (A.3.3), level shift and clamp
+    every block of one component's coefficient buffer."""
+    gh, gw = carr.shape[0], carr.shape[1]
+    plane = np.zeros((gh * 8, gw * 8), dtype=np.uint8)
+    coeff = np.zeros(64)
+    for by in range(gh):
+        for bx in range(gw):
+            coeff[_ZZ_FLAT] = carr[by, bx]
+            spatial = _BASIS.T @ (coeff.reshape(8, 8) * q) @ _BASIS + 128.0
+            plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
+                np.round(spatial), 0, 255
+            ).astype(np.uint8)
+    return plane

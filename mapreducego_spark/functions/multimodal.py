@@ -1,14 +1,15 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata, processed by Arrow-batched Pandas UDFs.
 
-Image decode is REAL for PNG and baseline JPEG: a minimal
-spec-correct pure-stdlib PNG decoder (zlib inflate + all five
-scanline filters, 8-bit gray/RGB/RGBA) and a baseline-sequential
-JPEG decoder (jpegcodec.py: canonical Huffman from DHT, dequant,
-IDCT, fixed-point YCbCr->RGB) handle actual bytes -> pixels in this
-container; PIL is used instead when importable (probed at import).
-Other formats remain a declared NotImplementedError unless
-``fake=True`` selects the deterministic md5-derived test double.
+Image decode is REAL for PNG and JPEG: a minimal spec-correct
+pure-stdlib PNG decoder (zlib inflate + all five scanline filters,
+8-bit gray/RGB/RGBA) and one JPEG decoder for sequential and
+progressive frames (jpegcodec.decode_jpeg: canonical Huffman from
+DHT, dequant, IDCT, fixed-point YCbCr->RGB) handle actual bytes ->
+pixels in this container; PIL is used instead when importable
+(probed at import). Other formats remain a declared
+NotImplementedError unless ``fake=True`` selects the deterministic
+md5-derived test double.
 
 At 100 TB the pattern that matters is here: binary payloads NEVER
 pass through Python row-at-a-time; mapInPandas streams Arrow
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreducego_spark.functions.jpegcodec import jpeg_segment, jpeg_segments
 from mapreducego_spark.operators.util import (
     sort_once,
     stage_items,
@@ -775,7 +777,7 @@ def decode_image(payload: bytes, fake: bool = False) -> tuple[int, int, str]:
 
     Real path: PIL when importable (probed at module import), else
     the pure-stdlib ``decode_png`` for PNG payloads and the
-    pure-stdlib+numpy baseline JPEG decoder (jpegcodec.py: Huffman +
+    pure-stdlib+numpy JPEG decoder (jpegcodec.decode_jpeg: Huffman +
     dequant + IDCT + fixed-point YCbCr) for JPEG payloads — actual
     pixel dimensions plus an md5 of the decoded RGB bytes as the
     content feature. Other formats without PIL raise a declared
@@ -928,12 +930,6 @@ def multimodal_decode(
 JPEG_SOI = b"\xff\xd8"
 
 
-def _jpeg_segment(marker: int, data: bytes) -> bytes:
-    """One marker segment: FF <marker> <2-byte big-endian length
-    INCLUDING the length field itself> <data> (ITU-T T.81 §B.1.1.4)."""
-    return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-
 def build_exif(
     byte_order: str,
     orientation: int,
@@ -1028,6 +1024,8 @@ def parse_exif(app1: bytes) -> dict:
         e = ">"
     else:
         raise ValueError("bad TIFF byte order mark")
+    if len(t) < 8:
+        raise ValueError("truncated TIFF header")
     magic, ifd0_off = struct.unpack_from(e + "HI", t, 2)
     if magic != 42:
         raise ValueError("bad TIFF magic")
@@ -1133,13 +1131,13 @@ def encode_jpeg_headers(
     stuffed = entropy.replace(b"\xff", b"\xff\x00")
     return (
         JPEG_SOI
-        + _jpeg_segment(0xE0, app0)
-        + (_jpeg_segment(0xE1, app1) if app1 else b"")
-        + _jpeg_segment(0xFE, b"mapreducego_spark fixture")
-        + _jpeg_segment(0xDB, dqt)
-        + _jpeg_segment(0xC2 if progressive else 0xC0, sof)
-        + _jpeg_segment(0xC4, dht)
-        + _jpeg_segment(0xDA, sos)
+        + jpeg_segment(0xE0, app0)
+        + (jpeg_segment(0xE1, app1) if app1 else b"")
+        + jpeg_segment(0xFE, b"mapreducego_spark fixture")
+        + jpeg_segment(0xDB, dqt)
+        + jpeg_segment(0xC2 if progressive else 0xC0, sof)
+        + jpeg_segment(0xC4, dht)
+        + jpeg_segment(0xDA, sos)
         + stuffed
         + b"\xff\xd9"
     )
@@ -1155,42 +1153,20 @@ def jpeg_meta(payload: bytes) -> dict:
     the entropy-coded scan, which is exactly how production header
     sniffers (imagesize, exiftool fast mode) avoid reading the body.
     Raises loudly on anything structurally non-JPEG: no silent
-    guesses on the most common web image format. Pixel DECODE for
-    baseline JPEG lives in jpegcodec.decode_jpeg_baseline (r10; the
-    metadata tier stays scan-free by design — header sniffing must
-    never pay the entropy-decode cost).
+    guesses on the most common web image format.
 
-    Standalone markers without a length field (RSTn, TEM) are
-    tolerated between segments; 0xFF fill bytes before a marker are
-    skipped per §B.1.1.2."""
-    if payload[:2] != JPEG_SOI:
-        raise ValueError("not a JPEG payload (missing SOI)")
+    The walk is jpegcodec.jpeg_segments, the same one the pixel
+    decoder (jpegcodec.decode_jpeg) runs, so both tiers accept and
+    refuse the same marker streams; this tier stays scan-free by
+    design (header sniffing must never pay the entropy-decode cost)
+    and still reports frames the decoder refuses to decode (12-bit
+    precision, sampling factors above 2)."""
     out = {
         "width": None, "height": None, "components": None,
         "precision": None, "progressive": None,
         "density_unit": None, "x_density": None, "y_density": None,
     }
-    pos = 2
-    n = len(payload)
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        # skip 0xFF fill bytes
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI before any SOS/SOF
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:  # RSTn / TEM
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment header")
-        (seg_len,) = struct.unpack(">H", payload[pos : pos + 2])
-        if seg_len < 2 or pos + seg_len > n:
-            raise ValueError("JPEG segment length out of bounds")
-        data = payload[pos + 2 : pos + seg_len]
-        pos += seg_len
+    for marker, data, _ in jpeg_segments(payload):
         if marker == 0xE0 and data[:5] == b"JFIF\x00":
             # JFIF APP0 body is >= 14 bytes (identifier + version +
             # unit + densities + thumbnail dims); require through the
@@ -1203,8 +1179,6 @@ def jpeg_meta(payload: bytes) -> dict:
                 ">HH", data[8:12]
             )
         elif marker in (0xC0, 0xC1, 0xC2):
-            if len(data) < 6:
-                raise ValueError("truncated SOF frame header")
             out["precision"] = data[0]
             out["height"], out["width"] = struct.unpack(">HH", data[1:5])
             out["components"] = data[5]
@@ -1221,27 +1195,9 @@ def jpeg_exif(payload: bytes) -> dict:
     stops at SOS like jpeg_meta) and parse it. Raises ValueError if
     the file carries no Exif block — absent camera metadata is a
     data fact the caller must see, not a silent None row."""
-    if payload[:2] != JPEG_SOI:
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos, n = 2, len(payload)
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9 or marker == 0xDA:
+    for marker, data, _ in jpeg_segments(payload):
+        if marker == 0xDA:
             break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment header")
-        (seg_len,) = struct.unpack(">H", payload[pos : pos + 2])
-        if seg_len < 2 or pos + seg_len > n:
-            raise ValueError("JPEG segment length out of bounds")
-        data = payload[pos + 2 : pos + seg_len]
-        pos += seg_len
         if marker == 0xE1 and data[:6] == b"Exif\x00\x00":
             return parse_exif(data)
     raise ValueError("JPEG carries no Exif APP1 segment")
@@ -1416,10 +1372,10 @@ def multimodal_resize_box(
     scan, one Arrow crossing, no shuffle before the presentation
     sort. At production scale this is the thumbnail pass that feeds
     perceptual dedup and preview sinks."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
+    from mapreducego_spark.functions.jpegcodec import decode_jpeg
 
     def row(mid: int, payload: bytes) -> tuple:
-        w, h, rgb = decode_jpeg_baseline(payload)
+        w, h, rgb = decode_jpeg(payload)
         a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3).astype(np.int64)
         h2, w2 = h // 2, w // 2
         a = a[: h2 * 2, : w2 * 2]
@@ -1920,7 +1876,7 @@ def encode_jpeg_oriented_fixture(i: int) -> bytes:
     i % 8 + 1, spliced directly after SOI — exactly where cameras put
     it. Both byte orders cycle like the exif fixture."""
     base = encode_jpeg_pixels_fixture(i)
-    return base[:2] + _jpeg_segment(0xE1, _exif_app1(i)) + base[2:]
+    return base[:2] + jpeg_segment(0xE1, _exif_app1(i)) + base[2:]
 
 
 def stage_jpeg_oriented(sf_dir: str, n: int = 240) -> str:
@@ -2464,12 +2420,12 @@ def mine_image_text_pairs_semantic(
     rows); the 64-element integer folds are per-row expressions.
     At production scale the signature kernel stays in the decode
     pass and the join key is the crawl linkage id either way."""
-    from mapreducego_spark.functions.jpegcodec import decode_jpeg_baseline
+    from mapreducego_spark.functions.jpegcodec import decode_jpeg
     from mapreducego_spark.functions.text import tokens_col
     from mapreducego_spark.sources.catalog import load_table
 
     def signature(mid: int, payload: bytes) -> tuple:
-        w, h, rgb = decode_jpeg_baseline(payload)
+        w, h, rgb = decode_jpeg(payload)
         a = np.frombuffer(rgb, np.uint8).reshape(h, w, 3).astype(np.int64)
         wgt = a[:, :, 0] + 2 * a[:, :, 1] + 3 * a[:, :, 2]
         bucket = (

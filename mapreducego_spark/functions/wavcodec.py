@@ -122,6 +122,35 @@ def encode_wav_pcm(
     return b"RIFF" + struct.pack("<I", len(body)) + bytes(body)
 
 
+def walk_chunks(buf: bytes, pos: int, end: int):
+    """Yield (fourcc, body_start, size) over one RIFF chunk sequence
+    in ``buf[pos:end]``, skipping word-alignment pads; loud on a
+    chunk that overruns its parent."""
+    while pos + 8 <= end:
+        cid = buf[pos : pos + 4]
+        (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
+        body = pos + 8
+        if body + size > end:
+            raise ValueError(
+                f"RIFF chunk {cid!r} declares {size} bytes past its parent"
+            )
+        yield cid, body, size
+        pos = body + size + (size % 2)
+
+
+def riff_chunks(payload: bytes, form: bytes):
+    """Check the RIFF header of a ``form`` file (``b"WAVE"``,
+    ``b"AVI "``) and walk its top-level chunks like ``walk_chunks``."""
+    if len(payload) < 12 or payload[:4] != b"RIFF":
+        raise ValueError("not a RIFF file")
+    (riff_size,) = struct.unpack("<I", payload[4:8])
+    if payload[8:12] != form:
+        raise ValueError(f"RIFF file is not {form.decode().strip()}")
+    if riff_size + 8 > len(payload):
+        raise ValueError("RIFF size exceeds payload (truncated file)")
+    yield from walk_chunks(payload, 12, 8 + riff_size)
+
+
 def decode_wav(payload: bytes) -> tuple[dict, np.ndarray]:
     """Decode a WAV file to (meta, samples).
 
@@ -157,24 +186,9 @@ def parse_wav_meta(payload: bytes, want_data: bool = False) -> dict:
     WITHOUT decoding samples (the scan-free tier): fmt header fields
     plus the frame count and exact integer duration derived from the
     data chunk's declared size."""
-    if len(payload) < 12 or payload[:4] != b"RIFF":
-        raise ValueError("not a RIFF file")
-    (riff_size,) = struct.unpack("<I", payload[4:8])
-    if payload[8:12] != b"WAVE":
-        raise ValueError("RIFF file is not WAVE")
-    if riff_size + 8 > len(payload):
-        raise ValueError("RIFF size exceeds payload (truncated file)")
-    pos, end = 12, 8 + riff_size
     fmt = None
     data_info = None
-    while pos + 8 <= end:
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body_start = pos + 8
-        if body_start + size > end:
-            raise ValueError(
-                f"chunk {cid!r} declares {size} bytes past end of file"
-            )
+    for cid, body_start, size in riff_chunks(payload, b"WAVE"):
         if cid == b"fmt ":
             if size < 16:
                 raise ValueError("fmt chunk shorter than PCM header")
@@ -222,8 +236,6 @@ def parse_wav_meta(payload: bytes, want_data: bool = False) -> dict:
             }
         elif cid == b"data":
             data_info = (body_start, size)
-        # skip body + word-alignment pad
-        pos = body_start + size + (size % 2)
     if fmt is None:
         raise ValueError("WAV missing fmt chunk")
     if data_info is None:

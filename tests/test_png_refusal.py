@@ -1,6 +1,7 @@
-"""Refusal contract under seeded byte mutations, for the PNG decoder
-and the WARC archive parser: every mutated fixture either decodes or
-raises ValueError / NotImplementedError.
+"""Refusal contract under seeded byte mutations, for the PNG decoder,
+the JPEG decoders and header parsers, and the WARC archive parser:
+every mutated fixture either decodes or raises ValueError /
+NotImplementedError.
 
 A raw zlib.error, struct.error or MemoryError escaping the decoder
 would kill a Python worker on the first corrupt file of a crawl.
@@ -11,8 +12,13 @@ from __future__ import annotations
 import os
 import random
 import shutil
+import struct
 import uuid
 
+import numpy as np
+import pytest
+
+from mapreducego_spark.functions import jpegcodec as J
 from mapreducego_spark.functions import multimodal as M
 from mapreducego_spark.sources import warccodec as W
 
@@ -56,6 +62,41 @@ def _mutants(blob: bytes, rng: random.Random):
         yield "splice", blob[:at] + b"\xff\xff" + blob[at + 2 :]
 
 
+def _short_segments(blob: bytes):
+    """Every JPEG segment up to and including the first SOS,
+    re-declared with each length from 2 to its real length minus 1:
+    the walk then resumes inside the segment body, and the decoder
+    sees a body too short for its own fields."""
+    pos = 2
+    while True:
+        marker = blob[pos + 1]
+        (length,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
+        for short in range(2, length):
+            yield (
+                f"short FF{marker:02X} len {short}",
+                blob[: pos + 2] + struct.pack(">H", short) + blob[pos + 4 :],
+            )
+        if marker == 0xDA:
+            return
+        pos += 2 + length
+
+
+def _jpeg_mutants(blob: bytes, rng: random.Random):
+    yield from _mutants(blob, rng)
+    yield from _short_segments(blob)
+
+
+def _jpeg_families() -> dict[str, list[bytes]]:
+    """N sequential fixtures (the restart family: DRI in every file,
+    gray and 4:4:4) and N progressive ones (restarts in every third)."""
+    return {
+        "baseline": [M.encode_jpeg_pixels_fixture_rst(i) for i in range(N)],
+        "progressive": [
+            M.encode_jpeg_pixels_fixture_prog(i) for i in range(N)
+        ],
+    }
+
+
 def _warc_archives() -> list[bytes]:
     """N per-record-gzipped archives (the Common Crawl packaging): a
     warcinfo record, then one to three response records."""
@@ -74,10 +115,10 @@ def _warc_archives() -> list[bytes]:
     return archives
 
 
-def _leaks(decode, blobs: list[bytes], rng: random.Random):
+def _leaks(decode, blobs: list[bytes], rng: random.Random, mutants=_mutants):
     leaks, cases = [], 0
     for k, blob in enumerate(blobs):
-        for kind, mutant in _mutants(blob, rng):
+        for kind, mutant in mutants(blob, rng):
             cases += 1
             try:
                 decode(mutant)
@@ -101,3 +142,40 @@ def test_warc_mutations_refuse_with_declared_errors():
     cases, leaks = _leaks(W.parse_warc, _warc_archives(), random.Random(SEED))
     assert cases == 7 * N
     assert not leaks, f"{len(leaks)} of {cases} leaked: {leaks[:5]}"
+
+
+@pytest.mark.parametrize("decode", [
+    J.decode_jpeg, J.decode_jpeg_baseline, J.decode_jpeg_progressive,
+    M.jpeg_meta, M.jpeg_exif,
+], ids=lambda f: f.__name__)
+def test_jpeg_mutations_refuse_with_declared_errors(decode):
+    leaks = []
+    for family, blobs in _jpeg_families().items():
+        _, found = _leaks(decode, blobs, random.Random(SEED), _jpeg_mutants)
+        leaks += [f"{family} {leak}" for leak in found]
+    assert not leaks, f"{len(leaks)} leaked: {leaks[:5]}"
+
+
+def test_jpeg_meta_refuses_sof_shorter_than_its_component_list():
+    # three components declared, one component triple present
+    sof = bytes([8, 0, 16, 0, 16, 3, 1, 0x11, 0])
+    payload = (
+        b"\xff\xd8\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
+        + b"\xff\xd9"
+    )
+    with pytest.raises(ValueError, match="truncated SOF"):
+        M.jpeg_meta(payload)
+
+
+def test_jpeg_dc_category_out_of_range_refuses():
+    """The DC table's values re-declared as categories 60..71 (8-bit
+    frames use 0..11): the decoder must refuse before a 60-bit
+    difference overflows its int64 coefficient buffers."""
+    px = np.random.RandomState(3).randint(0, 256, 32 * 32, np.uint8).tobytes()
+    for jpg in (J.encode_jpeg_progressive(32, 32, [px]),
+                J.encode_jpeg_baseline(32, 32, [px])):
+        b = bytearray(jpg)
+        vals = jpg.find(b"\xff\xc4") + 4 + 1 + 16  # DC table values
+        b[vals : vals + len(J.DC_VALS)] = bytes(v + 60 for v in J.DC_VALS)
+        with pytest.raises(ValueError, match="DC difference category"):
+            J.decode_jpeg(bytes(b))

@@ -1,8 +1,8 @@
 """Round-17 additions: VP8L spec-exact predictors + meta prefix
 codes (r16 verdict #4 / ADVICE), the shared MSB-first early-change
-LZW core, TIFF Compression 5 + Predictor 2 (r16 verdict #3), PDF
-LZWDecode content streams (r16 verdict #5), and the vacuum
-manifest-orphan sweep (ADVICE)."""
+LZW core, and TIFF Compression 5 + Predictor 2 (r16 verdict #3).
+The PDF LZWDecode tests live in test_sources.py and the vacuum
+manifest-orphan sweep in test_snapshots.py."""
 
 from __future__ import annotations
 
@@ -446,109 +446,3 @@ def test_tiff_lzw_scope_refusals():
         decode_tiff(patched(base, 317, 3))
     with pytest.raises(NotImplementedError, match="outside LZW"):
         decode_tiff(patched(base, 259, 1))
-
-
-# ----------------------------------------------------------- PDF LZW
-
-
-def test_pdf_lzw_content_streams_parse_and_are_gated():
-    from mapreducego_spark.sources.pdfcodec import (
-        append_incremental_update,
-        build_pdf,
-        parse_pdf,
-        render_page_content,
-    )
-
-    pages = [
-        render_page_content([f"page {k} body text"], f"f{k}", "standard")
-        for k in range(3)
-    ]
-    pdf = build_pdf(pages, [False, "flate", "lzw"])
-    p = parse_pdf(pdf)
-    assert [pg["stream_filter"] for pg in p["pages"]] == [
-        "raw", "flate", "lzw",
-    ]
-    assert [pg["compressed"] for pg in p["pages"]] == [
-        False, True, True,
-    ]
-    assert "page 2 body text" in p["pages"][2]["text"]
-    # the 1.5 xref-stream form carries LZW pages too
-    p = parse_pdf(build_pdf(pages[:2], ["lzw", "raw"], xref_form="stream"))
-    assert p["xref_form"] == "stream"
-    assert [pg["stream_filter"] for pg in p["pages"]] == ["lzw", "raw"]
-    # an incremental update re-compresses the last page with Flate —
-    # the newest revision wins over the original LZW stream
-    pdf = append_incremental_update(build_pdf(pages[:2], [False, "lzw"]), "t")
-    p = parse_pdf(pdf)
-    assert p["xref_form"] == "incremental"
-    assert [pg["stream_filter"] for pg in p["pages"]] == ["raw", "flate"]
-    # bool compress flags still mean flate (back-compat)
-    assert parse_pdf(build_pdf(pages[:1], [True]))["pages"][0][
-        "stream_filter"
-    ] == "flate"
-
-
-def test_pdf_lzw_corrupt_stream_refuses():
-    from mapreducego_spark.sources.pdfcodec import (
-        build_pdf,
-        parse_pdf,
-        render_page_content,
-    )
-
-    pdf = build_pdf(
-        [render_page_content(["some body"], "f", "standard")], ["lzw"]
-    )
-    # truncate inside the LZW stream body (between stream/endstream):
-    # the reader must name the corrupt filter, never mis-extract
-    at = pdf.index(b"stream\n") + len(b"stream\n")
-    end = pdf.index(b"\nendstream", at)
-    bad = pdf[:at] + pdf[at : end - 4] + pdf[end:]
-    with pytest.raises(ValueError):
-        parse_pdf(bad)
-
-
-# ------------------------------------------------- vacuum manifests
-
-
-def test_vacuum_sweeps_orphan_manifests_keeps_referenced(
-    spark, tmp_path
-):
-    """A crash between the manifest write and the log publish leaves
-    a token-suffixed manifest no log entry names; vacuum removes it
-    (and stray .tmp files) while keeping every log-named manifest."""
-    import os
-
-    from mapreducego_spark.sources.snapshots import (
-        commit_snapshot,
-        read_snapshot,
-        vacuum,
-    )
-
-    table = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "b")], ["k", "val"]
-    )
-    commit_snapshot(df, table)                       # v0 full
-    commit_snapshot(
-        spark.createDataFrame([(3, "c")], ["k", "val"]),
-        table,
-        mode="append",
-    )                                                # v1 manifest
-    mdir = os.path.join(table, "_MANIFESTS")
-    live = set(os.listdir(mdir))
-    assert live, "append commit should have written a manifest"
-    orphan = os.path.join(mdir, "00000002-00dead00dead.json")
-    with open(orphan, "w") as f:
-        f.write("{}")
-    tmp_leak = os.path.join(mdir, "00000002-00dead00dead.json.tmp")
-    with open(tmp_leak, "w") as f:
-        f.write("{}")
-    removed = vacuum(table, keep_last=5)
-    assert removed == []  # retention never touched
-    assert not os.path.exists(orphan)
-    assert not os.path.exists(tmp_leak)
-    assert set(os.listdir(mdir)) == live
-    got = {
-        (r["k"], r["val"]) for r in read_snapshot(spark, table).collect()
-    }
-    assert got == {(1, "a"), (2, "b"), (3, "c")}

@@ -599,3 +599,50 @@ def test_snapshot_random_op_sequences_match_dict_model(spark, tmp_path):
                 for r in read_snapshot(spark, table, ver).collect()
             }
             assert got == states[ver], (seed, ver)
+
+
+# ------------------------------------------------- vacuum manifests
+
+
+def test_vacuum_sweeps_orphan_manifests_keeps_referenced(
+    spark, tmp_path
+):
+    """A crash between the manifest write and the log publish leaves
+    a token-suffixed manifest no log entry names; vacuum removes it
+    (and stray .tmp files) while keeping every log-named manifest."""
+    import os
+
+    from mapreducego_spark.sources.snapshots import (
+        commit_snapshot,
+        read_snapshot,
+        vacuum,
+    )
+
+    table = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b")], ["k", "val"]
+    )
+    commit_snapshot(df, table)                       # v0 full
+    commit_snapshot(
+        spark.createDataFrame([(3, "c")], ["k", "val"]),
+        table,
+        mode="append",
+    )                                                # v1 manifest
+    mdir = os.path.join(table, "_MANIFESTS")
+    live = set(os.listdir(mdir))
+    assert live, "append commit should have written a manifest"
+    orphan = os.path.join(mdir, "00000002-00dead00dead.json")
+    with open(orphan, "w") as f:
+        f.write("{}")
+    tmp_leak = os.path.join(mdir, "00000002-00dead00dead.json.tmp")
+    with open(tmp_leak, "w") as f:
+        f.write("{}")
+    removed = vacuum(table, keep_last=5)
+    assert removed == []  # retention never touched
+    assert not os.path.exists(orphan)
+    assert not os.path.exists(tmp_leak)
+    assert set(os.listdir(mdir)) == live
+    got = {
+        (r["k"], r["val"]) for r in read_snapshot(spark, table).collect()
+    }
+    assert got == {(1, "a"), (2, "b"), (3, "c")}

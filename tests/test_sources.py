@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 import pyspark.sql.functions as F
 
 from mapreducego_spark.sources.catalog import (
@@ -1690,3 +1691,62 @@ def test_pdf_mixed_fonts_and_uni_glyph_names():
         _glyph_to_char("g1234")
 
     del zlib
+
+
+# ----------------------------------------------------------- PDF LZW
+
+
+def test_pdf_lzw_content_streams_parse_and_are_gated():
+    from mapreducego_spark.sources.pdfcodec import (
+        append_incremental_update,
+        build_pdf,
+        parse_pdf,
+        render_page_content,
+    )
+
+    pages = [
+        render_page_content([f"page {k} body text"], f"f{k}", "standard")
+        for k in range(3)
+    ]
+    pdf = build_pdf(pages, [False, "flate", "lzw"])
+    p = parse_pdf(pdf)
+    assert [pg["stream_filter"] for pg in p["pages"]] == [
+        "raw", "flate", "lzw",
+    ]
+    assert [pg["compressed"] for pg in p["pages"]] == [
+        False, True, True,
+    ]
+    assert "page 2 body text" in p["pages"][2]["text"]
+    # the 1.5 xref-stream form carries LZW pages too
+    p = parse_pdf(build_pdf(pages[:2], ["lzw", "raw"], xref_form="stream"))
+    assert p["xref_form"] == "stream"
+    assert [pg["stream_filter"] for pg in p["pages"]] == ["lzw", "raw"]
+    # an incremental update re-compresses the last page with Flate —
+    # the newest revision wins over the original LZW stream
+    pdf = append_incremental_update(build_pdf(pages[:2], [False, "lzw"]), "t")
+    p = parse_pdf(pdf)
+    assert p["xref_form"] == "incremental"
+    assert [pg["stream_filter"] for pg in p["pages"]] == ["raw", "flate"]
+    # bool compress flags still mean flate (back-compat)
+    assert parse_pdf(build_pdf(pages[:1], [True]))["pages"][0][
+        "stream_filter"
+    ] == "flate"
+
+
+def test_pdf_lzw_corrupt_stream_refuses():
+    from mapreducego_spark.sources.pdfcodec import (
+        build_pdf,
+        parse_pdf,
+        render_page_content,
+    )
+
+    pdf = build_pdf(
+        [render_page_content(["some body"], "f", "standard")], ["lzw"]
+    )
+    # truncate inside the LZW stream body (between stream/endstream):
+    # the reader must name the corrupt filter, never mis-extract
+    at = pdf.index(b"stream\n") + len(b"stream\n")
+    end = pdf.index(b"\nendstream", at)
+    bad = pdf[:at] + pdf[at : end - 4] + pdf[end:]
+    with pytest.raises(ValueError):
+        parse_pdf(bad)
