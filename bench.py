@@ -4,8 +4,9 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is executed to completion (collect) after a warm-up of the
-session; timings are per-query wall clock. The headline set spans the
+Each query is written to the noop sink after a warm-up of the session
+(tools/harness.py); timings are per-query best-of-3 wall clock, and
+BENCH_DETAIL.json holds the full record. The headline set spans the
 engine's tiers: scan+agg, multi-join, windows, session windows, as-of,
 MinHash dedup, vector top-k, and the Map/Reduce plugin tier.
 """
@@ -18,9 +19,11 @@ import json
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+from tools.harness import start, timed_runs, warm_up, write_artifact  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -262,7 +265,7 @@ HEADLINE_SMALL = [
 # carry a measured point, not just plan shapes. Fixed local[32]
 # resources with 10x rows: ratio <= 10 is at-or-below linear
 # (overhead amortizing), > SUPERLINEAR_RATIO gets flagged and must
-# be explained in the round notes. Disable with SPARK_GRAFT_SF1=0.
+# be explained in the round notes.
 SCALE_SET = [
     "agg_pricing_summary",
     "join_inner",
@@ -329,23 +332,29 @@ SCALE_SET = [
 SUPERLINEAR_RATIO = 12.0
 
 
+# best-of-N per query: single runs on a shared JVM show ±0.5-1s
+# run-to-run jitter (GC, codegen compilation, OS noise), which drowned
+# real deltas in round 2/3 regression counts; the minimum is the
+# standard low-variance estimator of a query's actual cost.
+# Streaming-sink queries run best-of-2: the FIRST run of a streaming
+# pipeline also pays one-time whole-stage-codegen compilation (~4s
+# measured), which is session setup, not query cost — one repeat
+# separates the two without tripling the checkpointed writes.
+REPS = 3
+
+
+def _best(spark, app: str, name: str, sf_dir: str, reps: int = REPS) -> float:
+    return min(timed_runs(spark, app, name, sf_dir, reps))
+
+
 def _sf1_scaling(spark, timings: dict[str, float]) -> dict:
     from tools.make_sf1 import ensure_sf1
-
-    from mapreducego_spark.registry import QUERIES
 
     sf1_dir = ensure_sf1()
     block: dict = {"sf_dir": sf1_dir, "amplification": 10, "queries": {}}
     flagged = []
     for name in SCALE_SET:
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf1_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            elapsed = time.perf_counter() - t0
-            best = elapsed if best is None else min(best, elapsed)
+        best = _best(spark, "bench-sf1", name, sf1_dir, 2)
         base = timings.get(name)
         ratio = round(best / base, 2) if base else None
         block["queries"][name] = {
@@ -360,86 +369,42 @@ def _sf1_scaling(spark, timings: dict[str, float]) -> dict:
     return block
 
 
+def _probe(spark) -> float:
+    """Host-speed calibration probe (r10 verdict item 8): the SAME
+    fixed query under the SAME best-of-3 protocol as the headline set,
+    run at start and end of the bench so every BENCH_r* carries a
+    MEASURED intra-run drift band. Two runs of identical r10 code
+    landed -5.4% vs +7.0% like-for-like (both inside NOTES_r08's ±12%
+    host-drift band); the probe pins how much of any round-over-round
+    delta is host load rather than code."""
+    return round(_best(spark, "bench-probe", "agg_pricing_summary", SF_DIR), 3)
+
+
 def main() -> None:
-    from mapreducego_spark.registry import QUERIES
-    from mapreducego_spark.session import get_spark
+    from mapreducego_spark.session import DEFAULT_CPUS
 
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm up the JVM + parquet footer caches so q1 doesn't pay
-    # session startup: one tiny query plus a footer-read of each
-    # fixture table (counts read metadata only, no column data).
-    QUERIES["topk"](spark, SF_DIR).collect()
-    from mapreducego_spark.sources.catalog import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
+    spark = start("bench")
+    warm_up(spark, SF_DIR)
     # warm the calibration probe's own plan once before its start
     # measurement, so the band measures HOST drift, not whole-stage
     # codegen warm-up (first r11 run: 1.45s start vs 1.06s end =
     # a 26% "band" that was mostly JIT, not load)
-    QUERIES["agg_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    timed_runs(spark, "bench-warmup", "agg_pricing_summary", SF_DIR, 1)
 
-    def _probe() -> float:
-        """Host-speed calibration probe (r10 verdict item 8): the
-        SAME fixed query under the SAME best-of-3 protocol as the
-        headline set, run at start and end of the bench so every
-        BENCH_r* carries a MEASURED intra-run drift band. Two runs
-        of identical r10 code landed -5.4% vs +7.0% like-for-like
-        (both inside NOTES_r08's ±12% host-drift band); the probe
-        pins how much of any round-over-round delta is host load
-        rather than code."""
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            QUERIES["agg_pricing_summary"](spark, SF_DIR).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            best = min(best or 9e9, time.perf_counter() - t0)
-        return round(best, 3)
-
-    probe_start = _probe()
+    probe_start = _probe(spark)
     timings: dict[str, float] = {}
-    runs = [(name, SF_DIR, name) for name in HEADLINE] + [
-        (q, d, label) for q, d, label in HEADLINE_SMALL
-    ]
-    # best-of-N per query: single runs on a shared 32-thread JVM show
-    # ±0.5-1s run-to-run jitter (GC, codegen compilation, OS noise),
-    # which drowned real deltas in round 2/3 regression counts; the
-    # minimum is the standard low-variance estimator of a query's
-    # actual cost. Streaming-sink queries run best-of-2 (not 3):
-    # their wall is a real checkpointed write, but the FIRST run of
-    # a streaming pipeline also pays one-time whole-stage-codegen
-    # compilation (~4s measured), which is session setup, not query
-    # cost — one repeat separates the two without tripling the
-    # filesystem work.
-    n_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    runs = [(name, SF_DIR, name) for name in HEADLINE] + HEADLINE_SMALL
     for name, sf_dir, label in runs:
-        reps = 2 if name.startswith("stream_") else n_reps
-        best = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            # noop sink: executes the FULL plan (no count()
-            # short-circuit, no driver collect bottleneck) — the
-            # honest execution time.
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            best = elapsed if best is None else min(best, elapsed)
-        timings[label] = round(best, 3)
+        reps = 2 if name.startswith("stream_") else REPS
+        timings[label] = round(_best(spark, "bench", name, sf_dir, reps), 3)
         print(f"# {label}: {timings[label]:.3f}s", file=sys.stderr)
 
-    sf1_block = None
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
-        try:
-            sf1_block = _sf1_scaling(spark, timings)
-        except Exception as ex:  # noqa: BLE001 — scaling block is best-effort
-            sf1_block = {"error": str(ex)[:200]}
+    try:
+        sf1_block = _sf1_scaling(spark, timings)
+    except Exception as ex:  # noqa: BLE001 — scaling block is best-effort
+        sf1_block = {"error": str(ex)[:200]}
 
-    probe_end = _probe()
+    probe_end = _probe(spark)
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1)) if m else None
     total = round(sum(timings.values()), 3)
@@ -449,10 +414,10 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # methodology note: per-query wall is min over n_reps runs
+        # methodology note: per-query wall is min over REPS runs
         # (rounds <= r02 were single-run, so part of any r02->r03
         # improvement is the estimator change, not just the code)
-        "timing": f"best_of_{n_reps}_noop_sink" if n_reps > 1 else "single_run_noop_sink",
+        "timing": f"best_of_{REPS}_noop_sink",
         # measured intra-run drift band (r10 verdict item 8): the
         # fixed probe's best-of-3 at bench start vs end; cross-run
         # deltas smaller than this band are host load, not code
@@ -465,10 +430,9 @@ def main() -> None:
                 / max(probe_start, 1e-9) * 100, 1,
             ),
         },
+        "sf1": sf1_block,
     }
-    if sf1_block is not None:
-        out["sf1"] = sf1_block
-    prev_round, prev = _latest_prev_bench()
+    prev_round, prev = _latest_prev_bench(DEFAULT_CPUS)
     if prev:
         out["prev_round"] = prev_round
         out["delta_vs_prev"] = {
@@ -509,12 +473,10 @@ def main() -> None:
     # front-truncated "tail" — the full-detail line outgrew the
     # buffer), so the one JSON line the driver parses must stay under
     # that budget. Everything else lives in BENCH_DETAIL.json.
-    here = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(here, "BENCH_DETAIL.json")
     # Ratio-of-ratios scale profile (tools/scale_profile.py, r8
     # verdict item 5): embedded verbatim when present so the detail
     # artifact carries the third-scale-point diagnosis rows.
-    profile_path = os.path.join(here, "SCALE_PROFILE.json")
+    profile_path = os.path.join(HERE, "SCALE_PROFILE.json")
     if os.path.exists(profile_path):
         try:
             with open(profile_path) as fh:
@@ -522,9 +484,7 @@ def main() -> None:
         except (OSError, ValueError) as ex:
             out["scale_profile"] = {"error": str(ex)[:200]}
     try:
-        with open(detail_path, "w") as fh:
-            json.dump(out, fh, indent=1)
-            fh.write("\n")
+        detail_path = write_artifact("BENCH_DETAIL.json", out, sort_keys=False)
         # bind the compact line to the committed detail artifact: a
         # reader of BENCH_rNN can check the digest against
         # BENCH_DETAIL.json and know the omitted timings were not
@@ -634,44 +594,24 @@ def _compact_line(out: dict) -> dict:
     return compact
 
 
-def _latest_prev_bench() -> tuple[str | None, dict[str, float] | None]:
-    """Per-query timings from the newest BENCH_r*.json, so every run
-    self-reports regressions against the last recorded round."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    for path in reversed(paths):
+def _latest_prev_bench(
+    cpus: int, root: str = HERE
+) -> tuple[str | None, dict[str, float] | None]:
+    """Per-query timings from the newest BENCH_r*.json recorded on
+    ``cpus`` cores, labelled with its file stem, so every run reports
+    regressions like for like: wall times taken on another core count
+    are not comparable. (None, None) when no recorded run matches."""
+    for path in sorted(glob.glob(os.path.join(root, "BENCH_r*.json")), reverse=True):
         try:
             with open(path) as fh:
                 data = json.load(fh)
-            # the round driver wraps bench.py's JSON line under "parsed";
-            # when its parse failed (r4: parsed null), the raw line is
-            # still recoverable from the "tail" capture
-            if "parsed" in data and isinstance(data["parsed"], dict):
-                data = data["parsed"]
-            elif isinstance(data.get("tail"), str):
-                start = data["tail"].find('{"metric"')
-                if start >= 0:
-                    try:
-                        data = json.loads(data["tail"][start:].strip())
-                    except ValueError:
-                        pass
-                else:
-                    # front-truncated tail (r4): the capture starts
-                    # mid-queries-dict. The per-query pairs up to the
-                    # first closing brace are still the timings
-                    # (delta_vs_prev etc. come after that brace).
-                    frag = data["tail"].split("}", 1)[0]
-                    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9][0-9.]*)', frag)
-                    if len(pairs) >= 10:
-                        data = {"queries": {k: float(v) for k, v in pairs}}
-            qs = data.get("queries")
-            if isinstance(qs, dict) and qs:
-                name = re.search(r"BENCH_(r\d+)", path)
-                return (name.group(1) if name else path), {
-                    q: float(v) for q, v in qs.items()
-                }
         except (OSError, ValueError):
             continue
+        # the round driver wraps bench.py's JSON line under "parsed"
+        qs = (data.get("parsed") or {}).get("queries")
+        if data.get("cpus") == cpus and isinstance(qs, dict) and qs:
+            stem = os.path.splitext(os.path.basename(path))[0]
+            return stem, {q: float(v) for q, v in qs.items()}
     return None, None
 
 

@@ -358,6 +358,8 @@ def decode_gif(payload: bytes):
             raise ValueError("image has neither local nor global palette")
         if left + fw > width or top + fh > height:
             raise ValueError("image descriptor exceeds the logical screen")
+        if pos >= len(payload):
+            raise ValueError("truncated image data")
         mcs = payload[pos]
         pos += 1
         if not 2 <= mcs <= 8:

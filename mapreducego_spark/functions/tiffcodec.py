@@ -307,6 +307,8 @@ def decode_tiff(payload: bytes) -> tuple[dict, np.ndarray]:
         e = ">"
     else:
         raise ValueError("bad TIFF byte order mark")
+    if len(payload) < 8:
+        raise ValueError("truncated TIFF header")
     (magic,) = struct.unpack(e + "H", payload[2:4])
     if magic != 42:
         raise ValueError(f"bad TIFF magic {magic} (want 42)")
@@ -389,6 +391,8 @@ def decode_tiff(payload: bytes) -> tuple[dict, np.ndarray]:
             "predictor 2 outside LZW (TIFF 6.0 §14 scope)"
         )
     rps = one(278, h)
+    if rps < 1:
+        raise ValueError("RowsPerStrip 0")
     offs = tags.get(273)
     counts = tags.get(279)
     if offs is None or counts is None:

@@ -330,25 +330,35 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     ).orderBy("node")
 
 
-def triangle_count_suppliers(spark, sf_dir: str) -> DataFrame:
-    """Registry entry: triangles in the supplier co-supply graph —
-    suppliers are adjacent when they ship the same part (restricted
-    to quantity-1 lineitems so the graph stays sparse and
-    data-dependent). Oracle: DuckDB enumerates the same canonical
-    u<v<w triangles with a 3-way self-join; per-node counts are
-    orientation-invariant, so the degree-ordered Spark plan must
-    match exactly."""
-    from mapreducego_spark.operators.util import guard_limit
+def co_supply_edges(spark, sf_dir: str, parts=lambda ps: ps) -> DataFrame:
+    """The supplier co-supply graph: one (src, dst) edge, src < dst,
+    per pair of suppliers that ship the same part, restricted to
+    quantity-1 lineitems so the graph stays sparse and data-dependent.
+    ``parts`` may filter the distinct (p, s) part list before the
+    self-join."""
     from mapreducego_spark.sources.catalog import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
-    ps = (
+    ps = parts(
         li.filter(F.col("l_quantity") == 1)
         .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
+    a = ps.select("p", F.col("s").alias("src"))
+    b = ps.select(F.col("p").alias("p2"), F.col("s").alias("dst"))
+    return (
+        a.join(b, a.p == b.p2)
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+    )
+
+
+def _cap_hot_parts(ps: DataFrame) -> DataFrame:
+    from mapreducego_spark.operators.util import guard_limit
+
     sizes = ps.groupBy("p").agg(F.count(F.lit(1)).alias("__n"))
-    ps = (
+    return (
         ps.join(sizes, "p")
         .filter(
             guard_limit(
@@ -362,15 +372,15 @@ def triangle_count_suppliers(spark, sf_dir: str) -> DataFrame:
         )
         .drop("__n")
     )
-    a = ps.select("p", F.col("s").alias("src"))
-    b = ps.select(F.col("p").alias("p2"), F.col("s").alias("dst"))
-    edges = (
-        a.join(b, a.p == b.p2)
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    return triangle_count(edges)
+
+
+def triangle_count_suppliers(spark, sf_dir: str) -> DataFrame:
+    """Registry entry: triangles in the supplier co-supply graph
+    (co_supply_edges), with parts of more than 1000 suppliers refused.
+    Oracle: DuckDB enumerates the same canonical u<v<w triangles with
+    a 3-way self-join; per-node counts are orientation-invariant, so
+    the degree-ordered Spark plan must match exactly."""
+    return triangle_count(co_supply_edges(spark, sf_dir, _cap_hot_parts))
 
 
 def shortest_paths(
@@ -425,25 +435,10 @@ def shortest_paths(
 
 def shortest_paths_suppliers(spark, sf_dir: str) -> DataFrame:
     """Registry entry: BFS hop distances from the smallest supplier
-    in the quantity-1 co-supply graph (same graph as triangle_count).
+    in the co-supply graph (co_supply_edges).
     Oracle: DuckDB recursive CTE taking the MIN hop per node —
     identical distances by BFS optimality."""
-    from mapreducego_spark.sources.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = (
-        li.filter(F.col("l_quantity") == 1)
-        .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    a = ps.select("p", F.col("s").alias("src"))
-    b = ps.select(F.col("p").alias("p2"), F.col("s").alias("dst"))
-    edges = (
-        a.join(b, a.p == b.p2)
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = co_supply_edges(spark, sf_dir)
     source = edges.agg(F.min(F.least("src", "dst"))).collect()[0][0]
     return shortest_paths(edges, int(source))
 
@@ -505,27 +500,13 @@ def bellman_ford_bounded(
 
 def weighted_paths_suppliers(spark, sf_dir: str) -> DataFrame:
     """Registry entry: 6-round Bellman-Ford from the smallest
-    supplier over the quantity-1 co-supply graph with deterministic
+    supplier over the co-supply graph (co_supply_edges) with deterministic
     integer weights w = 1 + (src + dst) % 7. Oracle: the same six
     relaxations unrolled as chained CTEs (the pagerank_exact
     pattern) — bit-identical LONG arithmetic, no float, no
     tolerance."""
-    from mapreducego_spark.sources.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = (
-        li.filter(F.col("l_quantity") == 1)
-        .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    a = ps.select("p", F.col("s").alias("src"))
-    b = ps.select(F.col("p").alias("p2"), F.col("s").alias("dst"))
-    edges = (
-        a.join(b, a.p == b.p2)
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .withColumn("w", (1 + (F.col("src") + F.col("dst")) % 7).cast("long"))
+    edges = co_supply_edges(spark, sf_dir).withColumn(
+        "w", (1 + (F.col("src") + F.col("dst")) % 7).cast("long")
     )
     source = edges.agg(F.min(F.least("src", "dst"))).collect()[0][0]
     return bellman_ford_bounded(edges, int(source), rounds=6)
@@ -582,24 +563,8 @@ def clustering_coefficient(
 
 def clustering_coefficient_suppliers(spark, sf_dir: str) -> DataFrame:
     """Registry entry: local clustering coefficients over the
-    quantity-1 co-supply graph (triangle_count's graph)."""
-    from mapreducego_spark.sources.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = (
-        li.filter(F.col("l_quantity") == 1)
-        .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    a = ps.select("p", F.col("s").alias("src"))
-    b = ps.select(F.col("p").alias("p2"), F.col("s").alias("dst"))
-    edges = (
-        a.join(b, a.p == b.p2)
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    return clustering_coefficient(edges)
+    co-supply graph (co_supply_edges)."""
+    return clustering_coefficient(co_supply_edges(spark, sf_dir))
 
 
 def kcore_peel(
@@ -652,22 +617,5 @@ def kcore_peel(
 
 
 def kcore_suppliers(spark, sf_dir: str) -> DataFrame:
-    """Registry entry: 3-core of the quantity-1 co-supply graph
-    (triangle_count's graph)."""
-    from mapreducego_spark.sources.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = (
-        li.filter(F.col("l_quantity") == 1)
-        .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    a = ps.select("p", F.col("s").alias("src"))
-    b = ps.select(F.col("p").alias("p2"), F.col("s").alias("dst"))
-    edges = (
-        a.join(b, a.p == b.p2)
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    return kcore_peel(edges, k=3, rounds=4)
+    """Registry entry: 3-core of the co-supply graph (co_supply_edges)."""
+    return kcore_peel(co_supply_edges(spark, sf_dir), k=3, rounds=4)

@@ -30,6 +30,7 @@ from mapreducego_spark.functions import text as T
 from mapreducego_spark.functions import vector as V
 from mapreducego_spark.operators import asof as A
 from mapreducego_spark.operators import fuzzy as FZ
+from mapreducego_spark.operators import graph as G
 from mapreducego_spark.operators import mapreduce as MR
 from mapreducego_spark.operators import relational as R
 from mapreducego_spark.operators import rollup as RU
@@ -171,38 +172,6 @@ def _mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.frame_sample_plan(M.documents_as_media(spark, sf_dir))
-
-
-def _shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducego_spark.operators.graph import shortest_paths_suppliers
-
-    return shortest_paths_suppliers(spark, sf_dir)
-
-
-def _clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducego_spark.operators.graph import (
-        clustering_coefficient_suppliers,
-    )
-
-    return clustering_coefficient_suppliers(spark, sf_dir)
-
-
-def _kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducego_spark.operators.graph import kcore_suppliers
-
-    return kcore_suppliers(spark, sf_dir)
-
-
-def _weighted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducego_spark.operators.graph import weighted_paths_suppliers
-
-    return weighted_paths_suppliers(spark, sf_dir)
-
-
-def _triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducego_spark.operators.graph import triangle_count_suppliers
-
-    return triangle_count_suppliers(spark, sf_dir)
 
 
 # TPC-H coverage note (fixture-inexpressible queries): Q2, Q9, Q11,
@@ -485,7 +454,7 @@ QUERIES: dict[str, QueryFn] = {
     # at-least-once replay; versioned-dir commit protocol
     "stream_upsert_sink": ST.stream_upsert_sink,
     # exact per-node triangle counts, degree-ordered orientation
-    "triangle_count": _triangle_count,
+    "triangle_count": G.triangle_count_suppliers,
     # asymmetric shingle containment (doc-inside-doc detector)
     "ngram_containment": D.containment_pairs_docs,
     # nested denormalization with imposed element order
@@ -527,7 +496,7 @@ QUERIES: dict[str, QueryFn] = {
     # k-fold CV assignment, near-dup-cluster-coherent
     "kfold_split": lambda spark, sf_dir: T.kfold_no_leakage(spark, sf_dir),
     # single-source BFS hop distances (4th graph kernel)
-    "shortest_paths": _shortest_paths,
+    "shortest_paths": G.shortest_paths_suppliers,
     # sweep-line peak concurrency per event type
     "concurrent_events": TW.concurrent_events,
     # SCD Type 2 dimension history from snapshot series
@@ -559,7 +528,7 @@ QUERIES: dict[str, QueryFn] = {
     # last-touch conversion attribution (LOCF carry, no self-join)
     "attribution_last_touch": TW.attribution_last_touch,
     # hop-bounded Bellman-Ford weighted shortest paths (5th kernel)
-    "weighted_paths": _weighted_paths,
+    "weighted_paths": G.weighted_paths_suppliers,
     # 2-D skyline (Pareto frontier), partition-local sweep + merge
     "skyline_offers": R.skyline_offers,
     # per-label embedding centroids, integer-exact elementwise mean
@@ -580,7 +549,7 @@ QUERIES: dict[str, QueryFn] = {
     # quantile normalization onto the pooled distribution
     "quantile_normalize": R.quantile_normalize,
     # local clustering coefficient (triangle kernel consumer)
-    "clustering_coefficient": _clustering_coeff,
+    "clustering_coefficient": G.clustering_coefficient_suppliers,
     # bitmap-index distinct counting, proven equal to exact
     "bitmap_distinct": R.bitmap_distinct,
     # referential-integrity orphan audit over every FK edge
@@ -601,7 +570,7 @@ QUERIES: dict[str, QueryFn] = {
     # incremental SCD-2 apply: apply(history(v1..3), v4) == history(v1..4)
     "scd2_apply": CAT.scd2_apply_documents,
     # fixed-round k-core peeling over the co-supply graph
-    "kcore_peel": _kcore,
+    "kcore_peel": G.kcore_suppliers,
     # tolerance-bounded as-of (merge_asof(tolerance=...) semantics)
     "join_asof_tolerance": A.join_asof_tolerance,
     # cosine range search (top-k's threshold sibling, same kernel)

@@ -1329,6 +1329,12 @@ def parse_pdf(payload: bytes) -> dict:
             return _load_object(payload, offsets, v[1], cache)[0]
         return v
 
+    def deref_dict(v, what: str) -> dict:
+        d = deref(v)
+        if not isinstance(d, dict):
+            raise ValueError(f"{what} is not a dictionary")
+        return d
+
     root = deref(trailer.get("Root"))
     if not isinstance(root, dict) or root.get("Type") != ("name", "Catalog"):
         raise ValueError("trailer /Root is not a /Catalog")
@@ -1347,17 +1353,22 @@ def parse_pdf(payload: bytes) -> dict:
                     f"cyclic page tree (object {node_ref[1]} revisited)"
                 )
             seen_nodes.add(node_ref[1])
-        node = deref(node_ref)
+        node = deref_dict(node_ref, "page-tree node")
         t = node.get("Type")
         if t == ("name", "Pages"):
-            for kid in node.get("Kids", []):
+            kids = node.get("Kids", [])
+            if not isinstance(kids, list):
+                raise ValueError("/Kids is not an array")
+            for kid in kids:
                 walk(kid, depth + 1)
         elif t == ("name", "Page"):
+            if not (isinstance(node_ref, tuple) and node_ref[0] == "ref"):
+                raise ValueError("page is not an indirect object")
             page_refs.append(node_ref[1])
         else:
             raise ValueError(f"unexpected page-tree node type {t!r}")
 
-    pages_node = deref(root.get("Pages"))
+    pages_node = deref_dict(root.get("Pages"), "catalog /Pages")
     declared = pages_node.get("Count")
     walk(root.get("Pages"))
     if declared != len(page_refs):
@@ -1374,11 +1385,13 @@ def parse_pdf(payload: bytes) -> dict:
     forms: set[str] = set()
     pages = []
     for ref_num in page_refs:
-        page, _ = _load_object(payload, offsets, ref_num, cache)
+        page = deref_dict(("ref", ref_num), f"page object {ref_num}")
         res = deref(page.get("Resources"))
-        fdict = deref(res.get("Font")) if isinstance(res, dict) else None
+        fdict = (deref(res.get("Font")) if isinstance(res, dict) else None) or {}
+        if not isinstance(fdict, dict):
+            raise ValueError("/Font is not a dictionary")
         fonts: dict = {}
-        for fname, fref in (fdict or {}).items():
+        for fname, fref in fdict.items():
             if isinstance(fref, tuple) and fref[0] == "ref":
                 key = fref[1]
                 if key not in font_cache:
@@ -1405,6 +1418,8 @@ def parse_pdf(payload: bytes) -> dict:
             for f in (fd if isinstance(fd, list) else [fd]):
                 if f is None:
                     filt_names.add("raw")
+                elif not (isinstance(f, tuple) and f[0] == "name"):
+                    raise ValueError(f"/Filter entry {f!r} is not a name")
                 else:
                     filt_names.add(
                         {"FlateDecode": "flate", "LZWDecode": "lzw"}

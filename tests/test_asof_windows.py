@@ -9,6 +9,8 @@ import pyspark.sql.functions as F
 
 from mapreducego_spark.operators.asof import asof_join
 
+SF_TINY = "/root/testdata/sf0.001"
+
 
 def _mk(spark):
     orders = spark.createDataFrame(
@@ -279,3 +281,68 @@ def test_rolling_actives_window_semantics(spark, tmp_path):
     assert got[7] == (0, 1)      # user 1 aged out
     assert got[10] == (1, 1)
     assert max(got) == 10        # trimmed at max day
+
+
+def test_join_asof_nearest_picks_the_smaller_gap(spark):
+    """nearest = argmin(|gap|) over the backward and forward matches:
+    cross-check against the two directional entries row by row."""
+    from mapreducego_spark.operators.asof import (
+        join_asof,
+        join_asof_forward,
+        join_asof_nearest,
+    )
+    from mapreducego_spark.sources.catalog import load_table
+
+    near = {
+        r["event_id"]: (r["nearest_orderkey"], r["nearest_gap_us"])
+        for r in join_asof_nearest(spark, SF_TINY).collect()
+    }
+    back = {
+        r["event_id"]: r["matched_orderkey"]
+        for r in join_asof(spark, SF_TINY).collect()
+    }
+    fwd = {
+        r["event_id"]: r["next_orderkey"]
+        for r in join_asof_forward(spark, SF_TINY).collect()
+    }
+    ev = {
+        r["event_id"]: r["ts"]
+        for r in load_table(spark, SF_TINY, "events")
+        .select("event_id", "ts")
+        .collect()
+    }
+    orders = {
+        r["o_orderkey"]: r["o_orderdate"]
+        for r in load_table(spark, SF_TINY, "orders")
+        .select("o_orderkey", "o_orderdate")
+        .collect()
+    }
+
+    def gap_us(eid, okey):
+        if okey is None:
+            return None
+        import datetime as dt
+
+        od = orders[okey]
+        ots = (
+            dt.datetime.combine(od, dt.time())
+            if not isinstance(od, dt.datetime)
+            else od
+        )
+        return abs(int((ev[eid] - ots).total_seconds() * 1_000_000))
+
+    checked = 0
+    for eid, (okey, g) in near.items():
+        gb, gf = gap_us(eid, back.get(eid)), gap_us(eid, fwd.get(eid))
+        want = [x for x in (gb, gf) if x is not None]
+        if not want:
+            assert okey is None and g is None
+            continue
+        assert g == min(want), (eid, g, gb, gf)
+        # backward preferred on ties
+        if gb is not None and (gf is None or gb <= gf):
+            assert okey == back[eid], (eid, okey, back[eid])
+        else:
+            assert okey == fwd[eid], (eid, okey, fwd[eid])
+        checked += 1
+    assert checked > 100

@@ -1,7 +1,7 @@
 """Refusal contract under seeded byte mutations, for the PNG decoder,
-the JPEG decoders and header parsers, and the WARC archive parser:
-every mutated fixture either decodes or raises ValueError /
-NotImplementedError.
+the JPEG decoders and header parsers, the TIFF and GIF decoders, and
+the WARC and PDF parsers: every mutated fixture either decodes or
+raises ValueError / NotImplementedError.
 
 A raw zlib.error, struct.error or MemoryError escaping the decoder
 would kill a Python worker on the first corrupt file of a crawl.
@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import random
+import re
 import shutil
 import struct
 import uuid
@@ -20,6 +21,9 @@ import pytest
 
 from mapreducego_spark.functions import jpegcodec as J
 from mapreducego_spark.functions import multimodal as M
+from mapreducego_spark.functions.gifcodec import decode_gif
+from mapreducego_spark.functions.tiffcodec import decode_tiff
+from mapreducego_spark.sources import pdfcodec as P
 from mapreducego_spark.sources import warccodec as W
 
 N = 12
@@ -86,6 +90,44 @@ def _jpeg_mutants(blob: bytes, rng: random.Random):
     yield from _short_segments(blob)
 
 
+def _with_prefixes(blob: bytes, rng: random.Random):
+    """The random mutants plus the file cut at every length."""
+    yield from _mutants(blob, rng)
+    for n in range(len(blob)):
+        yield f"prefix {n}", blob[:n]
+
+
+_WRONG_TYPES = (b"7", b"/X", b"[7]", b"<< >>", b"(s)", b"[<< /Type /Page >>]")
+
+
+def _pdf_mutants(blob: bytes, rng: random.Random):
+    """The random mutants, FF FF over every offset before the first
+    stream (each key and value of the catalog, page-tree and page
+    dictionaries in turn), and every dictionary value replaced by one
+    of another type, padded so that each xref offset stays valid."""
+    yield from _mutants(blob, rng)
+    for at in range(blob.find(b"stream")):
+        yield f"splice {at}", blob[:at] + b"\xff\xff" + blob[at + 2 :]
+    for m in re.finditer(rb"/\w+ (\d+ 0 R|\[[^\]]*\]|/\w+|\d+|<<[^<>]*>>)", blob):
+        at, end = m.span(1)
+        for wrong in _WRONG_TYPES:
+            if len(wrong) <= end - at:
+                yield (
+                    f"{m.group(0)[:24]!r} -> {wrong!r}",
+                    blob[:at] + wrong.ljust(end - at) + blob[end:],
+                )
+
+
+def _pdfs() -> list[bytes]:
+    """N small documents built in-process, classic and stream xref."""
+    from tests.test_sources import _tiny_pdf_contents
+
+    return [
+        P.build_pdf(*_tiny_pdf_contents(i), xref_form=("classic", "stream")[i % 2])
+        for i in range(N)
+    ]
+
+
 def _jpeg_families() -> dict[str, list[bytes]]:
     """N sequential fixtures (the restart family: DRI in every file,
     gray and 4:4:4) and N progressive ones (restarts in every third)."""
@@ -136,6 +178,16 @@ def test_png_mutations_refuse_with_declared_errors(tmp_path):
     cases, leaks = _leaks(M.decode_png_rgba, blobs, rng)
     assert cases == 7 * 4 * N
     assert not leaks, f"{len(leaks)} of {cases} leaked: {leaks[:5]}"
+
+
+@pytest.mark.parametrize("decode, blobs, mutants", [
+    (decode_tiff, lambda: [M.encode_tiff_fixture(i) for i in range(N)], _with_prefixes),
+    (decode_gif, lambda: [M.encode_gif_fixture(i) for i in range(N)], _with_prefixes),
+    (P.parse_pdf, _pdfs, _pdf_mutants),
+], ids=["tiff", "gif", "pdf"])
+def test_tiff_gif_pdf_mutations_refuse_with_declared_errors(decode, blobs, mutants):
+    _, leaks = _leaks(decode, blobs(), random.Random(SEED), mutants)
+    assert not leaks, f"{len(leaks)} leaked: {leaks[:5]}"
 
 
 def test_warc_mutations_refuse_with_declared_errors():

@@ -20,12 +20,12 @@ Usage: python tools/determinism_audit.py [query ...]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.harness import start, write_artifact  # noqa: E402
 from tools.verify_local import SF_DIR, normalize_rows  # noqa: E402
 
 # Streaming-sink and files-staging entries run real checkpointed jobs
@@ -42,11 +42,9 @@ SKIP = {
 
 def main() -> None:
     from mapreducego_spark.registry import QUERIES
-    from mapreducego_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark("determinism-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start("determinism-audit")
 
     out: dict[str, dict] = {}
     n_fail = 0
@@ -89,17 +87,11 @@ def main() -> None:
             print(f"FAIL  {name}: partition-dependent output")
 
     if not only:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        path = write_artifact(
             "DETERMINISM.json",
+            {"sf_dir": SF_DIR, "partitions_compared": [32, 7],
+             "n_queries": len(out), "n_failures": n_fail, "results": out},
         )
-        with open(path, "w") as fh:
-            json.dump(
-                {"sf_dir": SF_DIR, "partitions_compared": [32, 7],
-                 "n_queries": len(out), "n_failures": n_fail,
-                 "results": out},
-                fh, indent=1, sort_keys=True,
-            )
         print(f"wrote {path} ({n_fail} failures)")
     if n_fail:
         sys.exit(1)

@@ -30,25 +30,42 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
+# The artifacts this script regenerates, in the order of the scripts
+# that write them.
+ARTIFACTS = (
+    "VERIFY_LOCAL.json", "PLAN_AUDIT.json", "STREAM_PLANS.json",
+    "DETERMINISM.json", "VERIFY_SF1.json", "SCALE_PROFILE.json",
+)
+# Everything that is not source: the artifacts above plus the round
+# records. A change to these neither dates the last source commit nor
+# counts as an uncommitted source change.
+NOT_SOURCE = [
+    ".", *(f":(exclude){p}" for p in (
+        *ARTIFACTS, "BENCH_DETAIL.json", "BENCH_r*.json",
+        "CORRECTNESS_r*.json", "NOTES_r*.md", "VERDICT.md", "ADVICE.md",
+        "bench_stderr.txt",
+    )),
+]
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", *args, "--", *NOT_SOURCE],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+
 
 def last_source_commit_epoch() -> tuple[str, int]:
     """Committer timestamp of the newest commit touching anything
     outside the round artifacts/docs (the artifacts this script
     writes must postdate it)."""
-    out = subprocess.run(
-        [
-            "git", "log", "-1", "--format=%H %ct", "--",
-            ".", ":(exclude)VERIFY_LOCAL.json", ":(exclude)PLAN_AUDIT.json",
-            ":(exclude)STREAM_PLANS.json", ":(exclude)DETERMINISM.json",
-            ":(exclude)VERIFY_SF1.json", ":(exclude)SCALE_PROFILE.json",
-            ":(exclude)BENCH_DETAIL.json",
-            ":(exclude)BENCH_r*.json", ":(exclude)CORRECTNESS_r*.json",
-            ":(exclude)NOTES_r*.md", ":(exclude)VERDICT.md",
-            ":(exclude)ADVICE.md", ":(exclude)bench_stderr.txt",
-        ],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    return out[0], int(out[1])
+    sha, ts = _git("log", "-1", "--format=%H %ct").split()
+    return sha, int(ts)
+
+
+def uncommitted_source_changes() -> str:
+    """`git status --porcelain` over the source, or "" when clean."""
+    return _git("status", "--porcelain")
 
 
 def main() -> None:
@@ -72,10 +89,7 @@ def main() -> None:
 
     sha, commit_ts = last_source_commit_epoch()
     ok = True
-    for artifact in (
-        "VERIFY_LOCAL.json", "PLAN_AUDIT.json", "STREAM_PLANS.json",
-        "DETERMINISM.json", "VERIFY_SF1.json", "SCALE_PROFILE.json",
-    ):
+    for artifact in ARTIFACTS:
         mtime = int(os.path.getmtime(os.path.join(REPO, artifact)))
         fresh = mtime >= commit_ts
         ok = ok and fresh
@@ -139,15 +153,7 @@ def main() -> None:
         + ("MATCH" if sp_ok else "MISMATCH (stale coverage or errors!)")
     )
 
-    dirty = subprocess.run(
-        ["git", "status", "--porcelain", "--",
-         ".", ":(exclude)VERIFY_LOCAL.json", ":(exclude)PLAN_AUDIT.json",
-         ":(exclude)STREAM_PLANS.json", ":(exclude)DETERMINISM.json",
-         ":(exclude)VERIFY_SF1.json",
-         ":(exclude)BENCH_r*.json", ":(exclude)BENCH_DETAIL.json",
-         ":(exclude)NOTES_r*.md", ":(exclude)bench_stderr.txt"],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout.strip()
+    dirty = uncommitted_source_changes()
     if dirty:
         print("UNCOMMITTED source changes:\n" + dirty)
         ok = False

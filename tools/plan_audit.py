@@ -13,9 +13,10 @@ that `localCheckpoint(eager=True)` mid-build (PPJoin's candidate
 join, the graph iteration rounds, dedup_incremental's per-step band
 joins) execute their heavy plans during query CONSTRUCTION, so the
 tail plan the audit used to inspect showed almost nothing. The audit
-now wraps DataFrame.localCheckpoint for the duration of the run and
-captures the executed plan of every intermediate immediately before
-it is checkpointed, keyed by call site (file:line). Each entry gets
+wraps DataFrame.localCheckpoint while each query is built
+(tools/harness.checkpoint_plans) and captures the executed plan of
+every intermediate immediately before it is checkpointed, keyed by
+call site (file:line). Each entry gets
 an `intermediates` map with the same per-plan statistics, and
 intermediate red flags feed the SAME red-flag/waiver accounting as
 the tail plan — nothing hides behind a checkpoint.
@@ -31,6 +32,8 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import checkpoint_plans, plan_text, start, write_artifact  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -140,51 +143,14 @@ def audit_plan(plan: str) -> dict:
     }
 
 
-# (tag, plan-text) pairs captured by the localCheckpoint wrapper
-# while the current query's DataFrame is being constructed.
-_INTERMEDIATES: list[tuple[str, str]] = []
-
-
-def _install_checkpoint_capture() -> None:
-    """Wrap DataFrame.localCheckpoint so the audit sees the executed
-    plan of every eagerly-checkpointed intermediate — the plans that
-    run during query construction and are invisible in the tail."""
-    import inspect
-
-    # PySpark 4: pyspark.sql.DataFrame is the abstract base; runtime
-    # instances are the classic subclass, whose own localCheckpoint
-    # would shadow a patch on the base — patch the concrete class.
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # older layout
-        from pyspark.sql import DataFrame
-
-    orig = DataFrame.localCheckpoint
-
-    # *args/**kwargs: PySpark 4.x localCheckpoint also accepts
-    # storageLevel — forward everything so a call site using it
-    # doesn't TypeError only under audit.
-    def capturing(self, *args, **kwargs):
-        caller = inspect.stack()[1]
-        tag = f"{os.path.basename(caller.filename)}:{caller.lineno}"
-        try:
-            plan = self._jdf.queryExecution().executedPlan().toString()
-        except Exception as ex:  # noqa: BLE001
-            plan = f"<plan unavailable: {ex}>"
-        _INTERMEDIATES.append((tag, plan))
-        return orig(self, *args, **kwargs)
-
-    DataFrame.localCheckpoint = capturing
-
-
-def _merge_intermediates() -> dict[str, dict]:
-    """Collapse the captured (tag, plan) list into one audit entry
+def _merge_intermediates(calls) -> dict[str, dict]:
+    """Collapse the captured (tag, plan, _) list into one audit entry
     per call site: loop pipelines (graph rounds, incremental steps)
     hit the same line many times with near-identical plans, so the
     artifact keeps the first occurrence's statistics, an occurrence
     count, and the UNION of joins/red flags across occurrences."""
     merged: dict[str, dict] = {}
-    for tag, plan in _INTERMEDIATES:
+    for tag, plan, _ in calls:
         entry = audit_plan(plan)
         if tag not in merged:
             merged[tag] = entry | {"occurrences": 1}
@@ -202,16 +168,8 @@ def _merge_intermediates() -> dict[str, dict]:
 def main() -> None:
     only = set(sys.argv[1:])
     from mapreducego_spark.registry import QUERIES
-    from mapreducego_spark.session import get_spark
 
-    _install_checkpoint_capture()
-    spark = get_spark("plan_audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Static plan view: with AQE on, pre-execution plans are wrapped
-    # in AdaptiveSparkPlan(isFinalPlan=false) and show no codegen
-    # nodes. The audit reads the static plan (AQE off) — red-flag
-    # detection is unaffected; production sessions keep AQE on.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark = start("plan_audit", static_plans=True)
     out: dict[str, dict] = {}
     for name, fn in QUERIES.items():
         if only and name not in only:
@@ -222,14 +180,14 @@ def main() -> None:
                 "plans captured in STREAM_PLANS.json"
             }
             continue
-        _INTERMEDIATES.clear()
         try:
-            plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+            with checkpoint_plans() as calls:
+                plan = plan_text(fn(spark, SF_DIR))
         except Exception as ex:  # noqa: BLE001
             out[name] = {"error": str(ex)[:200]}
             continue
         entry = audit_plan(plan)
-        inter = _merge_intermediates()
+        inter = _merge_intermediates(calls)
         if inter:
             entry["intermediates"] = inter
             # intermediate red flags are the query's red flags: the
@@ -252,18 +210,13 @@ def main() -> None:
         out[name] = entry
         print(name, json.dumps(entry))
     if not only:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "PLAN_AUDIT.json",
-        )
         n_flag = sum(1 for v in out.values() if v.get("red_flags"))
-        with open(path, "w") as fh:
-            json.dump(
-                {"sf_dir": SF_DIR, "n_queries": len(out),
-                 "aqe": "disabled for static codegen visibility",
-                 "n_with_red_flags": n_flag, "plans": out},
-                fh, indent=1, sort_keys=True,
-            )
+        path = write_artifact(
+            "PLAN_AUDIT.json",
+            {"sf_dir": SF_DIR, "n_queries": len(out),
+             "aqe": "disabled for static codegen visibility",
+             "n_with_red_flags": n_flag, "plans": out},
+        )
         print(f"wrote {path} ({n_flag} queries with red flags)")
 
 

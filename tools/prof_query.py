@@ -12,11 +12,14 @@ Writes <plan-dir>/<query>_<suffix>.txt when --plan-dir is given.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import checkpoint_plans, start, timed_runs, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -30,75 +33,38 @@ def main() -> None:
     args = ap.parse_args()
 
     from mapreducego_spark.registry import QUERIES
-    from mapreducego_spark.session import get_spark
 
-    spark = get_spark("prof")
-    spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up as bench.py: footer caches + codegen
-    QUERIES["topk"](spark, args.sf).collect()
+    spark = start("prof")
+    warm_up(spark, args.sf)  # the same warm-up as bench.py
 
     for name in args.queries:
-        spark.sparkContext.setJobDescription(f"prof:{name}")
-        walls = []
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(time.perf_counter() - t0)
-        best = min(walls)
+        walls = timed_runs(spark, "prof", name, args.sf, args.reps)
         print(
-            f"{name}: best={best:.3f}s  runs="
+            f"{name}: best={min(walls):.3f}s  runs="
             + ",".join(f"{w:.3f}" for w in walls),
             flush=True,
         )
         if args.plan_dir:
-            import contextlib
-            import inspect
-            import io
-
             os.makedirs(args.plan_dir, exist_ok=True)
             # Capture the executed plan of every localCheckpointed
-            # intermediate too (plan_audit's wrapper): the tail plan
-            # of a checkpoint-materialized query is just `Sort <-
-            # Exchange <- Scan ExistingRDD`, which hides the stages
-            # the optimization rounds actually change.
-            try:
-                from pyspark.sql.classic.dataframe import DataFrame
-            except ImportError:
-                from pyspark.sql import DataFrame
-
-            orig_ckpt = DataFrame.localCheckpoint
-            captured: list[tuple[str, str]] = []
-
-            def capturing(self, *a, **kw):
-                caller = inspect.stack()[1]
-                tag = f"{os.path.basename(caller.filename)}:{caller.lineno}"
-                try:
-                    p = self._jdf.queryExecution().executedPlan().toString()
-                except Exception as ex:  # noqa: BLE001
-                    p = f"<plan unavailable: {ex}>"
-                captured.append((tag, p))
-                return orig_ckpt(self, *a, **kw)
-
-            DataFrame.localCheckpoint = capturing
-            try:
+            # intermediate too: the tail plan of a checkpoint-
+            # materialized query is just `Sort <- Exchange <- Scan
+            # ExistingRDD`, which hides the stages the optimization
+            # rounds actually change.
+            with checkpoint_plans() as captured:
                 df = QUERIES[name](spark, args.sf)
-            finally:
-                DataFrame.localCheckpoint = orig_ckpt
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            plan = buf.getvalue()
             out = os.path.join(args.plan_dir, f"{name}_{args.suffix}.txt")
             with open(out, "w") as fh:
-                fh.write(plan)
-                for tag, p in captured:
+                fh.write(buf.getvalue())
+                for tag, p, _ in captured:
                     fh.write(
                         f"\n\n=== checkpointed intermediate at {tag} ===\n"
                     )
                     fh.write(p)
             print(f"  plan -> {out}", flush=True)
-        spark.sparkContext.setJobDescription(None)
 
 
 if __name__ == "__main__":

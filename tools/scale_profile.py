@@ -26,16 +26,13 @@ Usage: python tools/scale_profile.py  (~2-4 min)
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import sys
-import time
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.harness import start, timed_runs, warm_up, write_artifact  # noqa: E402
 from tools.make_sf1 import K_DOC, SRC, ensure_sf1  # noqa: E402
 
 SF3_OUT = os.environ.get("SPARK_GRAFT_SF3_DIR", "/tmp/spark_graft_sf3")
@@ -142,20 +139,6 @@ def ensure_sf3() -> str:
     return SF3_OUT
 
 
-def _time_query(spark, name: str, sf_dir: str, reps: int = 2) -> float:
-    from mapreducego_spark.registry import QUERIES
-
-    best = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        elapsed = time.perf_counter() - t0
-        best = elapsed if best is None else min(best, elapsed)
-    return best
-
-
 def _diagnose(a1: float, a2: float) -> str:
     if a2 > 1.15 and a2 > a1:
         return (
@@ -235,15 +218,10 @@ def _workload_volume(spark, name: str, sf_dir: str) -> int | None:
 
 
 def main() -> None:
-    from mapreducego_spark.session import get_spark
-
     sf1_dir = ensure_sf1()
     sf3_dir = ensure_sf3()
-    spark = get_spark("scale_profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm-up: JVM + parquet footers, so the first timed run isn't
-    # paying session fixed cost the others don't
-    spark.read.parquet(f"{SRC}/documents.parquet").count()
+    spark = start("scale_profile")
+    warm_up(spark, SRC)
 
     out: dict = {
         "points": {"sf0.1": SRC, "sf1": sf1_dir, "sf3": sf3_dir},
@@ -251,9 +229,10 @@ def main() -> None:
         "queries": {},
     }
     for name in PROFILED:
-        t01 = _time_query(spark, name, SRC)
-        t1 = _time_query(spark, name, sf1_dir)
-        t3 = _time_query(spark, name, sf3_dir)
+        t01, t1, t3 = (
+            min(timed_runs(spark, "scale_profile", name, d, 2))
+            for d in (SRC, sf1_dir, sf3_dir)
+        )
         r10 = t1 / t01
         r3 = t3 / t1
         a1 = math.log(r10) / math.log(10)
@@ -293,11 +272,7 @@ def main() -> None:
             f"a1={a1:.2f} a2={a2:.2f}  {row['diagnosis']}",
             flush=True,
         )
-    path = os.path.join(REPO, "SCALE_PROFILE.json")
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    print(f"wrote {path}")
+    print(f"wrote {write_artifact('SCALE_PROFILE.json', out)}")
 
 
 if __name__ == "__main__":

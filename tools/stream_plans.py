@@ -17,7 +17,8 @@ for real and captures, into STREAM_PLANS.json:
     with LOGICAL-node patterns: the join-type list and a cross-join
     red flag; physical-only statistics here would be structurally
     zero and read as false-green), tagged by the pipelines.py call
-    site — captured by wrapping the writer class for the duration;
+    site — captured by wrapping the writer class while each entry is
+    built (tools/harness.capture_calls);
   * the same query's LAST-EXECUTION physical plan after the stream
     drains (`StreamingQuery.explainInternal`), which is where the
     stateful operators (StateStoreSave/Restore, session windows,
@@ -37,13 +38,14 @@ Usage: python tools/stream_plans.py [query ...]
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.harness import capture_calls, plan_text, start, write_artifact  # noqa: E402
 from tools.plan_audit import SKIP, audit_plan  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -52,28 +54,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # plan_audit.WAIVED). Currently empty.
 WAIVED: dict[str, str] = {}
 
-# (tag, pre-start plan, StreamingQuery) per start() call while the
-# current entry is being built.
-_STARTS: list[tuple[str, str, object]] = []
-
-
-def _install_start_capture() -> None:
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
-    orig = DataStreamWriter.start
-
-    def capturing(self, *args, **kwargs):
-        caller = inspect.stack()[1]
-        tag = f"{os.path.basename(caller.filename)}:{caller.lineno}"
-        try:
-            pre = self._df._jdf.queryExecution().optimizedPlan().toString()
-        except Exception as ex:  # noqa: BLE001
-            pre = f"<pre-start plan unavailable: {ex}>"
-        q = orig(self, *args, **kwargs)
-        _STARTS.append((tag, pre, q))
-        return q
-
-    DataStreamWriter.start = capturing
+def _pre_start_plan(writer) -> str:
+    return writer._df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def _audit(plan: str) -> dict:
@@ -102,8 +84,6 @@ def _audit_logical(plan: str) -> dict:
     anyway. This field exists so a Python-eval node appearing in a
     pre-start plan is visible in the artifact rather than silently
     unexamined (r8 ADVICE)."""
-    import re
-
     joins = sorted(set(re.findall(r"\bJoin (\w+)", plan)))
     flags = []
     if "Cross" in joins or "Join Cross" in plan:
@@ -126,9 +106,10 @@ def _audit_logical(plan: str) -> dict:
     }
 
 
-def _drain_starts() -> list[dict]:
+def _drain_starts(starts) -> list[dict]:
+    """One record per captured (tag, pre-start plan, StreamingQuery)."""
     out = []
-    for tag, pre, q in _STARTS:
+    for tag, pre, q in starts:
         item: dict = {"start_site": tag, "pre_start": _audit_logical(pre)}
         try:
             # the last micro-batch's physical plan — valid after the
@@ -137,39 +118,28 @@ def _drain_starts() -> list[dict]:
         except Exception as ex:  # noqa: BLE001
             item["last_execution"] = {"error": str(ex)[:200]}
         out.append(item)
-    _STARTS.clear()
     return out
 
 
 def main() -> None:
     only = set(sys.argv[1:])
-    from mapreducego_spark.registry import QUERIES
-    from mapreducego_spark.session import get_spark
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    _install_start_capture()
-    spark = get_spark("stream_plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Same static-plan view as plan_audit: with AQE on, tail plans
-    # are AdaptiveSparkPlan(isFinalPlan=false) wrappers with zero
-    # codegen spans — not comparable with PLAN_AUDIT's statistics.
-    # (The in-stream micro-batch plans are unaffected: structured
-    # streaming plans its batches outside AQE.)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    from mapreducego_spark.registry import QUERIES
+
+    # the same static-plan view as plan_audit, so the tail statistics
+    # of the two artifacts are comparable
+    spark = start("stream_plans", static_plans=True)
     names = [n for n in QUERIES if n in SKIP and (not only or n in only)]
     out: dict[str, dict] = {}
     for name in names:
-        _STARTS.clear()
         try:
-            tail = (
-                QUERIES[name](spark, SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            with capture_calls(DataStreamWriter, "start", _pre_start_plan) as starts:
+                tail = plan_text(QUERIES[name](spark, SF_DIR))
         except Exception as ex:  # noqa: BLE001
             out[name] = {"error": str(ex)[:200]}
             continue
-        entry: dict = {"tail": _audit(tail), "streams": _drain_starts()}
+        entry: dict = {"tail": _audit(tail), "streams": _drain_starts(starts)}
         flags = set(entry["tail"]["red_flags"])
         for s in entry["streams"]:
             for k in ("pre_start", "last_execution"):
@@ -210,21 +180,12 @@ def main() -> None:
     )
     n_flag = sum(1 for v in out.values() if v.get("red_flags"))
     if not only:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        path = write_artifact(
             "STREAM_PLANS.json",
+            {"sf_dir": SF_DIR, "n_queries": len(out),
+             "n_with_red_flags": n_flag, "n_errors": n_errors,
+             "plans": out},
         )
-        with open(path, "w") as fh:
-            json.dump(
-                {
-                    "sf_dir": SF_DIR,
-                    "n_queries": len(out),
-                    "n_with_red_flags": n_flag,
-                    "n_errors": n_errors,
-                    "plans": out,
-                },
-                fh, indent=1, sort_keys=True,
-            )
         print(
             f"wrote {path} ({n_flag} queries with red flags, "
             f"{n_errors} capture errors)"

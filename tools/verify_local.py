@@ -27,6 +27,8 @@ import duckdb
 # one beside it, not whichever tree happens to sit at a fixed path.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.harness import start, write_artifact  # noqa: E402
+
 # Overridable so correctness (not just wall clock) can be spot-checked
 # at other scales — e.g. SPARK_GRAFT_VERIFY_SF=/tmp/spark_graft_sf1
 # runs the same oracle compare on the 10x amplified dataset. The
@@ -74,13 +76,10 @@ def normalize_rows(rows, cols):
 
 
 def main():
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as E
-    from mapreducego_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark("verify-local")
+    spark = start("verify-local")
 
     def fresh_con():
         """One DuckDB connection PER QUERY, tuned for the sf1 runs:
@@ -182,29 +181,17 @@ def main():
                 "out_schema": out_schema,
             }
             print(f"PASS  {name}: {len(spark_rows)} rows")
-    import json as _json
-    import os as _os
-
+    record = {"sf_dir": SF_DIR, "n_queries": len(results),
+              "n_failures": len(failures), "results": results}
     if not only and SF_DIR.endswith("sf0.01"):
-        out = _os.path.join(_os.path.dirname(_os.path.dirname(
-            _os.path.abspath(__file__))), "VERIFY_LOCAL.json")
-        with open(out, "w") as fh:
-            _json.dump(
-                {"sf_dir": SF_DIR, "n_queries": len(results),
-                 "n_failures": len(failures), "results": results},
-                fh, indent=1)
-        print(f"wrote {out}")
+        print(f"wrote {write_artifact('VERIFY_LOCAL.json', record, sort_keys=False)}")
     # Machine-readable per-run artifact for tool callers (verify_sf1
     # formerly scraped the human stdout via substring markers, which
     # broke silently on any wording change — r8 ADVICE): written for
     # ANY run shape, subset or full, at the caller-chosen path.
-    machine_out = _os.environ.get("SPARK_GRAFT_VERIFY_OUT")
+    machine_out = os.environ.get("SPARK_GRAFT_VERIFY_OUT")
     if machine_out:
-        with open(machine_out, "w") as fh:
-            _json.dump(
-                {"sf_dir": SF_DIR, "n_queries": len(results),
-                 "n_failures": len(failures), "results": results},
-                fh, indent=1)
+        write_artifact(machine_out, record, sort_keys=False)
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     sys.exit(1 if failures else 0)
 

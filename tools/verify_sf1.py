@@ -31,6 +31,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
+from tools.harness import write_artifact  # noqa: E402
+
 QUERIES = [
     "dedup_minhash",
     "tfidf_top_terms",
@@ -162,9 +164,7 @@ def main() -> None:
         "missing": missing,
         "results": results,
     }
-    path = os.path.join(REPO, "VERIFY_SF1.json")
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
+    path = write_artifact("VERIFY_SF1.json", out)
     print(f"wrote {path}: {out['n_pass']}/{out['n_queries']} PASS")
     sys.exit(1 if out["n_fail"] else 0)
 
