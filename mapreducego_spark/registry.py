@@ -3581,8 +3581,14 @@ ORACLES["jaccard_prefix_join"] = ORACLES["ngram_jaccard"]
 # AS MATERIALIZED: DuckDB inlines CTEs referenced twice, which would
 # re-evaluate the whole shingle pipeline per reference (the r7
 # dedup_clusters lesson).
+# The leading SET keeps the joins in written order: DuckDB estimates
+# zero rows for the materialized CTEs and otherwise builds its hash
+# tables on the ~40M candidate pairs at sf1, carrying both id arrays
+# per pair (>20 GB spill), instead of on the 50k-row docs2. The
+# setting lasts for the one connection verify_local opens per query.
 SCALE_ORACLES: dict[str, str] = {}
 SCALE_ORACLES["jaccard_prefix_join"] = """
+SET disabled_optimizers = 'join_order';
 WITH toks AS (
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
            CASE WHEN len(t) >= 2

@@ -83,15 +83,18 @@ def main():
 
     def fresh_con():
         """One DuckDB connection PER QUERY, tuned for the sf1 runs:
-        out-of-core spill + a hard memory cap (the box also hosts the
-        Spark JVM) + a thread cap (32 threads multiply the peak of
+        out-of-core spill + a hard memory cap of half the machine's
+        memory, at most 80 GB (the box also hosts the Spark JVM; a cap
+        above physical memory gets the process killed before DuckDB
+        spills) + a thread cap (32 threads multiply the peak of
         the list-heavy dedup oracles). Per-query isolation matters:
         an oracle that exhausts a shared connection poisons every
         later query on it ('failed to allocate 4096 bytes' cascades,
         observed in the first sf1 run). preserve_insertion_order off
         is free — the comparator is order-insensitive."""
         c = duckdb.connect()
-        c.execute("SET memory_limit='80GB'")
+        mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+        c.execute(f"SET memory_limit='{min(80, int(mem_gb / 2))}GB'")
         c.execute("SET temp_directory='/tmp/duckdb_verify_spill'")
         c.execute("SET preserve_insertion_order=false")
         c.execute("SET threads=8")
