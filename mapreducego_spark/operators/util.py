@@ -169,9 +169,32 @@ def spread_scan(df):
         n_parts = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if n_parts < target:
+    if min(n_parts, _parquet_row_groups(df, target)) < target:
         return df.repartition(target)
     return df
+
+
+def _parquet_row_groups(df, cap: int) -> int:
+    """Row groups in ``df``'s input files, or ``cap`` when there are
+    ``cap`` or more files or a file is not local parquet. Spark splits
+    a large file by byte range but reads each row group in one split,
+    so a file with fewer row groups than splits scans as mostly empty
+    partitions: the sf3 embeddings file (one row group) arrives as 4
+    partitions with every row in one of them."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    try:
+        files = df.inputFiles()
+        if len(files) >= cap:
+            return cap
+        return sum(
+            pq.ParquetFile(unquote(urlparse(f).path)).metadata.num_row_groups
+            for f in files
+        )
+    except Exception:
+        return cap
 
 
 MEDIA_ROOT = "/tmp/spark_graft_media"
