@@ -267,39 +267,9 @@ def exact_jaccard(
     pair at or above the threshold is ever dropped. Measured at sf1:
     prunes 23.8% of LSH candidates (size-mismatched bucket
     collisions) off the string-array intersect, the sf1 wall. The
-    size table is a per-doc int pair — a far cheaper broadcast probe
-    than the shingle arrays the pruned rows never touch."""
-    if threshold is not None:
-        from fractions import Fraction
-
-        frac = Fraction(str(threshold))
-        t_num, t_den = frac.numerator, frac.denominator
-        szs = shingled.select("doc_id", F.size("shingles").alias("__ns"))
-        pairs = (
-            pairs.join(
-                F.broadcast(
-                    szs.select(
-                        F.col("doc_id").alias("doc_a"),
-                        F.col("__ns").alias("__na"),
-                    )
-                ),
-                "doc_a",
-            )
-            .join(
-                F.broadcast(
-                    szs.select(
-                        F.col("doc_id").alias("doc_b"),
-                        F.col("__ns").alias("__nb"),
-                    )
-                ),
-                "doc_b",
-            )
-            .filter(
-                F.least("__na", "__nb") * F.lit(t_num + t_den)
-                >= (F.col("__na") + F.col("__nb")) * F.lit(t_num)
-            )
-            .select("doc_a", "doc_b")
-        )
+    filter reads ``F.size`` of the two shingle arrays the verify join
+    brings in anyway, so each side is broadcast once, and a pruned
+    pair never reaches the intersect."""
     sa = shingled.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
     )
@@ -312,19 +282,25 @@ def exact_jaccard(
     # shingle table — broadcast the doc side so the pair stream never
     # shuffles. (At 100 TB with a shingle table too big to broadcast,
     # drop the hint and let AQE pick the shuffle join + skew split.)
-    return (
-        pairs.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
-            # unrounded ratio for threshold compares: round-at-6
-            # would admit J in [t-5e-7, t) that the exact tier
-            # (ngram_pairs / jaccard_prefix_pairs, both unrounded)
-            # legitimately excludes — see the ngram_pairs note
-            (inter / union).alias("__jac_raw"),
+    joined = pairs.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
+    if threshold is not None:
+        from fractions import Fraction
+
+        frac = Fraction(str(threshold))
+        t_num, t_den = frac.numerator, frac.denominator
+        na, nb = F.size("sh_a"), F.size("sh_b")
+        joined = joined.filter(
+            F.least(na, nb) * F.lit(t_num + t_den) >= (na + nb) * F.lit(t_num)
         )
+    return joined.select(
+        "doc_a",
+        "doc_b",
+        F.round(inter / union, 6).alias("jaccard"),
+        # unrounded ratio for threshold compares: round-at-6
+        # would admit J in [t-5e-7, t) that the exact tier
+        # (ngram_pairs / jaccard_prefix_pairs, both unrounded)
+        # legitimately excludes — see the ngram_pairs note
+        (inter / union).alias("__jac_raw"),
     )
 
 
@@ -344,7 +320,10 @@ def minhash_pairs(
     would use, with StorageLevel.DISK_ONLY there. The (small) pair
     result is materialized via an eager localCheckpoint so both
     caches can be unpersisted before returning — repeated calls in
-    one session leak no cached blocks."""
+    one session leak no cached blocks. The pairs come back in no
+    particular order: sorting them here would cost a range-sampling
+    job that re-runs the verify stage, and the cluster steps discard
+    the order anyway. ``dedup_minhash`` sorts for presentation."""
     shingled = collapse_shingle_duplicates(
         shingle_docs(spread_scan(docs), n=2)
     ).persist()
@@ -355,7 +334,6 @@ def minhash_pairs(
         exact_jaccard(cands, shingled, threshold=JACCARD_THRESHOLD)
         .filter(F.col("__jac_raw") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
     try:
         return result.localCheckpoint(eager=True)
@@ -377,7 +355,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual-skew guard is a deliberate recall/cost trade there."""
     return minhash_pairs(
         load_table(spark, sf_dir, "documents"), max_bucket_size=None
-    )
+    ).orderBy("doc_a", "doc_b")
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,8 +27,18 @@ driver spends more time analyzing than the cluster spends shuffling
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def checkpoint_observed(df: DataFrame, metric: Column) -> tuple[DataFrame, object]:
+    """Eagerly localCheckpoint ``df`` and return it with the value of
+    the aggregate ``metric`` over its rows. The metric is an
+    Observation on the checkpointing job itself, so reading it costs
+    no second job over the checkpoint."""
+    obs = Observation()
+    cp = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
+    return cp, obs.get["v"]
 
 
 def connected_components(
@@ -49,18 +59,17 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.groupBy(F.col("s").alias("id"))
-        .agg(F.min("d").alias("lab"))
-        .withColumn("lab", F.least("id", "lab"))
-        .localCheckpoint(eager=True)
-    )
     # Convergence detector: labels only ever DECREASE, so the label
     # sum is strictly monotone until the fixpoint — comparing two
-    # scalar sums replaces a per-iteration join+count (one cheap agg
-    # on the already-materialized checkpoint instead of a second
-    # shuffle).
-    prev_sum = labels.agg(F.sum("lab")).collect()[0][0]
+    # scalar sums replaces a per-iteration join+count. Each sum is
+    # observed on the job that checkpoints the labels, so the test
+    # costs no job of its own.
+    labels, prev_sum = checkpoint_observed(
+        edges.groupBy(F.col("s").alias("id"))
+        .agg(F.min("d").alias("lab"))
+        .withColumn("lab", F.least("id", "lab")),
+        F.sum("lab"),
+    )
     for _ in range(max_iter):
         # smallest label visible through one hop (F.least skips nulls,
         # so isolated-this-round nodes keep their current label)
@@ -81,12 +90,12 @@ def connected_components(
         jump = hopped.select(
             F.col("id").alias("lab"), F.col("lab").alias("jlab")
         )
-        labels = (
-            hopped.join(jump, "lab", "left")
-            .select("id", F.least("lab", "jlab").alias("lab"))
-            .localCheckpoint(eager=True)
+        labels, cur_sum = checkpoint_observed(
+            hopped.join(jump, "lab", "left").select(
+                "id", F.least("lab", "jlab").alias("lab")
+            ),
+            F.sum("lab"),
         )
-        cur_sum = labels.agg(F.sum("lab")).collect()[0][0]
         if cur_sum == prev_sum:
             return labels.select(
                 F.col("id").cast("long").alias("doc_id"),
@@ -206,36 +215,37 @@ def pagerank_exact(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes, n_nodes = checkpoint_observed(
         e.select(F.col("s").alias("id"))
         .union(e.select(F.col("d").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        F.count(F.lit(1)),
     )
-    n_nodes = nodes.count()
     init = scale // n_nodes
     base = (15 * init) // 100
     out_deg = e.groupBy(F.col("s").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    ranks = (
-        nodes.join(out_deg, "id", "left")
-        .select("id", "deg", F.lit(init).cast("long").alias("rank"))
-        .localCheckpoint(eager=True)
+    # The dangling mass of each round's ranks is observed on the job
+    # that checkpoints them: an exact long sum, so its order of
+    # summation cannot change it.
+    dangling_mass = F.coalesce(
+        F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0)
+    ).cast("long")
+    ranks, dangling = checkpoint_observed(
+        nodes.join(out_deg, "id", "left").select(
+            "id", "deg", F.lit(init).cast("long").alias("rank")
+        ),
+        dangling_mass,
     )
     for _ in range(n_iter):
-        dangling = (
-            ranks.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0)).cast("long"))
-            .collect()[0][0]
-        )
         dang_each = int(dangling) // n_nodes
         inflow = (
             e.join(ranks, e.s == ranks.id)
             .groupBy(F.col("d").alias("id"))
             .agg(F.sum(F.expr("rank div deg")).alias("inflow"))
         )
-        ranks = (
+        ranks, dangling = checkpoint_observed(
             ranks.drop("rank")
             .join(inflow, "id", "left")
             .select(
@@ -245,8 +255,8 @@ def pagerank_exact(
                     f"{base}L + (85 * (coalesce(inflow, 0L) + {dang_each}L))"
                     " div 100"
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            dangling_mass,
         )
     return ranks.select(
         F.col("id").cast("long").alias("id"),
@@ -414,15 +424,14 @@ def shortest_paths(
     )
     frontier = settled
     for hop in range(1, max_iter + 1):
-        reached = (
+        reached, n_new = checkpoint_observed(
             frontier.join(e, frontier.id == e.s)
             .select(F.col("d").alias("id"))
             .distinct()
             .join(settled, "id", "left_anti")
-            .withColumn("dist", F.lit(hop).cast("long"))
-            .localCheckpoint(eager=True)
+            .withColumn("dist", F.lit(hop).cast("long")),
+            F.count(F.lit(1)),
         )
-        n_new = reached.count()  # bounded scalar per round
         if n_new == 0:
             return settled.orderBy("id")
         settled = settled.unionByName(reached).localCheckpoint(eager=True)

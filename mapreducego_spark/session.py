@@ -24,6 +24,21 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap for a local session: two thirds of the machine's
+    memory (``MemTotal`` in ``meminfo``), at most 16g, so the JVM's
+    off-heap share and the Python workers still fit beside it. 16g
+    where the file is missing or has no ``MemTotal`` line."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return "16g"
+    return f"{min(16 * 1024, kib * 2 // 3 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "mapreducego-spark",
     master: str | None = None,
@@ -56,13 +71,13 @@ def get_spark(
     # runs (12M-edge pagerank checkpoints, 6M-row shuffles) OOM-kill
     # the JVM at 1g. Driver memory only takes effect before the JVM
     # launches, hence the env var (a builder conf would silently
-    # no-op): set a box-appropriate default unless the caller already
-    # chose one. On a cluster spark-submit owns this knob.
+    # no-op): size it from the machine unless the caller already chose
+    # (SPARK_GRAFT_DRIVER_MEM, or PYSPARK_SUBMIT_ARGS outright). On a
+    # cluster spark-submit owns this knob.
     if not _active_session_exists():
+        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
         os.environ.setdefault(
-            "PYSPARK_SUBMIT_ARGS",
-            f"--driver-memory {os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')}"
-            " pyspark-shell",
+            "PYSPARK_SUBMIT_ARGS", f"--driver-memory {mem} pyspark-shell"
         )
     builder = (
         SparkSession.builder.appName(app_name)

@@ -667,7 +667,21 @@ def read_container(
     Schema Resolution rules against the file's embedded writer
     schema (evolution: dropped fields skipped, added fields
     defaulted, promotions applied) and the returned schema is the
-    READER schema."""
+    READER schema.
+
+    A corrupt container raises ValueError, including a deflate block
+    that does not inflate and a schema that lacks an attribute its
+    type needs (an enum without ``symbols``, a record field without
+    ``type``)."""
+    try:
+        return _read_blocks(data, reader_schema)
+    except zlib.error as e:
+        raise ValueError(f"avro deflate block is corrupt: {e}") from None
+    except KeyError as e:
+        raise ValueError(f"avro schema lacks attribute {e}") from None
+
+
+def _read_blocks(data: bytes, reader_schema: dict | None) -> tuple[dict, list[dict]]:
     avsc, codec, sync, pos = read_header(data)
     r = Reader(data, pos)
     rows: list[dict] = []

@@ -265,3 +265,17 @@ def test_containment_catches_doc_inside_doc(spark):
 
     # and Jaccard indeed misses it at its own threshold
     assert ngram_pairs(docs).count() == 0
+
+
+def test_dedup_entries_job_ceilings(spark):
+    """dedup_clusters reads each connected-components convergence sum
+    from its checkpointing job, and minhash_pairs neither sorts nor
+    broadcasts a size table: 25 and 14 jobs a call (33 and 16 with a
+    sum job per round, a sorted pair checkpoint and the size-table
+    joins)."""
+    from tools.harness import job_counts, timed_runs
+
+    for entry, ceiling in (("dedup_clusters", 25), ("dedup_minhash", 14)):
+        timed_runs(spark, "test_dedup", entry, "/root/testdata/sf0.01", 1)
+        jobs, _, _ = job_counts(spark, f"test_dedup:{entry}:0")
+        assert jobs <= ceiling, (entry, jobs)

@@ -67,6 +67,12 @@ def test_diameter_guard_fails_loudly(spark):
         _cc(spark, chain, max_iter=1)
 
 
+def test_empty_pair_set_has_no_components(spark):
+    """No edges: the observed label sums are both null, which counts as
+    converged, and no row comes back."""
+    assert _cc(spark, []) == set()
+
+
 def test_pagerank_matches_serial_reference(spark):
     """Distributed PageRank == a serial dict implementation of the
     same fixed-iteration recurrence, to float tolerance; rank mass

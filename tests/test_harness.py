@@ -9,7 +9,7 @@ import os
 import sys
 
 import bench
-from tools.harness import capture_calls, checkpoint_plans, timed_runs
+from tools.harness import capture_calls, checkpoint_plans, job_counts, timed_runs
 
 
 def _out(n_queries: int) -> dict:
@@ -98,4 +98,7 @@ def test_checkpoint_plans_and_timed_run_job_groups(spark, sf_dir):
     tracker = sc.statusTracker()
     assert tracker.getJobIdsForGroup("harness:filter_project:0")
     assert tracker.getJobIdsForGroup("harness:filter_project:1")
+    jobs, stages, tasks = job_counts(spark, "harness:filter_project:0")
+    assert jobs == len(tracker.getJobIdsForGroup("harness:filter_project:0"))
+    assert 1 <= stages <= tasks
     assert sc.getLocalProperty("spark.jobGroup.id") is None

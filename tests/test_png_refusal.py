@@ -1,7 +1,7 @@
 """Refusal contract under seeded byte mutations, for the PNG decoder,
-the JPEG decoders and header parsers, the TIFF and GIF decoders, and
-the WARC and PDF parsers: every mutated fixture either decodes or
-raises ValueError / NotImplementedError.
+the JPEG decoders and header parsers, the TIFF and GIF decoders, the
+WARC and PDF parsers and the Avro container reader: every mutated
+fixture either decodes or raises ValueError / NotImplementedError.
 
 A raw zlib.error, struct.error or MemoryError escaping the decoder
 would kill a Python worker on the first corrupt file of a crawl.
@@ -23,6 +23,7 @@ from mapreducego_spark.functions import jpegcodec as J
 from mapreducego_spark.functions import multimodal as M
 from mapreducego_spark.functions.gifcodec import decode_gif
 from mapreducego_spark.functions.tiffcodec import decode_tiff
+from mapreducego_spark.sources import avrocodec as A
 from mapreducego_spark.sources import pdfcodec as P
 from mapreducego_spark.sources import warccodec as W
 
@@ -157,6 +158,28 @@ def _warc_archives() -> list[bytes]:
     return archives
 
 
+def _avro_containers() -> list[bytes]:
+    """N containers from the codec's own writer, deflate and null codec
+    in turn, over a record with a long, a string, an array, a nullable
+    double and an enum, one to four rows each."""
+    avsc = {"type": "record", "name": "doc", "fields": [
+        {"name": "doc_id", "type": "long"},
+        {"name": "text", "type": "string"},
+        {"name": "tags", "type": {"type": "array", "items": "string"}},
+        {"name": "score", "type": ["null", "double"]},
+        {"name": "kind", "type": {"type": "enum", "name": "k", "symbols": ["a", "b"]}},
+    ]}
+    return [
+        A.write_container(avsc, [
+            {"doc_id": 10 * i + j, "text": f"doc {i}.{j} " * (j + 1),
+             "tags": ["t"] * j, "score": None if j % 2 else j / 3,
+             "kind": "ab"[j % 2]}
+            for j in range(1 + i % 4)
+        ], codec=("deflate", "null")[i % 2])
+        for i in range(N)
+    ]
+
+
 def _leaks(decode, blobs: list[bytes], rng: random.Random, mutants=_mutants):
     leaks, cases = [], 0
     for k, blob in enumerate(blobs):
@@ -192,6 +215,14 @@ def test_tiff_gif_pdf_mutations_refuse_with_declared_errors(decode, blobs, mutan
 
 def test_warc_mutations_refuse_with_declared_errors():
     cases, leaks = _leaks(W.parse_warc, _warc_archives(), random.Random(SEED))
+    assert cases == 7 * N
+    assert not leaks, f"{len(leaks)} of {cases} leaked: {leaks[:5]}"
+
+
+def test_avro_mutations_refuse_with_declared_errors():
+    """A flipped bit in a deflate block or in the embedded schema's
+    attribute names must refuse, not leak zlib.error or KeyError."""
+    cases, leaks = _leaks(A.read_container, _avro_containers(), random.Random(SEED))
     assert cases == 7 * N
     assert not leaks, f"{len(leaks)} of {cases} leaked: {leaks[:5]}"
 

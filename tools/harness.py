@@ -72,6 +72,22 @@ def timed_runs(spark, app: str, name: str, sf_dir: str, reps: int) -> list[float
     return walls
 
 
+def job_counts(spark, group: str) -> tuple[int, int, int]:
+    """(jobs, stages, tasks) that ran under job group ``group``, read
+    from the status tracker. A stage counts once, and only if it ran
+    tasks: a stage skipped because its shuffle output was reused does
+    not."""
+    st = spark.sparkContext.statusTracker()
+    stages = set()
+    jobs = st.getJobIdsForGroup(group)
+    for job in jobs:
+        info = st.getJobInfo(job)
+        stages.update(info.stageIds if info is not None else ())
+    ran = [st.getStageInfo(s) for s in stages]
+    ran = [s for s in ran if s is not None and s.numCompletedTasks > 0]
+    return len(jobs), len(ran), sum(s.numCompletedTasks for s in ran)
+
+
 def plan_text(df) -> str:
     """The executed physical plan of ``df`` as Spark prints it."""
     return df._jdf.queryExecution().executedPlan().toString()

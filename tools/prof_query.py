@@ -1,6 +1,8 @@
-"""Isolate one registry query: warmed best-of-N wall (noop sink) plus
-the formatted physical plan, for the optimization rounds' before/after
-evidence (guide §1: measure first, noop sink, label jobs).
+"""Isolate one registry query: warmed best-of-N wall (noop sink), the
+Spark jobs, stages and tasks of each rep (read from the rep's
+``prof:<query>:<rep>`` job group), plus the formatted physical plan,
+for the optimization rounds' before/after evidence (guide §1: measure
+first, noop sink, label jobs).
 
 Usage:
   python tools/prof_query.py <query> [more queries...] \
@@ -19,7 +21,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.harness import checkpoint_plans, start, timed_runs, warm_up  # noqa: E402
+from tools.harness import (  # noqa: E402
+    checkpoint_plans,
+    job_counts,
+    start,
+    timed_runs,
+    warm_up,
+)
 
 
 def main() -> None:
@@ -44,6 +52,13 @@ def main() -> None:
             + ",".join(f"{w:.3f}" for w in walls),
             flush=True,
         )
+        for rep, wall in enumerate(walls):
+            jobs, stages, tasks = job_counts(spark, f"prof:{name}:{rep}")
+            print(
+                f"  rep {rep}: {wall:.3f}s  jobs={jobs} stages={stages} "
+                f"tasks={tasks}",
+                flush=True,
+            )
         if args.plan_dir:
             os.makedirs(args.plan_dir, exist_ok=True)
             # Capture the executed plan of every localCheckpointed
