@@ -19,9 +19,14 @@ top-down RLE, and that combination is a ValueError, not a guess).
 1/4/16/32-bit depths and other compressions refuse loudly.
 Structurally broken files — bad magic, short headers, RLE overruns,
 a run past the row end, a delta past the bitmap, missing or early
-end-of-bitmap — raise ValueError. The reported ``compression``
-carries what the wire actually used: 'rle8d' when any delta escape
-appeared, 'pal8td'/'rgb24td' for top-down storage.
+end-of-bitmap, a raster larger than the pixel data can fill — raise
+ValueError, all before the raster is allocated. An RLE8 stream has
+to walk through every row of the raster it claims, and its raster
+may be no wider than 255 columns per 2 stream bytes (what its runs
+could paint): a wider row would be almost all implied background,
+so it is refused rather than allocated. The reported
+``compression`` carries what the wire actually used: 'rle8d' when
+any delta escape appeared, 'pal8td'/'rgb24td' for top-down storage.
 
 Reference parity note: the reference repo (MapReduceGo) has no media
 tier; this belongs to the 100 TB training-data north star.
@@ -248,12 +253,14 @@ def decode_bmp(payload: bytes):
     if len(tbl) != 4 * n_colors:
         raise ValueError("truncated BMP color table")
     pal = np.frombuffer(tbl, np.uint8).reshape(n_colors, 4)[:, :3][:, ::-1]
-    idx = np.zeros((height, width), dtype=np.uint8)
+    if width < 0:
+        raise ValueError(f"BMP width {width} < 0")
     if compression == 0:
         pad = (-width) % 4
         stride = width + pad
         if len(payload) < offset + stride * height:
             raise ValueError("truncated 8-bit pixel data")
+        idx = np.zeros((height, width), dtype=np.uint8)
         for y in range(height):
             s = y if topdown else height - 1 - y
             base = offset + s * stride
@@ -262,6 +269,12 @@ def decode_bmp(payload: bytes):
             )
         kind = "pal8td" if topdown else "pal8"
     elif compression == 1:  # BI_RLE8
+        # The walk collects the painted spans and the raster is
+        # allocated after it. A stream that passes the end-of-bitmap
+        # check has moved the cursor through every row, so the height
+        # is proven by then; the width is checked against the 255
+        # columns each 2-byte code can paint.
+        spans = []
         pos = offset
         y = height - 1  # RLE rows run bottom-up
         x = 0
@@ -275,7 +288,7 @@ def decode_bmp(payload: bytes):
             if count > 0:  # encoded run
                 if x + count > width or y < 0:
                     raise ValueError("RLE8 run past the row end")
-                idx[y, x : x + count] = val
+                spans.append((y, x, count, val))
                 x += count
             elif val == 0:  # end of line
                 y -= 1
@@ -314,11 +327,19 @@ def decode_bmp(payload: bytes):
                     raise ValueError("RLE8 absolute run truncated")
                 if x + n > width or y < 0:
                     raise ValueError("RLE8 absolute run past the row end")
-                idx[y, x : x + n] = np.frombuffer(
-                    payload[pos : pos + n], np.uint8
+                spans.append(
+                    (y, x, n, np.frombuffer(payload[pos : pos + n], np.uint8))
                 )
                 x += n
                 pos = end
+        if width > 255 * ((len(payload) - offset) // 2):
+            raise ValueError(
+                f"RLE8 stream of {len(payload) - offset} bytes cannot"
+                f" paint a {width}-pixel row"
+            )
+        idx = np.zeros((height, width), dtype=np.uint8)
+        for y, x, n, v in spans:
+            idx[y, x : x + n] = v
         kind = "rle8d" if saw_delta else "rle8"
     else:
         raise NotImplementedError(

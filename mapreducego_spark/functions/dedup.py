@@ -257,6 +257,9 @@ def exact_jaccard(
     pairs: DataFrame, shingled: DataFrame, threshold: float | None = None
 ) -> DataFrame:
     """Re-verify candidates with exact Jaccard on shingle sets.
+    ``shingled.shingles`` may also hold the 60-bit shingle hashes of
+    minhash_index_rows (dedup_incremental_step): the same values
+    barring a 2^-60 collision.
 
     ``threshold``: when the caller will keep only J >= threshold
     rows anyway (minhash_pairs' shape), passing it here applies the
@@ -606,26 +609,6 @@ def minhash_index_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_on_hashes(pairs: DataFrame, rows: DataFrame) -> DataFrame:
-    """exact_jaccard over the stored 60-bit shingle hashes instead of
-    the shingle strings — identical values barring a 2^-60 collision."""
-    sa = rows.select(F.col("doc_id").alias("doc_a"), F.col("sh_h").alias("sh_a"))
-    sb = rows.select(F.col("doc_id").alias("doc_b"), F.col("sh_h").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        pairs.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
-            # unrounded for the threshold compare (see exact_jaccard)
-            (inter / union).alias("__jac_raw"),
-        )
-    )
-
-
 def dedup_incremental_step(
     batch_rows: DataFrame,
     index_rows: DataFrame,
@@ -683,7 +666,12 @@ def dedup_incremental_step(
     )
     cands = internal.unionByName(cross)
     pairs = (
-        jaccard_on_hashes(cands, index_rows.unionByName(reps))
+        exact_jaccard(
+            cands,
+            index_rows.unionByName(reps).select(
+                "doc_id", F.col("sh_h").alias("shingles")
+            ),
+        )
         .filter(F.col("__jac_raw") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
         .distinct()

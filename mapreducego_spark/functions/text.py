@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreducego_spark.operators.twophase import two_phase_global_rank
 from mapreducego_spark.operators.util import spread_scan
 
 # Reference split contract: every non-letter rune is a delimiter
@@ -420,18 +421,12 @@ def pack_shards(docs: DataFrame, shard_tokens: int = 20_000) -> DataFrame:
     shard_id = floor(running_token_total_before_doc / shard_tokens),
     a GLOBAL prefix sum — the naive form is a single-partition
     window (one task sorts the world: dead at scale). This is the
-    distributed two-phase prefix sum instead:
-
-      1. range-repartition + sort locally by the hash key (one
-         shuffle, every partition holds a contiguous key range);
-      2. per-partition token totals -> driver (|partitions| longs),
-         cumulated into per-partition start offsets;
-      3. one mapInPandas pass adds offset + local running sum — no
-         second shuffle, integer arithmetic throughout (no float
-         cumsum drift at any corpus size).
-
-    The Python hop carries only (doc_id, n_tokens) — the narrow
-    Arrow batches, not text."""
+    distributed two-phase prefix sum instead (two_phase_global_rank
+    with a weight column): one range shuffle, |partitions| token
+    totals to the driver, one mapInPandas pass, integer arithmetic
+    throughout (no float cumsum drift at any corpus size). The
+    Python hop carries only (doc_id, n_tokens, h) — the narrow Arrow
+    batches, not text."""
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.size(
@@ -441,42 +436,13 @@ def pack_shards(docs: DataFrame, shard_tokens: int = 20_000) -> DataFrame:
         .alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    part = (
-        base.repartitionByRange("h", "doc_id")
-        .sortWithinPartitions("h", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    return two_phase_global_rank(
+        base, ["h", "doc_id"], "cum", weight="n_tokens"
+    ).select(
+        "doc_id",
+        "n_tokens",
+        F.expr(f"(cum - n_tokens) div {shard_tokens}").alias("shard_id"),
     )
-    try:
-        totals = {
-            r.pid: r.total
-        for r in part.groupBy("pid").agg(F.sum("n_tokens").alias("total")).collect()
-        }
-        offsets: dict[int, int] = {}
-        run = 0
-        for pid in sorted(totals):
-            offsets[pid] = run
-            run += int(totals[pid] or 0)
-
-        def assign(batches):
-            state = {"cum": None}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if state["cum"] is None:
-                    state["cum"] = offsets.get(int(pdf["pid"].iloc[0]), 0)
-                before = state["cum"] + pdf["n_tokens"].cumsum() - pdf["n_tokens"]
-                state["cum"] += int(pdf["n_tokens"].sum())
-                out = pdf[["doc_id", "n_tokens"]].copy()
-                out["shard_id"] = (before // shard_tokens).astype("int64")
-                yield out
-
-        result = part.mapInPandas(
-            assign, "doc_id long, n_tokens long, shard_id long"
-        ).localCheckpoint(eager=True)
-    finally:
-        part.unpersist()
-    return result
 
 
 def heavy_hitters(docs: DataFrame, k: int = 50) -> DataFrame:

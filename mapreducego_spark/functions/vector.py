@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreducego_spark.functions.dedup import minhash_candidate_pairs
 from mapreducego_spark.operators.util import guard_limit, spread_scan
 from mapreducego_spark.sources.catalog import load_table
 
@@ -27,6 +28,14 @@ TOP_K = 5
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as (vec_id long, v array<double>)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        _as_double(F.col("embedding")).alias("v"),
+    )
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -192,10 +201,7 @@ def vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-query top-k (window + filter). Cosines come from the
     dim-ordered numpy kernel, bit-identical to the sequential fold
     the DuckDB oracle computes (see _fold_gram)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     q_ids, qmat = _collect_matrix(
         emb.filter(F.col("vec_id") < N_QUERY_VECS),
         "vec_id",
@@ -337,10 +343,7 @@ def vector_ann_lsh(
     re-hashed). At 100 TB the band equi-join replaces brute force's
     broadcast scan; recall is tested against vector_topk (driver
     check: rows-only — approximate results have no SQL oracle)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     emb = emb.withColumn("__n", l2norm(F.col("v")))
     corpus = sketch_bands(emb, "v", dims, n_planes, band_bits)
     # query side: every band value at Hamming distance <= 1
@@ -474,12 +477,12 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded sign-LSH candidate generation: distinct (vec_a < vec_b)
     pairs whose sketches agree on at least one same-position band.
-    Same construction as dedup.minhash_candidate_pairs — position-
-    matched band equi-join, so the shuffle is proportional to bucket
-    collisions, never n^2 — including the same residual-skew guard:
-    a (band, band_val) bucket larger than ``max_bucket_size`` is
-    inherently quadratic in pair count and is dropped from candidate
-    generation rather than stalling the stage (None disables).
+    The bucket join is dedup.minhash_candidate_pairs, with the band
+    value as its band key: a position-matched band equi-join, so the
+    shuffle is proportional to bucket collisions, never n^2, and a
+    bucket larger than ``max_bucket_size`` is inherently quadratic in
+    pair count and is dropped from candidate generation rather than
+    stalling the stage (None disables).
 
     The sketched band table feeds three plan branches (the bucket
     census + both sides of the self-join) — persist it or the whole
@@ -488,28 +491,19 @@ def lsh_candidate_pairs(
     result via localCheckpoint, unpersist before returning)."""
     bands = (
         sketch_bands(emb.select("vec_id", "v"), "v", dims, n_planes, band_bits)
-        .select("vec_id", "band", "band_val")
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            "band",
+            F.col("band_val").alias("band_key"),
+        )
         .persist()
     )
-    if max_bucket_size is not None:
-        sizes = bands.groupBy("band", "band_val").agg(
-            F.count(F.lit(1)).alias("__bucket_n")
-        )
-        keep = bands.join(sizes, ["band", "band_val"]).filter(
-            F.col("__bucket_n") <= max_bucket_size
-        )
-    else:
-        keep = bands
-    a = keep.select("band", "band_val", F.col("vec_id").alias("vec_a"))
-    b = keep.select("band", "band_val", F.col("vec_id").alias("vec_b"))
-    result = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
     try:
-        return result.localCheckpoint(eager=True)
+        return (
+            minhash_candidate_pairs(bands, max_bucket_size)
+            .select(F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"))
+            .localCheckpoint(eager=True)
+        )
     finally:
         bands.unpersist()
 
@@ -563,11 +557,7 @@ def embedding_pairs_lsh(
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: exact embedding-cosine near-dup pairs over the
     embeddings table (oracle-checked baseline)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
-    return embedding_pairs_exact(emb)
+    return embedding_pairs_exact(_embeddings(spark, sf_dir))
 
 
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,11 +567,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays sketch -> bands -> bucket pairs -> exact cosine end to
     end (recall vs the exact baseline additionally asserted in
     tests/test_vector.py)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
-    return embedding_pairs_lsh(emb)
+    return embedding_pairs_lsh(_embeddings(spark, sf_dir))
 
 
 # --- scale path 2: IVF (inverted-file) coarse quantization --------------
@@ -707,10 +693,7 @@ def vector_ann_ivf(
     cells is exact (driver check: rows-only — approximate recall has
     no SQL oracle; the recall floor vs brute force is pytest-asserted
     like vector_ann_lsh)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     cents = ivf_train_centroids(emb, dims, n_cells)
     assign1 = ivf_cell_udf(cents, dims, n_probe=1)
     corpus = emb.withColumn("__n", l2norm(F.col("v"))).withColumn(
@@ -793,10 +776,7 @@ def decontaminate_embedding(
     accumulation is bit-identical to the sequential fold the DuckDB
     oracle computes, and max commutes with the per-pair rounding
     (see max_cos_udf), so the hashes match without tolerance."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     _, bmat = _collect_matrix(
         emb.filter(F.col("vec_id") % 20 == 0),
         "vec_id",
@@ -977,10 +957,7 @@ def vector_ann_pq(
     closure; the exact stage touches |Q| x shortlist rows. IVF-PQ
     (probe cells, ADC within) is the composition of this with
     vector_ann_ivf's coarse quantizer."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     books = pq_train_codebooks(emb, dims, m, k_codes)
     q_ids, qmat = _collect_matrix(
         emb.filter(F.col("vec_id") < N_QUERY_VECS),
@@ -1061,10 +1038,7 @@ def vector_ann_ivfpq(
     hybrid_rerank_ann routes the BM25 queries' own embeddings
     through this index; ``top_k`` deepens the re-ranked output (the
     shortlist scales with it)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     if query_ids is None:
         q_pred = F.col("vec_id") < N_QUERY_VECS
         cache_key = ("topk_queries", sf_dir)
@@ -1203,10 +1177,7 @@ def vector_range_search(
     kernel is bit-identical to the oracle's sequential fold
     (_fold_gram's dim-ordered rank-1 accumulation), so the compare
     carries no filter asymmetry."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     q_ids, qmat = _collect_matrix(
         emb.filter(F.col("vec_id") < N_QUERY_VECS),
         "vec_id",
@@ -1689,10 +1660,7 @@ def hybrid_rerank(
     )
 
     q_anchor_ids = [qid for qid, _ in BM25_QUERIES]
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-    )
+    emb = _embeddings(spark, sf_dir)
     q_ids, qmat = _collect_matrix(
         emb.filter(F.col("vec_id").isin(q_anchor_ids)),
         "vec_id",

@@ -109,82 +109,6 @@ def connected_components(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 5,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list — the
-    iterative-algorithm tier beyond connected components.
-
-    Per iteration: ONE shuffle — out-degree-normalized contributions
-    flow along edges (equi-join ranks->edges, groupBy dst, sum),
-    then rank = (1-d)/N + d * (inflow + dangling_mass/N). Dangling
-    nodes (no out-edges) redistribute their rank uniformly via a
-    scalar aggregate, not a join. Degrees are precomputed once and
-    persisted; each iteration's ranks are eagerly localCheckpoint-ed
-    so the plan does not double per round (same lineage hygiene as
-    connected_components above).
-
-    Approximate by nature (float sums + fixed iterations): no SQL
-    oracle — correctness is pytest vs a serial reference
-    implementation to 1e-9 on the fixture graph, plus the rank-sum
-    invariant (sums to 1 every iteration)."""
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("s").alias("id"))
-        .union(e.select(F.col("d").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    out_deg = e.groupBy(F.col("s").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    # nodes with no out-edges carry deg null -> dangling
-    ranks = (
-        nodes.join(out_deg, "id", "left")
-        .select("id", "deg", F.lit(1.0 / n_nodes).alias("rank"))
-        .localCheckpoint(eager=True)
-    )
-    base = (1.0 - damping) / n_nodes
-    for _ in range(n_iter):
-        dangling = (
-            ranks.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-        inflow = (
-            e.join(ranks, e.s == ranks.id)
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("inflow"))
-        )
-        ranks = (
-            ranks.drop("rank")
-            .join(inflow, "id", "left")
-            .select(
-                "id",
-                "deg",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("inflow"), F.lit(0.0))
-                       + F.lit(dangling / n_nodes))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(
-        F.col("id").cast("long").alias("id"), F.col("rank").cast("double").alias("rank")
-    )
-
-
 def pagerank_exact(
     edges: DataFrame,
     src: str = "src",
@@ -192,14 +116,22 @@ def pagerank_exact(
     n_iter: int = 5,
     scale: int = 10**12,
 ) -> DataFrame:
-    """PageRank in fixed-point integer arithmetic (ranks in units of
-    1/``scale``, "picoranks" at the default): the same per-iteration
-    dataflow as :func:`pagerank` — one shuffle per round, dangling
-    mass via a scalar aggregate — but every quantity is a long and
-    every division is integer division, so the result after a fixed
-    round count is EXACTLY reproducible by any engine (no float
-    summation-order ambiguity). This is what lets an iterative
-    algorithm carry a DuckDB oracle instead of a tolerance pytest.
+    """Fixed-iteration PageRank over a directed edge list, in
+    fixed-point integer arithmetic (ranks in units of 1/``scale``,
+    "picoranks" at the default).
+
+    Per iteration: ONE shuffle — out-degree-normalized contributions
+    flow along edges (equi-join ranks->edges, groupBy dst, sum), and
+    dangling nodes (no out-edges) redistribute their rank uniformly
+    via a scalar aggregate, not a join. Each round's ranks are
+    eagerly localCheckpoint-ed so the plan does not double per round
+    (the lineage hygiene of connected_components above). Every
+    quantity is a long and every division is integer division, so
+    the result after a fixed round count is EXACTLY reproducible by
+    any engine (no float summation-order ambiguity). This is what
+    lets an iterative algorithm carry a DuckDB oracle instead of a
+    tolerance pytest; ``rank_pico / scale`` matches a float serial
+    reference to ~1e-10 (tests/test_graph.py).
 
     Arithmetic contract (mirrored verbatim in the SQL oracle):
       init       = scale div N
@@ -308,7 +240,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # The oriented edge list feeds three plan branches (both wedge
     # sides + the closing join); checkpoint it eagerly so the
     # canonicalize/degree subtree runs once, not three times — the
-    # same lineage hygiene as connected_components/pagerank. Size is
+    # same lineage hygiene as connected_components/pagerank_exact. Size is
     # |E| rows of 4 longs, safely materializable.
     oriented = ranked.select(
         F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("a"),

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from mapreducego_spark.operators.util import scratch_dir
+
 MapFn = Callable[[str], Iterable[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
 
@@ -255,15 +257,11 @@ def job_wordcount_files(spark, sf_dir: str) -> DataFrame:
     treats newlines as delimiters anyway. Shares the wordcount
     oracle. Fresh temp in/out per call, cleaned at exit (same
     harness convention as the stream-sink entries)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from mapreducego_spark.sources.catalog import load_table
 
-    workdir = tempfile.mkdtemp(prefix="job_wordcount_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("job_wordcount_")
     inp = os.path.join(workdir, "in")
     out = os.path.join(workdir, "out")
     load_table(spark, sf_dir, "documents").select(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreducego_spark.operators.util import scratch_dir
+
 ROLLUP_SCHEMA_COLS = ("day", "win_start", "event_type", "n_events", "sum_value")
 
 
@@ -120,17 +122,12 @@ def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition overwrite reproduce the full rebuild exactly — the
     invariant that lets a 100 TB deployment maintain the rollup
     without ever re-scanning history."""
-    import atexit
-    import shutil
-    import tempfile
-
     from mapreducego_spark.sources.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     cut = lo + (hi - lo) / 2
-    path = tempfile.mkdtemp(prefix="rollup_inc_") + "/rollup"
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("rollup_inc_") + "/rollup"
     build_rollup(ev.filter(F.col("ts") <= F.lit(cut)), path)
     update_rollup(spark, ev.filter(F.col("ts") > F.lit(cut)), path)
     return read_rollup(spark, path).orderBy("win_start", "event_type")

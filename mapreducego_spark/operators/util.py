@@ -11,7 +11,10 @@ produce bit-identical values.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column
@@ -195,6 +198,13 @@ def _parquet_row_groups(df, cap: int) -> int:
         )
     except Exception:
         return cap
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed when the process exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 MEDIA_ROOT = "/tmp/spark_graft_media"

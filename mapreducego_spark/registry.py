@@ -45,6 +45,11 @@ from mapreducego_spark.streaming import pipelines as ST
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
+def _on(table: str, fn: Callable[[DataFrame], DataFrame]) -> QueryFn:
+    """The query that applies ``fn`` to fixture table ``table``."""
+    return lambda spark, sf_dir: fn(load_table(spark, sf_dir, table))
+
+
 def _wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.wordcount(spark, load_table(spark, sf_dir, "documents"))
 
@@ -53,94 +58,14 @@ def _mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MR.mr_wordcount(load_table(spark, sf_dir, "documents"), input_col="text")
 
 
-def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.text_stats(load_table(spark, sf_dir, "documents"))
-
-
-def _token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.token_count(load_table(spark, sf_dir, "documents"))
-
-
-def _lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.lang_id(load_table(spark, sf_dir, "documents"))
-
-
-def _quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.quality_score(load_table(spark, sf_dir, "documents"))
-
-
-def _fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.fingerprint(load_table(spark, sf_dir, "documents"))
-
-
-def _tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.tfidf_top_terms(load_table(spark, sf_dir, "documents"))
-
-
-def _corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.corpus_clean(load_table(spark, sf_dir, "documents"))
-
-
-def _sample_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.sample_deterministic(load_table(spark, sf_dir, "lineitem"))
-
-
-def _sample_strat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.sample_stratified(load_table(spark, sf_dir, "documents"))
-
-
-def _pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.pack_shards(load_table(spark, sf_dir, "documents"))
-
-
-def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.decontaminate(load_table(spark, sf_dir, "documents"))
-
-
-def _contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.contamination_report(load_table(spark, sf_dir, "documents"))
-
-
-def _heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.heavy_hitters(load_table(spark, sf_dir, "documents"))
-
-
-def _quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.quality_filter(load_table(spark, sf_dir, "documents"))
-
-
-def _doc_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.doc_grep(load_table(spark, sf_dir, "documents"))
-
-
-def _inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.inverted_index(load_table(spark, sf_dir, "documents"))
-
-
-def _chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.chunk_documents(load_table(spark, sf_dir, "documents"))
-
-
-def _pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.pii_scrub(load_table(spark, sf_dir, "documents"))
-
-
-def _dup_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.dup_ngram_profile(load_table(spark, sf_dir, "documents"))
-
-
-def _repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.repetition_profile(load_table(spark, sf_dir, "documents"))
-
-
 def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank on the part<->supplier bipartite graph from lineitem
     (node ids disjoint via 2p / 2s+1; undirected = both directions).
 
-    Uses the fixed-point integer variant (ranks in 1e-12 units) so a
-    fixed 5-round run is engine-exact and carries a full DuckDB
-    oracle — the float variant (operators/graph.pagerank) matches it
-    to ~1e-10 and stays pytest-floored against a serial reference."""
+    Ranks are fixed-point integers (1e-12 units), so a fixed 5-round
+    run is engine-exact and carries a full DuckDB oracle; divided by
+    1e12 they match a float serial reference to ~1e-10
+    (tests/test_graph.py)."""
     from mapreducego_spark.operators.graph import pagerank_exact
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -152,18 +77,6 @@ def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     return pagerank_exact(und, n_iter=5).orderBy("id")
-
-
-def _sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.sample_weighted(load_table(spark, sf_dir, "documents"))
-
-
-def _quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.quality_gate_per_lang(load_table(spark, sf_dir, "documents"))
-
-
-def _dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.dedup_spans(load_table(spark, sf_dir, "documents"))
 
 
 def _mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,11 +108,9 @@ QUERIES: dict[str, QueryFn] = {
     # one-shot oracle (promoted from pytest-only)
     "rollup_incremental": RU.rollup_incremental,
     # per-language exact-quantile gate (corpus-relative filtering)
-    "quality_gate_per_lang": _quality_gate,
+    "quality_gate_per_lang": _on("documents", T.quality_gate_per_lang),
     # CCNet-style unigram log-prob (perplexity) quality score
-    "perplexity_score": lambda spark, sf_dir: T.perplexity_score(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "perplexity_score": _on("documents", T.perplexity_score),
     # source/sink round trips: XML (Spark-native xml format) plus
     # JSON/CSV/ORC promoted from pytest-only to oracle rows
     "xml_round_trip": CAT.xml_round_trip,
@@ -263,7 +174,7 @@ QUERIES: dict[str, QueryFn] = {
     # salted skew join proven result-identical to the plain join
     "join_skew_salted": SK.join_skew_salted,
     # span-level exact dedup with reconstruction (C4/Dolma family)
-    "dedup_spans": _dedup_spans,
+    "dedup_spans": _on("documents", T.dedup_spans),
     # embedding-space benchmark decontamination (semantic sibling of
     # the n-gram decontaminate)
     "decontaminate_embedding": V.decontaminate_embedding,
@@ -282,7 +193,7 @@ QUERIES: dict[str, QueryFn] = {
     "dedup_incremental": D.dedup_incremental,
     "q6_forecast_revenue": R.q6_forecast_revenue,
     "q15_top_supplier": R.q15_top_supplier,
-    "repetition_profile": _repetition_profile,
+    "repetition_profile": _on("documents", T.repetition_profile),
     # pagerank + simhash_pairs carry full oracles as of r5 (integer
     # fixed-point / deterministic band+bit-string SQL twin)
     "pagerank": _pagerank,
@@ -323,16 +234,16 @@ QUERIES: dict[str, QueryFn] = {
     # iterative float state. The unjudgeable part is inherent to
     # trained-quantizer ANN, not an oracle gap to close.
     "hybrid_rerank_ann": V.hybrid_rerank_ann,
-    "contamination_report": _contamination_report,
-    "token_count": _token_count,
+    "contamination_report": _on("documents", T.contamination_report),
+    "token_count": _on("documents", T.token_count),
     "dedup_exact": D.dedup_exact,
     "vector_topk": V.vector_topk,
     "knn_label_vote": V.knn_label_vote,
-    "fingerprint": _fingerprint,
+    "fingerprint": _on("documents", T.fingerprint),
     "dedup_fingerprint": D.dedup_fingerprint,
-    "lang_id": _lang_id,
-    "text_stats": _text_stats,
-    "quality_score": _quality,
+    "lang_id": _on("documents", T.lang_id),
+    "text_stats": _on("documents", T.text_stats),
+    "quality_score": _on("documents", T.quality_score),
     "window_tumbling": TW.window_tumbling,
     "window_sliding": TW.window_sliding,
     "window_session": TW.window_session,
@@ -390,20 +301,20 @@ QUERIES: dict[str, QueryFn] = {
     "window_running": W.window_running,
     "window_range_frame": W.window_range_frame,
     "window_value_fns": W.window_value_fns,
-    "tfidf_top_terms": _tfidf,
-    "corpus_clean": _corpus_clean,
-    "sample_deterministic": _sample_det,
+    "tfidf_top_terms": _on("documents", T.tfidf_top_terms),
+    "corpus_clean": _on("documents", T.corpus_clean),
+    "sample_deterministic": _on("lineitem", T.sample_deterministic),
     "dedup_minhash": D.dedup_minhash,
     "dedup_clusters": D.dedup_clusters,
     "ngram_jaccard": D.ngram_jaccard_pairs,
     "simhash": D.simhash_docs,
     "dedup_embedding": V.dedup_embedding,
-    "sample_stratified": _sample_strat,
-    "pack_shards": _pack_shards,
-    "decontaminate": _decontaminate,
+    "sample_stratified": _on("documents", T.sample_stratified),
+    "pack_shards": _on("documents", T.pack_shards),
+    "decontaminate": _on("documents", T.decontaminate),
     "q3_shipping_priority": R.q3_shipping_priority,
     "q10_returned_items": R.q10_returned_items,
-    "heavy_hitters": _heavy_hitters,
+    "heavy_hitters": _on("documents", T.heavy_hitters),
     "multimodal_features": _mm_features,
     "multimodal_frames": _mm_frames,
     "agg_stats": R.agg_stats,
@@ -412,16 +323,16 @@ QUERIES: dict[str, QueryFn] = {
     "topk_per_group": W.topk_per_group,
     "funnel_conversion": TW.funnel_conversion,
     "join_range_binned": TW.join_range_binned,
-    "quality_filter": _quality_filter,
-    "pii_scrub": _pii_scrub,
-    "sample_weighted": _sample_weighted,
-    "doc_grep": _doc_grep,
-    "inverted_index": _inverted_index,
+    "quality_filter": _on("documents", T.quality_filter),
+    "pii_scrub": _on("documents", T.pii_scrub),
+    "sample_weighted": _on("documents", T.sample_weighted),
+    "doc_grep": _on("documents", T.doc_grep),
+    "inverted_index": _on("documents", T.inverted_index),
     "q4_order_priority": R.q4_order_priority,
     "q7_volume_shipping": R.q7_volume_shipping,
     "q14_promo_revenue": R.q14_promo_revenue,
     "q19_disjunctive": R.q19_disjunctive_revenue,
-    "chunk_documents": _chunk_documents,
+    "chunk_documents": _on("documents", T.chunk_documents),
     "split_no_leakage": T.split_no_leakage,
     "job_wordcount_files": MR.job_wordcount_files,
     "udaf_revenue_cents": MR.udaf_revenue_cents,
@@ -432,7 +343,7 @@ QUERIES: dict[str, QueryFn] = {
     "q13_custdist": R.q13_custdist,
     "q22_cold_customers": R.q22_cold_customers,
     "q21_waiting_supplier": R.q21_waiting_supplier,
-    "dup_ngram_profile": _dup_ngram_profile,
+    "dup_ngram_profile": _on("documents", T.dup_ngram_profile),
     "q8_market_share": R.q8_market_share,
     "q17_small_quantity": R.q17_small_quantity,
     # salted two-phase exact COUNT(DISTINCT) — the aggregation-side
@@ -447,9 +358,7 @@ QUERIES: dict[str, QueryFn] = {
     "fuzzy_match_blocked": FZ.fuzzy_match_customers,
     # sparse pairwise TF-IDF cosine via inverted-index join
     # (Elsayed et al.), integer milli-nat idf for engine exactness
-    "tfidf_cosine_pairs": lambda spark, sf_dir: T.tfidf_cosine_pairs(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "tfidf_cosine_pairs": _on("documents", T.tfidf_cosine_pairs),
     # streaming MERGE (foreachBatch LWW upsert) under an
     # at-least-once replay; versioned-dir commit protocol
     "stream_upsert_sink": ST.stream_upsert_sink,
@@ -474,9 +383,7 @@ QUERIES: dict[str, QueryFn] = {
     "fuzzy_match_snm": FZ.snm_match_customers,
     # the end-to-end corpus-prep composition (clean -> dedup ->
     # decontaminate -> pack), oracle-checked as ONE query
-    "prepare_corpus": lambda spark, sf_dir: T.prepare_corpus(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "prepare_corpus": _on("documents", T.prepare_corpus),
     # CDC round trip: apply(diff(old, new), old) == new
     "cdc_apply": CAT.cdc_apply_documents,
     # per-group OLS trend from five exact algebraic sums
@@ -494,7 +401,7 @@ QUERIES: dict[str, QueryFn] = {
     # rows-only — pytest floors it against the exact operator)
     "sketch_active_users": RU.sketch_active_users,
     # k-fold CV assignment, near-dup-cluster-coherent
-    "kfold_split": lambda spark, sf_dir: T.kfold_no_leakage(spark, sf_dir),
+    "kfold_split": T.kfold_no_leakage,
     # single-source BFS hop distances (4th graph kernel)
     "shortest_paths": G.shortest_paths_suppliers,
     # sweep-line peak concurrency per event type
@@ -504,16 +411,12 @@ QUERIES: dict[str, QueryFn] = {
     # rule-suite validation + quarantine counts (ingestion QA)
     "validate_quarantine": R.validate_quarantine,
     # integer-exact multinomial naive Bayes language classifier
-    "nb_classify": lambda spark, sf_dir: T.nb_classify(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "nb_classify": _on("documents", T.nb_classify),
     # reciprocal-rank fusion of two rankers (hybrid retrieval merge)
     "rrf_fusion": R.rrf_fusion,
     # count-min sketch with portable hashing: the oracle-checkable
     # sketch (every counter reproduced by DuckDB)
-    "cms_heavy_hitters": lambda spark, sf_dir: T.cms_heavy_hitters(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "cms_heavy_hitters": _on("documents", T.cms_heavy_hitters),
     # prefix-filtered (AllPairs/PPJoin) exact Jaccard join; shares
     # ngram_jaccard's oracle -> hash equality proves no lost pairs
     "jaccard_prefix_join": D.jaccard_prefix_docs,
@@ -541,9 +444,7 @@ QUERIES: dict[str, QueryFn] = {
     # (applyInPandas vs a recursive-CTE oracle)
     "running_balance": TW.running_balance_floor,
     # bigram-LM perplexity with stupid backoff (micro-nat exact)
-    "perplexity_bigram": lambda spark, sf_dir: T.perplexity_bigram(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "perplexity_bigram": _on("documents", T.perplexity_bigram),
     # join-key skew diagnostics (salt-factor planning report)
     "skew_report": R.skew_report,
     # quantile normalization onto the pooled distribution
@@ -757,9 +658,7 @@ QUERIES: dict[str, QueryFn] = {
     "bm25_topk": T.bm25_docs,
     # the full data-recipe composition: clean -> decontaminate ->
     # temperature-mix -> pack, oracle-checked as ONE query
-    "prepare_corpus_mixed": lambda spark, sf_dir: T.prepare_corpus_mixed(
-        load_table(spark, sf_dir, "documents")
-    ),
+    "prepare_corpus_mixed": _on("documents", T.prepare_corpus_mixed),
     # PERMISSIVE JSON ingest with corrupt-record rescue (deterministic
     # planted corruption, id recovered from the raw line)
     "json_rescue": CAT.json_rescue,

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mapreducego_spark.operators.util import (
     merge_small_splits,
+    scratch_dir,
     sort_once,
     spread_scan,
     staged_dir,
@@ -291,16 +292,6 @@ def upsert_parquet(
     ).write.mode("overwrite").parquet(out_dir)
 
 
-def _scratch_dir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
 def upsert_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: MERGE exercised end-to-end on real data. The
     documents fixture is written out as the base table, a
@@ -313,7 +304,7 @@ def upsert_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    work = _scratch_dir("upsert_docs_")
+    work = scratch_dir("upsert_docs_")
     base_dir, out_dir = f"{work}/base", f"{work}/out"
     docs.write.parquet(base_dir)
     corrected_text = F.concat(F.lit("corrected:"), F.col("lang"))
@@ -347,7 +338,7 @@ def upsert_documents_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    work = _scratch_dir("upsert_evo_")
+    work = scratch_dir("upsert_evo_")
     base_dir, out_dir = f"{work}/base", f"{work}/out"
     docs.write.parquet(base_dir)
     upd = docs.filter(F.col("doc_id") % 5 == 0).select(
@@ -396,7 +387,7 @@ def xml_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    work = _scratch_dir("xml_rt_")
+    work = scratch_dir("xml_rt_")
     write_xml(docs, f"{work}/docs_xml", row_tag="doc")
     back = read_xml(
         spark, f"{work}/docs_xml", row_tag="doc", schema=docs.schema
@@ -577,7 +568,7 @@ def avro_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id").cast("double") / F.lit(64.0)).alias("score"),
         F.array(F.col("doc_id") % 7, F.col("doc_id") % 11).alias("tags"),
     )
-    work = _scratch_dir("avro_rt_")
+    work = scratch_dir("avro_rt_")
     path = f"{work}/docs_avro"
     write_avro(docs, path)
     back = read_avro(spark, path, schema=docs.schema)
@@ -618,7 +609,7 @@ def avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("int").alias("n_chars"),
         "source",
     )
-    work = _scratch_dir("avro_evo_")
+    work = scratch_dir("avro_evo_")
     path = f"{work}/docs_v1"
     write_avro(docs_v1, path)
     reader_v2 = {
@@ -712,7 +703,7 @@ def avro_logical_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         elif f["name"] == "tag":
             fixed = {"type": "fixed", "name": "Tag8", "size": 8}
             f["type"] = ["null", fixed] if isinstance(f["type"], list) else fixed
-    work = _scratch_dir("avro_logical_")
+    work = scratch_dir("avro_logical_")
     path = f"{work}/events_logical"
     write_avro(ev, path, avsc=avsc)
     back = read_avro(spark, path, schema=ev.schema)
@@ -742,7 +733,7 @@ def _typed_docs_round_trip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFr
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    work = _scratch_dir(f"{fmt}_rt_")
+    work = scratch_dir(f"{fmt}_rt_")
     path = f"{work}/docs_{fmt}"
     docs.write.mode("overwrite").format(fmt).save(path)
     back = spark.read.schema(docs.schema).format(fmt).load(path)
@@ -784,7 +775,7 @@ def json_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang", "source"
     )
-    work = _scratch_dir("json_rescue_")
+    work = scratch_dir("json_rescue_")
     path = f"{work}/staged"
     # deterministic staging, fully distributed: serialize each row to
     # a JSON line with to_json, then corrupt every 13th id by
@@ -842,7 +833,7 @@ def compact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the rewrite is lossless, which is the property a
     compaction job must never trade away."""
     docs = load_table(spark, sf_dir, "documents")
-    work = _scratch_dir("compact_docs_")
+    work = scratch_dir("compact_docs_")
     src, dst = f"{work}/many", f"{work}/few"
     docs.repartition(48).write.parquet(src)
     n_src = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
@@ -967,6 +958,44 @@ def zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
+def classify_changes(
+    old: DataFrame, new: DataFrame, keys: list[str], cmp_cols: list[str]
+) -> DataFrame:
+    """The change classifier under every snapshot diff: one full outer
+    join on ``keys`` (null-safe), returning the keys, ``change_type``
+    (insert / update / delete) and the ``__old`` / ``__new`` structs
+    of ``cmp_cols`` (null on the absent side). Rows whose structs are
+    null-safe equal are dropped. A struct is never null on a present
+    side, even when every field in it is, so it doubles as the
+    presence flag."""
+    from pyspark.sql import functions as F
+
+    o = old.select(
+        *[F.col(k).alias(f"__k_{k}") for k in keys],
+        F.struct(*[F.col(c) for c in cmp_cols]).alias("__old"),
+    )
+    n = new.select(
+        *[F.col(k).alias(f"__k_{k}") for k in keys],
+        F.struct(*[F.col(c) for c in cmp_cols]).alias("__new"),
+    )
+    cond = [o[f"__k_{k}"].eqNullSafe(n[f"__k_{k}"]) for k in keys]
+    change = (
+        F.when(o["__old"].isNull(), F.lit("insert"))
+        .when(n["__new"].isNull(), F.lit("delete"))
+        .when(~o["__old"].eqNullSafe(n["__new"]), F.lit("update"))
+    )
+    return (
+        o.join(n, cond, "full_outer")
+        .select(
+            *[F.coalesce(o[f"__k_{k}"], n[f"__k_{k}"]).alias(k) for k in keys],
+            change.alias("change_type"),
+            "__old",
+            "__new",
+        )
+        .filter(F.col("change_type").isNotNull())
+    )
+
+
 def snapshot_diff_rows(
     old: DataFrame,
     new: DataFrame,
@@ -980,28 +1009,8 @@ def snapshot_diff_rows(
     from pyspark.sql import functions as F
 
     cmp_cols = compare_cols or [c for c in old.columns if c not in keys]
-    o = old.select(
-        *[F.col(k).alias(f"__k_{k}") for k in keys],
-        F.struct(*[F.col(c) for c in cmp_cols]).alias("__old"),
-    )
-    n = new.select(
-        *[F.col(k).alias(f"__k_{k}") for k in keys],
-        F.struct(*[F.col(c) for c in cmp_cols]).alias("__new"),
-    )
-    cond = [o[f"__k_{k}"].eqNullSafe(n[f"__k_{k}"]) for k in keys]
-    j = o.join(n, cond, "full_outer")
-    change = (
-        F.when(o["__old"].isNull(), F.lit("insert"))
-        .when(n["__new"].isNull(), F.lit("delete"))
-        .when(~o["__old"].eqNullSafe(n["__new"]), F.lit("update"))
-    )
-    out_keys = [
-        F.coalesce(o[f"__k_{k}"], n[f"__k_{k}"]).alias(k) for k in keys
-    ]
-    payload = [n["__new"][c].alias(c) for c in cmp_cols]
-    return (
-        j.select(*out_keys, change.alias("change_type"), *payload)
-        .filter(F.col("change_type").isNotNull())
+    return classify_changes(old, new, keys, cmp_cols).select(
+        *keys, "change_type", *[F.col("__new")[c].alias(c) for c in cmp_cols]
     )
 
 
@@ -1066,7 +1075,7 @@ def parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("n_chars").cast("long").alias("n_chars"),
     )
-    out = _scratch_dir("schema_merge_")
+    out = scratch_dir("schema_merge_")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
     ).parquet(os.path.join(out, "batch=0"))

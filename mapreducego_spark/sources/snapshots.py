@@ -94,6 +94,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreducego_spark.operators.util import scratch_dir
+
 _LOGDIR = "_LOG"
 _MANIFESTDIR = "_MANIFESTS"
 # every per-commit artifact name: kind prefix, sequence, unique token
@@ -709,15 +711,11 @@ def _stage_orders_versions(spark: SparkSession, sf_dir: str) -> str:
     v2, ROLLS BACK to v1 (seq 3), then MERGEs u3 (k % 5 == 0: +7
     cents, X3) -> v4 with parent 1. Every state is closed-form in
     the orders table for the DuckDB oracles."""
-    import atexit
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from mapreducego_spark.sources.catalog import load_table
 
-    workdir = tempfile.mkdtemp(prefix="snapshot_tt_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("snapshot_tt_")
     table = os.path.join(workdir, "orders_tt")
 
     base = load_table(spark, sf_dir, "orders").select(
@@ -762,14 +760,17 @@ def snapshot_changes(
     a downstream incremental consumer reads instead of re-scanning
     the table: one row per changed key with ``change_type`` in
     {insert, update, delete} plus the before/after payloads (null on
-    the absent side). Computed as a full outer join of the two as-of
-    reads on ``key``: at 100 TB both sides hash-partition by the key
-    and the join output is proportional to the CHANGES plus the
-    carried rows it filters, never collected. Refuses loudly when
-    either version is unknown or vacuumed (read_snapshot's checks)
-    and when from_version >= to_version — a reversed or empty range
-    is a consumer bug, not an empty feed."""
+    the absent side). Computed by catalog.classify_changes, one full
+    outer join of the two as-of reads on ``key``: at 100 TB both
+    sides hash-partition by the key and the join output is
+    proportional to the CHANGES plus the carried rows it filters,
+    never collected. Refuses loudly when either version is unknown or
+    vacuumed (read_snapshot's checks) and when from_version >=
+    to_version — a reversed or empty range is a consumer bug, not an
+    empty feed."""
     from pyspark.sql import functions as F
+
+    from mapreducego_spark.sources.catalog import classify_changes
 
     if from_version >= to_version:
         raise ValueError(
@@ -784,36 +785,11 @@ def snapshot_changes(
             "snapshot schemas differ between versions"
             f" ({old.columns} vs {new.columns})"
         )
-    # literal presence flags survive the outer join even when every
-    # payload column is legitimately NULL on a present side
-    o = old.select(
-        F.col(key),
-        *[F.col(c).alias(f"old_{c}") for c in payload],
-        F.lit(True).alias("_o"),
-    )
-    nw = new.select(
-        F.col(key),
-        *[F.col(c).alias(f"new_{c}") for c in payload],
-        F.lit(True).alias("_n"),
-    )
-    joined = (
-        o.join(nw, key, "full_outer")
-        .withColumn("_o", F.coalesce("_o", F.lit(False)))
-        .withColumn("_n", F.coalesce("_n", F.lit(False)))
-    )
-    # null-safe per-column difference: NOT (old <=> new)
-    diff = F.lit(False)
-    for c in payload:
-        diff = diff | ~F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
-    return (
-        joined.withColumn(
-            "change_type",
-            F.when(~F.col("_o"), F.lit("insert"))
-            .when(~F.col("_n"), F.lit("delete"))
-            .otherwise(F.lit("update")),
-        )
-        .filter((~F.col("_o")) | (~F.col("_n")) | diff)
-        .drop("_o", "_n")
+    return classify_changes(old, new, [key], payload).select(
+        key,
+        *[F.col("__old")[c].alias(f"old_{c}") for c in payload],
+        *[F.col("__new")[c].alias(f"new_{c}") for c in payload],
+        "change_type",
     )
 
 
@@ -881,15 +857,11 @@ def snapshot_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete-sequencing, or merge-on-read error diverges. The
     O(|delta|) commit-cost property itself is pinned by a
     file-listing pytest (tests/test_snapshots.py)."""
-    import atexit
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from mapreducego_spark.sources.catalog import load_table
 
-    workdir = tempfile.mkdtemp(prefix="snapshot_app_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("snapshot_app_")
     table = os.path.join(workdir, "orders_app")
 
     base = load_table(spark, sf_dir, "orders").select(
@@ -952,15 +924,11 @@ def snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_cents). The DuckDB oracle rebuilds the v2 state closed-form
     and applies the same filters: a prune that DROPS a matching file
     (or keeps a result-changing one) diverges."""
-    import atexit
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from mapreducego_spark.sources.catalog import load_table
 
-    workdir = tempfile.mkdtemp(prefix="snapshot_prune_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("snapshot_prune_")
     table = os.path.join(workdir, "orders_prune")
 
     base = (

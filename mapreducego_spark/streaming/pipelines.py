@@ -29,6 +29,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreducego_spark.operators.util import scratch_dir
+from mapreducego_spark.sources.snapshots import _repoint, current_version
+
 # Schema of the STAGED event chunks the file-stream source reads.
 # The fixture has shipped as TIMESTAMP(NANOS), TIMESTAMP(MICROS) and
 # could ship as raw int64 nanos; _normalized_events_table converts
@@ -178,16 +181,12 @@ def events_stream(
     chunk 0 copy 0, chunk 0 copy 1, chunk 1 copy 0, ...), replaying
     each event in k different micro-batches — the at-least-once
     delivery a dedup stage exists to absorb (stream_dedup_sink)."""
-    import atexit
     import math
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
     if stage_dir is None:
-        stage = tempfile.mkdtemp(prefix="events_stream_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+        stage = scratch_dir("events_stream_")
     else:
         stage = stage_dir
         os.makedirs(stage, exist_ok=True)
@@ -514,13 +513,9 @@ def _stream_sink_readback(spark, sf_dir, pipeline, name: str) -> DataFrame:
     quarter of the commit cost. A real deployment sizes this to
     state VOLUME (it is fixed at first checkpoint), not to the batch
     shuffle width."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
-    workdir = tempfile.mkdtemp(prefix=f"{name}_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir(f"{name}_")
     out = os.path.join(workdir, "out")
     ckpt = os.path.join(workdir, "ckpt")
     stage = os.path.join(workdir, "stage")
@@ -580,12 +575,7 @@ def stream_dedup_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark is late-filtered, and either way the sink holds one
     row per event_id. No flush sentinel needed: dedup is stateful
     but non-aggregating, so append emits rows immediately."""
-    import atexit
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_dedup_sink_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("stream_dedup_sink_")
     events = events_stream(
         spark, sf_dir, stage_dir=os.path.join(workdir, "stage"), copies=2
     )
@@ -765,14 +755,9 @@ def stream_enrich_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN. Append mode with no aggregation — rows flow straight
     through; the dimension is re-broadcast per micro-batch (8 of
     them here), exactly as a production enrichment stage would."""
-    import atexit
-    import shutil
-    import tempfile
-
     from mapreducego_spark.sources.catalog import load_table as _lt
 
-    workdir = tempfile.mkdtemp(prefix="stream_enrich_sink_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("stream_enrich_sink_")
     events = events_stream(spark, sf_dir, stage_dir=os.path.join(workdir, "stage"))
     run_to_parquet(
         stream_static_enrich(events, _lt(spark, sf_dir, "customer")),
@@ -796,12 +781,7 @@ def stream_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     match (no sentinel needed); the ts-sorted multi-batch replay
     means click state is always still within the watermark horizon
     when its purchases arrive."""
-    import atexit
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_join_sink_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("stream_join_sink_")
     events = events_stream(spark, sf_dir, stage_dir=os.path.join(workdir, "stage"))
     run_to_parquet(
         stream_stream_purchase_attribution(events),
@@ -871,11 +851,8 @@ def _latest_per_user(df: DataFrame) -> DataFrame:
 
 
 def _current_version_path(table_dir: str) -> str | None:
-    marker = os.path.join(table_dir, "_CURRENT")
-    if not os.path.exists(marker):
-        return None
-    with open(marker) as f:
-        return os.path.join(table_dir, f.read().strip())
+    v = current_version(table_dir)
+    return None if v is None else os.path.join(table_dir, f"v{v}")
 
 
 def stream_upsert_maintenance(
@@ -896,10 +873,12 @@ def stream_upsert_maintenance(
     Crash-safety is the versioned-directory + _CURRENT pointer
     mini-commit-log (what a table format's transaction log does):
     each batch writes v{batch_id} beside the live version, then
-    atomically repoints _CURRENT (os.replace). A crash mid-write
-    leaves _CURRENT on the old version; the checkpoint replays the
-    batch, which rewrites v{batch_id} and repoints. Readers never
-    see a partial table. Only the last two versions are retained.
+    atomically repoints _CURRENT (snapshots._repoint, an os.replace;
+    the table has no _LOG, so snapshots.current_version reads the
+    pointer alone). A crash mid-write leaves _CURRENT on the old
+    version; the checkpoint replays the batch, which rewrites
+    v{batch_id} and repoints. Readers never see a partial table.
+    Only the last two versions are retained.
 
     At 100 TB the per-batch rewrite is the knob: bucket the table by
     hash(user_id) and rewrite only buckets the batch touches
@@ -919,12 +898,8 @@ def stream_upsert_maintenance(
                 spark.read.parquet(cur).unionByName(latest)
             )
         vname = f"v{batch_id}"
-        vpath = os.path.join(table_dir, vname)
-        latest.write.mode("overwrite").parquet(vpath)
-        tmp = os.path.join(table_dir, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(vname)
-        os.replace(tmp, os.path.join(table_dir, "_CURRENT"))
+        latest.write.mode("overwrite").parquet(os.path.join(table_dir, vname))
+        _repoint(table_dir, batch_id)
         keep = {vname, os.path.basename(cur) if cur else vname}
         for d in os.listdir(table_dir):
             if d.startswith("v") and d not in keep:
@@ -945,12 +920,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     two micro-batches); the maintained table must still equal the
     batch answer — one row per user carrying the (ts, event_id)-max
     event — proving the LWW merge absorbs redelivery."""
-    import atexit
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_upsert_sink_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("stream_upsert_sink_")
     events = events_stream(
         spark, sf_dir, stage_dir=os.path.join(workdir, "stage"), copies=2
     )
@@ -1050,12 +1020,7 @@ def stream_left_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     second run consumes the heartbeat sentinel so the final
     watermark actually evicts (and emits) the last unmatched
     purchases — see _stage_watermark_heartbeat."""
-    import atexit
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_left_join_sink_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("stream_left_join_sink_")
     stage = os.path.join(workdir, "stage")
     out = os.path.join(workdir, "out")
     ckpt = os.path.join(workdir, "ckpt")

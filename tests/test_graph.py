@@ -73,28 +73,16 @@ def test_empty_pair_set_has_no_components(spark):
     assert _cc(spark, []) == set()
 
 
-def test_pagerank_matches_serial_reference(spark):
-    """Distributed PageRank == a serial dict implementation of the
-    same fixed-iteration recurrence, to float tolerance; rank mass
-    sums to 1."""
-    import math
-
-    from mapreducego_spark.operators.graph import pagerank
-
-    edges = [(1, 2), (2, 1), (2, 3), (3, 1), (4, 3), (5, 4), (6, 1)]
-    # node 7 is dangling-only reachable: add 1->7 (7 has no out-edges)
-    edges.append((1, 7))
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=5).collect()}
-
+def _serial_pagerank(edges, n_iter=5, damping=0.85):
+    """A serial dict implementation of the fixed-iteration float
+    recurrence: rank = (1-d)/N + d * (inflow + dangling_mass/N)."""
     nodes = sorted({n for e in edges for n in e})
     n = len(nodes)
     out = {}
     for s, d in set(edges):
         out.setdefault(s, []).append(d)
     ranks = {v: 1.0 / n for v in nodes}
-    damping = 0.85
-    for _ in range(5):
+    for _ in range(n_iter):
         dangling = sum(r for v, r in ranks.items() if v not in out)
         inflow = {v: 0.0 for v in nodes}
         for s, ds in out.items():
@@ -104,21 +92,38 @@ def test_pagerank_matches_serial_reference(spark):
             v: (1 - damping) / n + damping * (inflow[v] + dangling / n)
             for v in nodes
         }
+    return ranks
 
-    assert set(got) == set(nodes)
-    for v in nodes:
-        assert math.isclose(got[v], ranks[v], rel_tol=1e-9), v
-    assert math.isclose(sum(got.values()), 1.0, rel_tol=1e-9)
+
+def _pagerank_floats(df):
+    from mapreducego_spark.operators.graph import pagerank_exact
+
+    return {r.id: r.rank_pico / 1e12 for r in pagerank_exact(df, n_iter=5).collect()}
+
+
+def test_pagerank_matches_serial_reference(spark):
+    """The fixed-point PageRank, scaled back to floats, equals a
+    serial float implementation of the same recurrence within 1e-9;
+    rank mass sums to 1."""
+    edges = [(1, 2), (2, 1), (2, 3), (3, 1), (4, 3), (5, 4), (6, 1)]
+    # node 7 is dangling-only reachable: add 1->7 (7 has no out-edges)
+    edges.append((1, 7))
+    got = _pagerank_floats(spark.createDataFrame(edges, ["src", "dst"]))
+    want = _serial_pagerank(edges)
+
+    assert set(got) == set(want)
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-9
+    assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
 def test_pagerank_exact_matches_float_variant(spark):
-    """The fixed-point integer PageRank (oracle-checkable) must agree
-    with the float variant to within fixed-point truncation error:
-    each iteration drops <1 unit (1e-12) per integer division, so
-    after 5 rounds the two differ by well under 1e-9 per node."""
+    """On the sf0.001 part<->supplier graph the fixed-point PageRank
+    must agree with the float recurrence to within fixed-point
+    truncation error: each iteration drops <1 unit (1e-12) per
+    integer division, so after 5 rounds the two differ by well under
+    1e-9 per node."""
     from pyspark.sql import functions as F
 
-    from mapreducego_spark.operators.graph import pagerank, pagerank_exact
     from mapreducego_spark.sources.catalog import load_table
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
@@ -129,14 +134,14 @@ def test_pagerank_exact_matches_float_variant(spark):
     und = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    exact = {r.id: r.rank_pico for r in pagerank_exact(und, n_iter=5).collect()}
-    flt = {r.id: r.rank for r in pagerank(und, n_iter=5).collect()}
-    assert set(exact) == set(flt)
-    assert max(abs(exact[i] / 1e12 - flt[i]) for i in flt) < 1e-9
+    got = _pagerank_floats(und)
+    want = _serial_pagerank([(r.src, r.dst) for r in und.collect()])
+    assert set(got) == set(want)
+    assert max(abs(got[i] - want[i]) for i in want) < 1e-9
     # rank mass is conserved up to truncation: each round loses up to
     # ~1 unit per node (the div-100s) plus the per-edge share
     # remainders, so budget ~10 units/node/round at 1e-12 each
-    assert abs(sum(exact.values()) / 1e12 - 1.0) < len(exact) * 5 * 1e-11
+    assert abs(sum(got.values()) - 1.0) < len(got) * 5 * 1e-11
 
 
 def test_triangle_count_known_graph(spark):

@@ -1,6 +1,6 @@
 """Refusal contract under seeded byte mutations, for the PNG decoder,
-the JPEG decoders and header parsers, the TIFF and GIF decoders, the
-WARC and PDF parsers and the Avro container reader: every mutated
+the JPEG decoders and header parsers, the TIFF, GIF and BMP decoders,
+the WARC and PDF parsers and the Avro container reader: every mutated
 fixture either decodes or raises ValueError / NotImplementedError.
 
 A raw zlib.error, struct.error or MemoryError escaping the decoder
@@ -21,6 +21,7 @@ import pytest
 
 from mapreducego_spark.functions import jpegcodec as J
 from mapreducego_spark.functions import multimodal as M
+from mapreducego_spark.functions.bmpcodec import decode_bmp
 from mapreducego_spark.functions.gifcodec import decode_gif
 from mapreducego_spark.functions.tiffcodec import decode_tiff
 from mapreducego_spark.sources import avrocodec as A
@@ -180,6 +181,18 @@ def _avro_containers() -> list[bytes]:
     ]
 
 
+def _bmp_mutants(blob: bytes, rng: random.Random):
+    """The random mutants, plus the width, the height and both
+    re-declared as 2**20: a terabyte raster claimed by a few hundred
+    bytes of pixel data."""
+    yield from _mutants(blob, rng)
+    for fields in ((18,), (22,), (18, 22)):
+        b = bytearray(blob)
+        for at in fields:
+            b[at : at + 4] = struct.pack("<i", 1 << 20)
+        yield f"dims at {fields}", bytes(b)
+
+
 def _leaks(decode, blobs: list[bytes], rng: random.Random, mutants=_mutants):
     leaks, cases = [], 0
     for k, blob in enumerate(blobs):
@@ -211,6 +224,16 @@ def test_png_mutations_refuse_with_declared_errors(tmp_path):
 def test_tiff_gif_pdf_mutations_refuse_with_declared_errors(decode, blobs, mutants):
     _, leaks = _leaks(decode, blobs(), random.Random(SEED), mutants)
     assert not leaks, f"{len(leaks)} leaked: {leaks[:5]}"
+
+
+def test_bmp_mutations_refuse_with_declared_errors():
+    """RLE8, palette, truecolor, top-down and sparse-delta fixtures: a
+    header claiming more pixels than the payload can fill must refuse
+    before the raster is allocated, not leak a MemoryError."""
+    blobs = [M.encode_bmp_fixture(i) for i in range(N)]
+    cases, leaks = _leaks(decode_bmp, blobs, random.Random(SEED), _bmp_mutants)
+    assert cases == 10 * N
+    assert not leaks, f"{len(leaks)} of {cases} leaked: {leaks[:5]}"
 
 
 def test_warc_mutations_refuse_with_declared_errors():

@@ -28,6 +28,47 @@ def test_two_phase_rank_rejects_reserved_columns(spark):
         two_phase_global_rank(df2, ["id"])
 
 
+def test_two_phase_weight_is_a_global_running_sum(spark):
+    """With ``weight`` the helper returns the inclusive running sum of
+    the weights in key order, equal to a serial cumsum at 1, 3 and 7
+    input partitions. Coalescing is off so the range exchange keeps
+    its 8 partitions, and 4-row Arrow batches make each partition
+    carry its total across batches. Spark's range partitioner puts
+    every bound on a sampled key and plans no more partitions than it
+    sampled, so a non-empty deterministic input leaves no range
+    partition empty; the empty input is the case whose single range
+    partition is empty."""
+    from mapreducego_spark.operators.twophase import two_phase_global_rank
+
+    rows = [((i * 37) % 50, (i * 13) % 7) for i in range(50)]  # w = 0 too
+    run, want = 0, {}
+    for k, w in sorted(rows):
+        run += w
+        want[k] = run
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        for n_in in (1, 3, 7):
+            df = spark.createDataFrame(
+                spark.sparkContext.parallelize(rows, n_in), "k long, w long"
+            )
+            assert df.rdd.getNumPartitions() == n_in
+            got = two_phase_global_rank(df, ["k"], "cum", weight="w")
+            assert got.columns == ["k", "w", "cum"]
+            assert {r.k: r.cum for r in got.collect()} == want, n_in
+        empty = spark.createDataFrame([], "k long, w long")
+        assert two_phase_global_rank(empty, ["k"], "cum", weight="w").count() == 0
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
 def test_mix_sources_quota_path_is_window_free(spark):
     """r7 finding: the quota arithmetic used Window.partitionBy(
     lit(1)), which Catalyst folds to an UNPARTITIONED window (the
